@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Benchmark main — runs the headline queries on SPARK_GRAFT_SF_DIR,
+import graft.queries.{Gate, Gates}
+
+/** Benchmark main — runs the benched gates ([[graft.queries.Gates.benched]],
+  * the Bench and Baseline tiers) on SPARK_GRAFT_SF_DIR,
   * prints ONE compact JSON line (per-query min wall seconds) as the
   * LAST stdout line, and writes the full record — per-rep runs included
   * — to `bench_out.json` in the working directory.
@@ -31,93 +34,18 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Headline set: the KV lifecycle, every join flavor, the heavy
-    * aggregations, and the scale extensions. */
-  val headline: Seq[String] = Seq(
-    "q1_agg", "pack_concat", "unpack_cells", "salt_bucket",
-    "broadcast_join", "lookup_join", "diff_compare", "topk",
-    "date_format_q", "regex_extract",
-    "dedup_exact", "dedup_minhash", "dedup_ngram", "dedup_simhash",
-    "ann_topk", "ann_lsh", "text_quality", "text_fingerprint",
-    "multimodal_features", "window_topk_group", "approx_metrics",
-    "ann_ivf", "curation_pipeline", "events_window",
-    "text_embed_dedup", "multimodal_frames", "asof_join", "sessionize",
-    "corpus_stats", "chunk_tokens", "dedup_clusters", "corpus_sample",
-    "pack_examples", "corpus_mix",
-    "decontaminate", "dedup_incremental", "corpus_shuffle",
-    "training_pipeline", "embed_quantize", "text_repetition",
-    "decontaminate_bloom", "range_join", "vocab_topk", "ann_pq",
-    "dedup_incremental_bloom", "doc_keywords", "dedup_index_query",
-    "ann_index_query", "pipeline_metrics", "ann_ivfpq",
-    "variant_extract", "stratified_take", "profile_table",
-    "dedup_containment", "text_line_dedup", "text_paragraph_dedup", "text_dup_spans",
-    "text_dup_remove", "text_self_dedup",
-    "multimodal_containers", "text_lm_score", "bpe_pairs", "semdedup",
-    "bpe_encode", "sessionize_chunked", "asof_join_chunked",
-    "corpus_budget_select", "corpus_budget_by_source",
-    "multimodal_image_decode", "corpus_budget_incremental",
-    "multimodal_resize", "multimodal_audio_features",
-    "image_dedup", "image_dedup_recall", "gif_dedup", "gif_dedup_recall",
-    "corpus_budget_incremental_by_source", "curriculum_bins",
-    "curriculum_bins_by_source", "exact_quantiles",
-    "exact_quantiles_by_flag", "corpus_top_m",
-    "exact_quantiles_cont", "exact_quantiles_cont_by_flag",
-    "exact_quantiles_incremental", "exact_quantiles_incremental_by_flag",
-    "profile_drift", "multimodal_gif_frames", "corpus_top_m_by_source",
-    "weighted_quantiles", "weighted_quantiles_by_source",
-    "curriculum_bins_by_cost", "curriculum_bins_by_cost_by_source",
-    "weighted_quantiles_incremental", "multimodal_av_containers",
-    "corpus_mix_temperature", "split_leakage_safe",
-    "corpus_mix_temperature_epochs", "corpus_mix_temperature_incremental",
-    "corpus_mix_temperature_epochs_incremental",
-    "warc_parse", "html_extract", "url_normalize", "web_pipeline",
-    "cluster_assign", "html_main_text", "domain_top", "crawl_pipeline",
-    "html_meta", "jsonl_roundtrip", "model_score", "gopher_stats",
-    "robots_filter", "text_sentences", "host_rank", "link_graph_rank",
-    "warc_revisit", "model_score_tokens", "model_score_trained",
-    "clean_ship_roundtrip", "domain_top_trained",
-    "html_links", "url_dedup",
-    "url_dedup_incremental", "redirect_resolve", "redirect_dedup",
-    "sitemap_parse", "anchor_targets", "frontier_pipeline",
-    "frontier_schedule",
-    "robots_meta", "dedup_keep_best", "warc_quarantine", "crawl_budget",
-    "anchor_texts",
-    // round 18: media/audio rolling dedup, redirect-aware frontier,
-    // lastmod recrawl tiers, and the end-to-end corpus capstone (its
-    // JSONL ship stage is part of the measured pipeline — unlike the
-    // pure round-trip gates wet_roundtrip/jsonl_export, which stay
-    // correctness loops)
-    "audio_dedup", "audio_dedup_recall", "image_dedup_incremental",
-    "frontier_redirect", "recrawl_schedule", "corpus_build_pipeline",
-    "warc_cdx_fetch", "warc_cdx_lookup", "audio_dedup_incremental",
-    "corpus_build_incremental", "warc_revisit_fetch",
-    "warc_cdx_incremental", "gif_dedup_incremental", "warc_cdx_reextract",
-    "recrawl_archive",
-    // round 19: rebuild-from-archive capstone, BPE training replay,
-    // cross-codec audio recall
-    "corpus_rebuild_archive", "bpe_train", "audio_dedup_crosscodec",
-    "bpe_encode_persisted", "image_phash_dedup", "gif_phash_dedup",
-    "image_phash_incremental", "corpus_datasheet",
-    // round 19 (cont.): real AVI video decode + rolling video dedup,
-    // IMA ADPCM cross-codec audio
-    "video_dedup", "video_dedup_incremental", "multimodal_video_frames",
-    "audio_dedup_adpcm", "video_scenes", "audio_segments",
-    "media_curation_pipeline", "media_curation_incremental",
-    // round 20: MJPEG-in-AVI (second real video codec, cross-codec dedup)
-    "video_dedup_crosscodec")
-
-  /** The 19-query BASELINE.md subset — the driver's baseline
-    * comparison. Re-emitted as its own stdout lines immediately before
-    * the totals line, so the driver's 2000-char log TAIL alone carries
-    * every baseline timing (r14 ask #4: parts 1-4 of the positional
-    * chunk lines fell off the tail and the subset survived only in
-    * bench_out.json). */
-  val baselineSubset: Seq[String] = Seq(
-    "q1_agg", "pack_concat", "unpack_cells", "salt_bucket",
-    "broadcast_join", "lookup_join", "diff_compare", "topk",
-    "date_format_q", "regex_extract", "dedup_exact", "dedup_minhash",
-    "dedup_ngram", "dedup_simhash", "ann_topk", "ann_lsh",
-    "text_quality", "text_fingerprint", "multimodal_features")
+  /** `SPARK_GRAFT_CONF="k=v;k=v"`: extra session confs for A/B runs
+    * (e.g. `spark.graft.spread.partitionBytesFloor=1` for the low-core
+    * scaling run), applied over Bench's defaults. Blank tokens are
+    * skipped; a token without `=` fails, naming the token. */
+  def parseConf(spec: String): Seq[(String, String)] =
+    spec.split(";").map(_.trim).filter(_.nonEmpty).toSeq.map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF token '$kv' is not of the form key=value")
+      }
+    }
 
   /** Fixed single-threaded CPU probe (~50-100 ms on an idle core):
     * a deterministic 33M-step mix loop, no allocation, no I/O. Its
@@ -142,62 +70,52 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    // parsed and checked before any Spark work, like the selection below
+    val conf = sys.env.get("SPARK_GRAFT_CONF").map(parseConf).getOrElse(Nil)
+    // iteration aid (mirrors SPARK_GRAFT_VERIFY_ONLY): bench a subset.
+    // Read up front so the warmup and index builds honor it too — a
+    // developer timing one cheap query must not pay 4 index builds
+    val onlyVar = "SPARK_GRAFT_BENCH_ONLY"
+    val selected = Gates.selectFromEnv(Gates.benched, onlyVar)
+    val spark = conf.foldLeft(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def run(name: String): Unit = {
+    def run(g: Gate, dir: String = sfDir): Unit = {
       // stderr breadcrumb so any Spark WARN in the log tail attributes
       // to the query that emitted it (the JSON line stays stdout-only)
-      System.err.println(s"[bench] running $name")
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
+      System.err.println(s"[bench] running ${g.name}")
+      g.build(spark, dir).write.format("noop").mode("overwrite").save()
     }
 
-    def timed(name: String): Double = {
+    def timed(g: Gate): Double = {
       val t0 = System.nanoTime()
-      try { run(name); (System.nanoTime() - t0) / 1e9 } catch {
+      try { run(g); (System.nanoTime() - t0) / 1e9 } catch {
         case e: Throwable =>
-          System.err.println(s"[bench] $name failed: $e"); -1.0
+          System.err.println(s"[bench] ${g.name} failed: $e"); -1.0
       }
     }
 
-    // iteration aid (mirrors SPARK_GRAFT_VERIFY_ONLY): bench a subset.
-    // Read up front so the warmup and index builds honor it too — a
-    // developer timing one cheap query must not pay 4 index builds
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    def selected(n: String): Boolean = only.forall(_.contains(n))
-
-    // warmup: JVM/codegen/parquet-footer caches (non-fatal on failure)
-    if (selected("q1_agg"))
-      try run("q1_agg") catch {
-        case e: Throwable => System.err.println(s"[bench] warmup failed: $e")
-      }
+    // warmup: JVM/codegen/parquet-footer caches (non-fatal on failure),
+    // on the first selected gate (q1_agg in a full run)
+    try run(selected.head) catch {
+      case e: Throwable => System.err.println(s"[bench] warmup failed: $e")
+    }
     // pre-pay the memoized one-time builds so the timed runs below
     // measure the steady-state query; the first (build-inclusive)
     // invocation is reported separately as build_sec. Two families:
     // the index/codebook gates, and the persisted-state lifecycle
-    // gates whose write+fold is memoized per JVM+dir (ExtensionQueries
+    // gates whose write+fold is memoized per JVM+dir (GateFixtures
     // state caches) — reps then time the READ path, the part that runs
-    // at mix/selection time at corpus scale (r14 ask #5: the bundled
-    // lifecycle made profile_drift read as a 4.5 s operator when the
-    // scale-relevant read is a bounded-histogram lookup).
-    val indexBacked = Seq(
-      "dedup_index_query", "ann_index_query", "ann_ivfpq", "ann_pq",
-      "exact_quantiles_incremental", "exact_quantiles_incremental_by_flag",
-      "weighted_quantiles_incremental", "profile_drift",
-      "corpus_budget_incremental", "corpus_budget_incremental_by_source",
-      "corpus_mix_temperature_incremental",
-      "corpus_mix_temperature_epochs_incremental",
-      "image_dedup_incremental", "frontier_redirect",
-      "audio_dedup_incremental", "gif_dedup_incremental")
-      .filter(selected)
+    // at mix/selection time at corpus scale (the bundled lifecycle made
+    // profile_drift read as a 4.5 s operator when the scale-relevant
+    // read is a bounded-histogram lookup).
+    val indexBacked = selected.filter(_.memoized)
     // build_sec is a SINGLE invocation (no min-of-3 to shed warmup), so
     // first pay the janino/codegen compile of these plans against the
     // tiny sibling dataset — the generated code is data-independent, so
@@ -217,11 +135,10 @@ object Bench {
       .filter(wd => new java.io.File(wd).getCanonicalFile !=
         new java.io.File(sfDir).getCanonicalFile)
       .foreach { wd =>
-        indexBacked.filter(SparkEntry.queries.contains).foreach { n =>
-          try SparkEntry.queries(n)(spark, wd)
-            .write.format("noop").mode("overwrite").save()
+        indexBacked.foreach { g =>
+          try run(g, wd)
           catch { case e: Throwable =>
-            System.err.println(s"[bench] build warmup $n failed: $e") }
+            System.err.println(s"[bench] build warmup ${g.name} failed: $e") }
         }
       }
     // calibration probes bracket the run and recur every ~30 queries:
@@ -230,26 +147,20 @@ object Bench {
     val calib = scala.collection.mutable.ArrayBuffer[Double]()
     calib += calibProbe()
 
-    val buildSec = indexBacked.filter(SparkEntry.queries.contains)
-      .map(n => n -> timed(n))
+    val buildSec = indexBacked.map(g => g.name -> timed(g))
     calib += calibProbe()
-
-    // a stale headline name must be loud, not silently dropped
-    headline.filterNot(SparkEntry.queries.contains).foreach(n =>
-      System.err.println(s"[bench] headline query '$n' not in SparkEntry.queries"))
 
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // a failed query reports -1, never a bogus partial wall time; a
     // failure short-circuits the remaining reps (failures persist)
-    val results = headline.filter(SparkEntry.queries.contains)
-      .filter(selected).zipWithIndex.map { case (name, qi) =>
+    val results = selected.zipWithIndex.map { case (g, qi) =>
       if (qi % 30 == 29) calib += calibProbe()
-      val runs = Iterator.continually(timed(name))
+      val runs = Iterator.continually(timed(g))
         .take(reps).takeWhile(_ >= 0).toSeq match {
         case ok if ok.size == reps => ok
         case ok => ok :+ -1.0 // a rep failed: record it, stop repeating
       }
-      name -> runs
+      g.name -> runs
     }
     calib += calibProbe()
     // Locale.ROOT: the default-locale f-interpolator writes a comma
@@ -288,7 +199,7 @@ object Bench {
     // window must keep them even when the positional parts above
     // scroll off
     val minsMap = mins.toMap
-    val baselineLines = baselineSubset.filter(minsMap.contains)
+    val baselineLines = Gates.baseline.map(_.name).filter(minsMap.contains)
       .grouped(10).zipWithIndex.map { case (chunk, i) =>
         val part = chunk.map(k => jstr(k) + ":" + num(minsMap(k)))
           .mkString("{", ",", "}")
@@ -300,7 +211,7 @@ object Bench {
     val full = s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":$qs,"runs":$allRuns,"build_sec":$builds,"reps":$reps,"calib_sec":$calibMin,"calib":$calibList,"sf":${jstr(sfDir)}}"""
     // a BENCH_ONLY subset run must not clobber the round's full record
     val outFile =
-      if (only.isEmpty) "bench_out.json" else "bench_out_subset.json"
+      if (sys.env.contains(onlyVar)) "bench_out_subset.json" else "bench_out.json"
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (full + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // stop FIRST, print LAST: anything Spark logs during shutdown (and

@@ -2,25 +2,23 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.queries.Gates
+
 /** Plan-review tool: prints the formatted physical plan of the named
-  * queries (or a default set) against a scale dir. Used to audit filter/
-  * projection pushdown, join strategies, and WholeStageCodegen coverage
-  * after every operator lands — `.explain` is part of the definition of
-  * done here. */
+  * gates (default: the Baseline tier) against a scale dir. Used to
+  * audit filter/projection pushdown, join strategies, and
+  * WholeStageCodegen coverage after every operator lands — `.explain`
+  * is part of the definition of done here. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
-    val names = if (args.length > 1) args.drop(1).toSeq
-      else Seq("prefix_scan", "filter_eq", "project_alias", "broadcast_join",
-        "lookup_join", "q1_agg", "pack_concat", "dedup_simhash",
-        // NOTE: dedup_index_query/ann_index_query are omitted — their
-        // plans require building the index tables first (write jobs),
-        // too heavy for a default plan listing; name them explicitly
-        "decontaminate", "training_pipeline", "embed_quantize",
-        "decontaminate_bloom", "range_join", "vocab_topk",
-        "ann_pq", "doc_keywords", "sessionize_chunked",
-        "asof_join_chunked", "corpus_budget_select",
-        "corpus_budget_by_source")
+    val (flags, named) = args.drop(1).toSeq.partition(_.startsWith("-"))
+    require(flags.forall(Set("-exec", "-noaqe", "-ckpt")),
+      s"unknown flag in $flags")
+    // resolved before the session starts, so an unknown name fails
+    // first; no names → the Baseline tier (the BASELINE.md gates)
+    val gates = if (named.isEmpty) Gates.baseline
+      else Gates.select(Gates.all, named, "Explain arguments")
     // "-noaqe": plan with AQE disabled — separates a static-planner
     // ReuseExchange miss (plans don't canonicalize equal) from an AQE
     // stage-cache miss (they do, but stage reuse didn't fire)
@@ -36,18 +34,16 @@ object Explain {
     // "-exec" as a query name: also RUN each query and print the final
     // adaptive plan — AQE stage reuse (e.g. deduplicated identical
     // shuffles) only shows post-execution
-    val (flags, qs) = names.partition(_.startsWith("-"))
-    require(flags.forall(Set("-exec", "-noaqe", "-ckpt")),
-      s"unknown flag in $flags")
     val exec = flags.contains("-exec")
     // "-ckpt": also print the PRE-checkpoint plan of every mid-query
     // localCheckpoint (graft.core.PlanTrace) — a checkpoint truncates
     // the visible plan, so the main dump alone under-counts exchanges
     if (flags.contains("-ckpt"))
       sys.props("graft.explain.checkpoints") = "1"
-    for (n <- qs) {
+    for (g <- gates) {
+      val n = g.name
       println(s"\n========== $n ==========")
-      val df = SparkEntry.queries(n)(spark, sfDir)
+      val df = g.build(spark, sfDir)
       df.explain("formatted")
       if (exec) {
         // collect() drives THIS QueryExecution so the AdaptiveSparkPlan

@@ -2,14 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.queries.{ExtensionQueries, IngestQueries, ParityQueries, ScalarQueries}
+import graft.queries.{Gates, ParityGates}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract — see SURVEY.md §7.
   *
-  * `queries` aggregates the per-operator registries (one entry per
-  * implemented operator of SURVEY.md §2 plus the scale extensions);
-  * `oracleSql` carries the DuckDB-equivalent SQL for every
-  * SQL-expressible entry.
+  * Every map here is a view of the one gate list ([[graft.queries.Gates]]),
+  * where each gate is declared once, with its Spark plan, its DuckDB
+  * oracle SQL and its tier, in its family module under `graft.queries`.
   */
 object SparkEntry {
 
@@ -17,24 +16,23 @@ object SparkEntry {
     * long rows → pack into salted cells → unpack → long rows again
     * (SURVEY.md §7.2). Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    ParityQueries.queries("unpack_cells")(spark, "/root/testdata/sf0.001")
+    ParityGates.unpackCells.build(spark, "/root/testdata/sf0.001")
 
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ParityQueries.queries ++ ScalarQueries.queries ++
-      ExtensionQueries.queries ++ IngestQueries.queries
+    Gates.checked.map(g => g.name -> g.build).toMap
 
   def oracleSql: Map[String, String] =
-    ParityQueries.oracleSql ++ ScalarQueries.oracleSql ++
-      ExtensionQueries.oracleSql ++ IngestQueries.oracleSql
+    Gates.checked.map(g => g.name -> g.oracleSql).toMap
 
   /** Report-only environment probes: constant-input queries whose
     * DuckDB rendering is KNOWN to diverge on some driver envs
     * (HUGEINT/DECIMAL). Verify evaluates them into _env.json and dumps
     * the DuckDB side as _probe_sql.json — they are deliberately NOT in
     * `queries`/`oracleSql`, so they never count in the pass/fail
-    * roll-up (VERDICT r14 ask #1). */
+    * roll-up. */
   def probes: Map[String, (SparkSession, String) => DataFrame] =
-    ExtensionQueries.probes
+    Gates.probes.map(g => g.name -> g.build).toMap
 
-  def probeSql: Map[String, String] = ExtensionQueries.probeSql
+  def probeSql: Map[String, String] =
+    Gates.probes.map(g => g.name -> g.oracleSql).toMap
 }

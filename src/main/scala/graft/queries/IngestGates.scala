@@ -1,10 +1,11 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{KvStore, MucrReader, MuprReader, TriggerMeta}
 import graft.ops.KvOps
+
+import Tier._
 
 /** Driver-gate coverage for the ingest readers (SURVEY.md §2 S1/S2/T1 and
   * the §7.2 end-to-end slice) over the checked-in fixtures under
@@ -16,9 +17,10 @@ import graft.ops.KvOps
   * shape with a visible delimiter while the NUL byte-parity path stays
   * covered by RoundTripSpec/HostileDataSpec (scalatest).
   */
-object IngestQueries {
+object IngestGates {
 
   private val FixtureDir = graft.Fixtures.dir
+
   private val Sep = "|"
 
   /** One packed store per (gate, data dir) per JVM: for the SCAN-side
@@ -28,6 +30,7 @@ object IngestQueries {
     * memoized or not — registers with the shared gate cleanup hook, so
     * a session leaves no graft_gate_* residue on disk. */
   private val storeCache = new Memo[String, String]
+
   private def cachedStore(key: String, prefix: String)(build: String => Unit): String =
     storeCache(key) {
       val path = freshStore(prefix)
@@ -37,134 +40,9 @@ object IngestQueries {
 
   private def freshStore(prefix: String): String = {
     val tmp = java.nio.file.Files.createTempDirectory(prefix)
-    ExtensionQueries.IndexCache.cleanupAtExit(tmp)
+    IndexCache.cleanupAtExit(tmp)
     tmp.toString + "/store"
   }
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-
-    // §7.2 slice (Utils.scala:154-236 → 377-402): explicit-schema CSV
-    // scan → trigger-metadata broadcast join → rowKey/value assembly →
-    // pack → salted KV parquet write → prefix scan → unpack. The result
-    // must equal the source projection — asserted by the oracle, which
-    // computes the same rows directly from the fixture CSVs.
-    "mupr_roundtrip" -> ((s, _) => {
-      val mupr = MuprReader.readClean(s, s"$FixtureDir/mupr.dat", sep = Sep)
-      val meta = TriggerMeta.read(s, s"$FixtureDir/trigger.csv")
-      val enriched = TriggerMeta.enrich(mupr, meta, lit("mupr.dat"))
-      val keyCols = Seq(col("Lot"), col("Lato_Start_WW"), col("Lots_seq_key"),
-        col("Unit_Testing_Seq_Key"))
-      val valueCols = Seq(col("Substructure_ID"), col("Sub_Session_Seq_Num"),
-        col("Test_Result_Order_Num"), col("Test_Result_Array_Seq_Num"),
-        col("Test_ID"), col("Measurement_Value"),
-        col("Active_Inactive_Core_Vector"), col("Pass_Fail_Core_Vector"),
-        col("Mask_Vector"))
-      val kv = KvStore.pack(enriched, keyCols, col("Test_Name"), valueCols,
-        delim = Sep)
-      val store = cachedStore("mupr_roundtrip", "graft_gate_kv")(
-        KvStore.write(kv, _))
-      // selective prefix: units starting with '1' in lot LOTA
-      val scanned = KvOps.prefixScan(KvStore.read(s, store),
-        "rowKey", "LOTA|202032|2|1")
-      KvStore.unpack(scanned, delim = Sep)
-        .select(col("rowKey"), col("columnName"), col("packedValue"))
-        .orderBy(col("rowKey"), col("columnName"), col("packedValue"))
-    }),
-
-    // S5/S6 through the DSv2 connector boundary: the SAME pack → write →
-    // prefix-scan → unpack lifecycle, but the read goes through
-    // graft.sources.KvSource (SupportsPushDownFilters) instead of the
-    // generic parquet source — proving the store is swappable for a live
-    // KV backend without changing query results.
-    "kv_dsv2_scan" -> ((s, dir) => {
-      val li = graft.Tables(s, dir, "lineitem")
-      val kv = KvStore.pack(li,
-        keyParts = Seq(col("l_orderkey")),
-        qualifier = col("l_returnflag"),
-        valueParts = Seq(col("l_linenumber"),
-          col("l_quantity").cast("decimal(12,2)")),
-        delim = Sep)
-      val store = cachedStore(s"kv_dsv2_scan|$dir", "graft_gate_dsv2")(
-        KvStore.write(kv, _))
-      val back = s.read.format("graft.sources.KvSource").load(store)
-      KvStore.unpack(KvOps.prefixScan(back, "rowKey", "10"), delim = Sep)
-        .select(col("rowKey"), col("columnName"), col("packedValue"))
-        .orderBy(col("rowKey"), col("columnName"), col("packedValue"))
-    }),
-
-    // K1 through the DSv2 WRITE boundary: same lifecycle as kv_dsv2_scan
-    // (same oracle) but the store is written by
-    // `df.write.format("graft.sources.KvSource")` — the connector's
-    // SupportsWrite path, whose RequiresDistributionAndOrdering must
-    // reproduce the KvStore.write layout (salt dirs, rowKey-sorted
-    // files) for the read-side pruning to keep working.
-    "kv_dsv2_write" -> ((s, dir) => {
-      val li = graft.Tables(s, dir, "lineitem")
-      val kv = KvStore.pack(li,
-        keyParts = Seq(col("l_orderkey")),
-        qualifier = col("l_returnflag"),
-        valueParts = Seq(col("l_linenumber"),
-          col("l_quantity").cast("decimal(12,2)")),
-        delim = Sep)
-      // the WRITE is this gate's operator — rebuilt per invocation on
-      // purpose; only the dir registration keeps it from leaking
-      val store = freshStore("graft_gate_dsv2w")
-      kv.write.format("graft.sources.KvSource").mode("overwrite").save(store)
-      val back = s.read.format("graft.sources.KvSource").load(store)
-      KvStore.unpack(KvOps.prefixScan(back, "rowKey", "10"), delim = Sep)
-        .select(col("rowKey"), col("columnName"), col("packedValue"))
-        .orderBy(col("rowKey"), col("columnName"), col("packedValue"))
-    }),
-
-    // the <NB> escape hatch END-TO-END (pack escape → salted store
-    // write → read → unpack unescape): the values carry the exact
-    // corruption classes the reference left unhandled — a data-borne
-    // FIELD delimiter, a data-borne ROW separator, and the literal
-    // escape token itself. The oracle recomputes the unescaped fields
-    // straight from the source columns, so one mis-ordered replace in
-    // either codec direction (or a split that sees a data delimiter as
-    // structure) breaks the gate. Raw NUL bytes stay in scalatest
-    // (RoundTripSpec/HostileDataSpec) per the note above — DuckDB
-    // varchars cannot carry them; with '|' as the structural delimiter
-    // here, the data-borne '|' is the live collision.
-    "pack_escaped_roundtrip" -> ((s, dir) => {
-      val hostile = graft.Tables(s, dir, "nation")
-        .select(col("n_nationkey"),
-          concat(col("n_name"), lit("|mid|"), col("n_name")).as("v1"),
-          concat(lit("<NB>"), col("n_name"), lit("\nrow")).as("v2"),
-          concat(lit("a|b<NB>c\n"), col("n_name")).as("v3"))
-      val kv = KvStore.pack(hostile,
-        keyParts = Seq(col("n_nationkey")),
-        qualifier = lit("q"),
-        valueParts = Seq(col("v1"), col("v2"), col("v3")),
-        escapeValues = true, delim = Sep)
-      val store = cachedStore(s"pack_escaped_roundtrip|$dir",
-        "graft_gate_esc")(KvStore.write(kv, _))
-      KvStore.unpack(KvStore.read(s, store),
-          unescapeValues = true, delim = Sep)
-        .select(col("rowKey"),
-          element_at(col("fields"), 1).as("f1"),
-          element_at(col("fields"), 2).as("f2"),
-          element_at(col("fields"), 3).as("f3"))
-        .orderBy(col("rowKey"))
-    }),
-
-    // T1 (Utils.scala:504-515): variable-length repeating-group parse +
-    // the MUCR qualifier flg++hex(len(id))++id (Utils.scala:546-547; the
-    // reference's nonexistent-Test_Name bug at :555 fixed per SURVEY §3.2)
-    "mucr_parse" -> ((s, _) => {
-      MucrReader.read(s, s"$FixtureDir/mucr.dat", sep = Sep)
-        .withColumn("qualifier", MucrReader.qualifierCol)
-        .select(col("Unit_Testing_Seq_Key"), col("Sub_Session_Seq_Num"),
-          col("Test_Program_Name"), col("unit_counter_pass_fail_flg"),
-          col("Substructure_ID"), col("number_of_counters"),
-          col("Unit_Counter_ID"), col("Repeating_Counter_Occurrences"),
-          col("Unit_Counter_Seq_Num"), col("Unit_Counter_ID_hex_len"),
-          col("qualifier"))
-        .orderBy(col("Unit_Testing_Seq_Key"),
-          col("unit_counter_pass_fail_flg"), col("Unit_Counter_Seq_Num"))
-    }),
-  )
 
   /** The pack → store → prefix-scan → unpack lifecycle recomputed
     * straight from the source table — shared by the DSv2 scan and write
@@ -182,8 +60,35 @@ object IngestQueries {
       |WHERE rowKey LIKE '10%'
       |ORDER BY rowKey, columnName, packedValue""".stripMargin
 
-  val oracleSql: Map[String, String] = Map(
-    "mupr_roundtrip" ->
+  val gates: Seq[Gate] = Seq(
+
+    // §7.2 slice (Utils.scala:154-236 → 377-402): explicit-schema CSV
+    // scan → trigger-metadata broadcast join → rowKey/value assembly →
+    // pack → salted KV parquet write → prefix scan → unpack. The result
+    // must equal the source projection — asserted by the oracle, which
+    // computes the same rows directly from the fixture CSVs.
+    Gate("mupr_roundtrip", Oracle, (s, _) => {
+      val mupr = MuprReader.readClean(s, s"$FixtureDir/mupr.dat", sep = Sep)
+      val meta = TriggerMeta.read(s, s"$FixtureDir/trigger.csv")
+      val enriched = TriggerMeta.enrich(mupr, meta, lit("mupr.dat"))
+      val keyCols = Seq(col("Lot"), col("Lato_Start_WW"), col("Lots_seq_key"),
+        col("Unit_Testing_Seq_Key"))
+      val valueCols = Seq(col("Substructure_ID"), col("Sub_Session_Seq_Num"),
+        col("Test_Result_Order_Num"), col("Test_Result_Array_Seq_Num"),
+        col("Test_ID"), col("Measurement_Value"),
+        col("Active_Inactive_Core_Vector"), col("Pass_Fail_Core_Vector"),
+        col("Mask_Vector"))
+      val kv = KvStore.pack(enriched, keyCols, col("Test_Name"), valueCols,
+        delim = Sep)
+      val store = cachedStore("mupr", "graft_gate_kv")(
+        KvStore.write(kv, _))
+      // selective prefix: units starting with '1' in lot LOTA
+      val scanned = KvOps.prefixScan(KvStore.read(s, store),
+        "rowKey", "LOTA|202032|2|1")
+      KvStore.unpack(scanned, delim = Sep)
+        .select(col("rowKey"), col("columnName"), col("packedValue"))
+        .orderBy(col("rowKey"), col("columnName"), col("packedValue"))
+    },
       s"""WITH m AS (
          |  SELECT * FROM read_csv('$FixtureDir/mupr.dat', delim='|', header=false,
          |    columns={'Unit_Testing_Seq_Key':'INTEGER','Substructure_ID':'VARCHAR',
@@ -206,26 +111,115 @@ object IngestQueries {
          |FROM e
          |WHERE starts_with(concat_ws('|', Lot, Lato_Start_WW, Lots_seq_key,
          |                            Unit_Testing_Seq_Key), 'LOTA|202032|2|1')
-         |ORDER BY rowKey, columnName, packedValue""".stripMargin,
+         |ORDER BY rowKey, columnName, packedValue""".stripMargin),
 
-    "kv_dsv2_scan" -> kvLifecycleSql,
-    // the DSv2 WRITE path is held to the same from-source answer — a
-    // row lost or duplicated anywhere in write-distribute-sort-commit
-    // breaks this gate
-    "kv_dsv2_write" -> kvLifecycleSql,
+    // S5/S6 through the DSv2 connector boundary: the SAME pack → write →
+    // prefix-scan → unpack lifecycle, but the read goes through
+    // graft.sources.KvSource (SupportsPushDownFilters) instead of the
+    // generic parquet source — proving the store is swappable for a live
+    // KV backend without changing query results.
+    Gate("kv_dsv2_scan", Oracle, (s, dir) => {
+      val li = graft.Tables(s, dir, "lineitem")
+      val kv = KvStore.pack(li,
+        keyParts = Seq(col("l_orderkey")),
+        qualifier = col("l_returnflag"),
+        valueParts = Seq(col("l_linenumber"),
+          col("l_quantity").cast("decimal(12,2)")),
+        delim = Sep)
+      val store = cachedStore(s"dsv2|$dir", "graft_gate_dsv2")(
+        KvStore.write(kv, _))
+      val back = s.read.format("graft.sources.KvSource").load(store)
+      KvStore.unpack(KvOps.prefixScan(back, "rowKey", "10"), delim = Sep)
+        .select(col("rowKey"), col("columnName"), col("packedValue"))
+        .orderBy(col("rowKey"), col("columnName"), col("packedValue"))
+    },
+      kvLifecycleSql),
 
-    // the unescaped fields recomputed straight from the source columns:
-    // the whole escape→pack→store→unpack→unescape pipeline must be the
-    // identity on delimiter-bearing values
-    "pack_escaped_roundtrip" ->
+    // K1 through the DSv2 WRITE boundary: same lifecycle as kv_dsv2_scan
+    // (same oracle) but the store is written by
+    // `df.write.format("graft.sources.KvSource")` — the connector's
+    // SupportsWrite path, whose RequiresDistributionAndOrdering must
+    // reproduce the KvStore.write layout (salt dirs, rowKey-sorted
+    // files) for the read-side pruning to keep working.
+    Gate("kv_dsv2_write", Oracle, (s, dir) => {
+      val li = graft.Tables(s, dir, "lineitem")
+      val kv = KvStore.pack(li,
+        keyParts = Seq(col("l_orderkey")),
+        qualifier = col("l_returnflag"),
+        valueParts = Seq(col("l_linenumber"),
+          col("l_quantity").cast("decimal(12,2)")),
+        delim = Sep)
+      // the WRITE is this gate's operator — rebuilt per invocation on
+      // purpose; only the dir registration keeps it from leaking
+      val store = freshStore("graft_gate_dsv2w")
+      kv.write.format("graft.sources.KvSource").mode("overwrite").save(store)
+      val back = s.read.format("graft.sources.KvSource").load(store)
+      KvStore.unpack(KvOps.prefixScan(back, "rowKey", "10"), delim = Sep)
+        .select(col("rowKey"), col("columnName"), col("packedValue"))
+        .orderBy(col("rowKey"), col("columnName"), col("packedValue"))
+    },
+      // the DSv2 WRITE path is held to the same from-source answer — a
+      // row lost or duplicated anywhere in write-distribute-sort-commit
+      // breaks this gate
+      kvLifecycleSql),
+
+    // the <NB> escape hatch END-TO-END (pack escape → salted store
+    // write → read → unpack unescape): the values carry the exact
+    // corruption classes the reference left unhandled — a data-borne
+    // FIELD delimiter, a data-borne ROW separator, and the literal
+    // escape token itself. The oracle recomputes the unescaped fields
+    // straight from the source columns, so one mis-ordered replace in
+    // either codec direction (or a split that sees a data delimiter as
+    // structure) breaks the gate. Raw NUL bytes stay in scalatest
+    // (RoundTripSpec/HostileDataSpec) per the note above — DuckDB
+    // varchars cannot carry them; with '|' as the structural delimiter
+    // here, the data-borne '|' is the live collision.
+    Gate("pack_escaped_roundtrip", Oracle, (s, dir) => {
+      val hostile = graft.Tables(s, dir, "nation")
+        .select(col("n_nationkey"),
+          concat(col("n_name"), lit("|mid|"), col("n_name")).as("v1"),
+          concat(lit("<NB>"), col("n_name"), lit("\nrow")).as("v2"),
+          concat(lit("a|b<NB>c\n"), col("n_name")).as("v3"))
+      val kv = KvStore.pack(hostile,
+        keyParts = Seq(col("n_nationkey")),
+        qualifier = lit("q"),
+        valueParts = Seq(col("v1"), col("v2"), col("v3")),
+        escapeValues = true, delim = Sep)
+      val store = cachedStore(s"escaped|$dir",
+        "graft_gate_esc")(KvStore.write(kv, _))
+      KvStore.unpack(KvStore.read(s, store),
+          unescapeValues = true, delim = Sep)
+        .select(col("rowKey"),
+          element_at(col("fields"), 1).as("f1"),
+          element_at(col("fields"), 2).as("f2"),
+          element_at(col("fields"), 3).as("f3"))
+        .orderBy(col("rowKey"))
+    },
+      // the unescaped fields recomputed straight from the source columns:
+      // the whole escape→pack→store→unpack→unescape pipeline must be the
+      // identity on delimiter-bearing values
       """SELECT cast(n_nationkey AS varchar) AS rowKey,
         |  n_name || '|mid|' || n_name AS f1,
         |  '<NB>' || n_name || chr(10) || 'row' AS f2,
         |  'a|b<NB>c' || chr(10) || n_name AS f3
         |FROM nation
-        |ORDER BY rowKey""".stripMargin,
+        |ORDER BY rowKey""".stripMargin),
 
-    "mucr_parse" ->
+    // T1 (Utils.scala:504-515): variable-length repeating-group parse +
+    // the MUCR qualifier flg++hex(len(id))++id (Utils.scala:546-547; the
+    // reference's nonexistent-Test_Name bug at :555 fixed per SURVEY §3.2)
+    Gate("mucr_parse", Oracle, (s, _) => {
+      MucrReader.read(s, s"$FixtureDir/mucr.dat", sep = Sep)
+        .withColumn("qualifier", MucrReader.qualifierCol)
+        .select(col("Unit_Testing_Seq_Key"), col("Sub_Session_Seq_Num"),
+          col("Test_Program_Name"), col("unit_counter_pass_fail_flg"),
+          col("Substructure_ID"), col("number_of_counters"),
+          col("Unit_Counter_ID"), col("Repeating_Counter_Occurrences"),
+          col("Unit_Counter_Seq_Num"), col("Unit_Counter_ID_hex_len"),
+          col("qualifier"))
+        .orderBy(col("Unit_Testing_Seq_Key"),
+          col("unit_counter_pass_fail_flg"), col("Unit_Counter_Seq_Num"))
+    },
       s"""WITH lines AS (
          |  SELECT line FROM read_csv('$FixtureDir/mucr.dat', delim='\\t',
          |    quote='', header=false, columns={'line':'VARCHAR'})),
@@ -246,6 +240,6 @@ object IngestQueries {
          |         || f[7 + i*3] AS qualifier
          |FROM c
          |ORDER BY Unit_Testing_Seq_Key, unit_counter_pass_fail_flg,
-         |         Unit_Counter_Seq_Num""".stripMargin,
+         |         Unit_Counter_Seq_Num""".stripMargin),
   )
 }

@@ -27,9 +27,10 @@ object Sinks {
 
   /** Training-export sink: write `df` partitioned by `shardCol` with rows
     * sorted by `orderCol` inside each shard (the deterministic replay
-    * order from [[graft.queries.ExtensionQueries]] `corpus_shuffle`), and
-    * a `_manifest` parquet beside the shards recording per-shard row
-    * counts — the file a training loader checks before consuming.
+    * order from the `corpus_shuffle` gate in
+    * [[graft.queries.SelectionGates]]), and a `_manifest` parquet
+    * beside the shards recording per-shard row counts — the file a
+    * training loader checks before consuming.
     *
     * Scale shape: `repartitionByRange(shard, order)` — NOT
     * `repartition(shard)`, which would funnel the whole export through

@@ -279,7 +279,7 @@ class AviSpec extends AnyFunSuite {
 
   // ── MJPEG-in-AVI (second real video codec) ─────────────────────────
 
-  /** The 9×8 dHash class walk ([[graft.queries.ExtensionQueries
+  /** The 9×8 dHash class walk ([[graft.queries.GateFixtures
     * .dhashWalkGray]] convention) — smooth ±14 gradients, the fill the
     * cross-codec gates plant. */
   private def walk(sig: Long)(k: Int): Int = {

@@ -18,13 +18,16 @@ class ContractSpec extends AnyFunSuite {
   test("registry names never collide across query groups") {
     import graft.queries._
     val groups = Seq(
-      "parity" -> ParityQueries.queries.keySet,
-      "scalar" -> ScalarQueries.queries.keySet,
-      "extension" -> ExtensionQueries.queries.keySet,
-      "ingest" -> IngestQueries.queries.keySet)
+      "parity" -> ParityGates.gates, "scalar" -> ScalarGates.gates,
+      "ingest" -> IngestGates.gates, "dedup" -> DedupGates.gates,
+      "text" -> TextGates.gates, "vector" -> VectorGates.gates,
+      "selection" -> SelectionGates.gates, "temporal" -> TemporalGates.gates,
+      "web" -> WebGates.gates, "warc" -> WarcGates.gates,
+      "media" -> MediaGates.gates).map { case (k, gs) => k -> gs.map(_.name).toSet }
     for {
       (na, a) <- groups; (nb, b) <- groups if na < nb
     } assert((a & b).isEmpty, s"$na and $nb both define: ${a & b}")
+    assert(groups.map(_._2.size).sum == Gates.all.size)
   }
 
   test("flagship entry returns rows on the smoke corpus") {

@@ -404,7 +404,7 @@ class HtmlExtractSpec extends AnyFunSuite {
     cases.toDF("doc_id", "text").write.parquet(pq)
     val back = spark.read.parquet(pq)
 
-    import graft.queries.ExtensionQueries.Web
+    import graft.queries.GateFixtures.Web
     // the DuckDB formula, codepoint-exact on the JVM
     def collapse(s: String): String = {
       val sb = new StringBuilder

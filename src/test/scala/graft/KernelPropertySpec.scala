@@ -132,7 +132,7 @@ class KernelPropertySpec extends AnyFunSuite {
     }
     (0 until 400).foreach { i =>
       val t = randomText(rnd.nextInt(60))
-      val html = graft.queries.ExtensionQueries.Web.html(t, "src")
+      val html = graft.queries.GateFixtures.Web.html(t, "src")
       val got = HtmlKernels
         .extractText(UTF8String.fromString(html)).toString
       val coll = collapse(t)

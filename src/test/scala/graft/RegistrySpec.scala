@@ -2,44 +2,58 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Gate-registry hygiene: the driver contract merges four query maps
-  * with `++`, where a duplicated name would SILENTLY override another
-  * registry's gate — a correctness gate could vanish without any test
-  * noticing. Same for oracle entries pointing at queries that no longer
-  * exist (the driver would flag them as missing output dirs, burning a
-  * round on a typo). */
+import graft.queries.Gates
+
+/** Gate-registry hygiene. Each gate is declared once, so names cannot
+  * collide across maps and an oracle cannot orphan; what is left to pin
+  * is the tier membership (a dropped tier tag would silently shrink the
+  * bench or the baseline) and the two checks the registry enforces at
+  * runtime: a name declared twice, and an unknown name in a selection. */
 class RegistrySpec extends AnyFunSuite {
-  import graft.queries._
 
-  private val queryMaps = Seq(
-    "ParityQueries" -> ParityQueries.queries.keySet,
-    "ScalarQueries" -> ScalarQueries.queries.keySet,
-    "ExtensionQueries" -> ExtensionQueries.queries.keySet,
-    "IngestQueries" -> IngestQueries.queries.keySet)
-  private val oracleMaps = Seq(
-    "ParityQueries" -> ParityQueries.oracleSql.keySet,
-    "ScalarQueries" -> ScalarQueries.oracleSql.keySet,
-    "ExtensionQueries" -> ExtensionQueries.oracleSql.keySet,
-    "IngestQueries" -> IngestQueries.oracleSql.keySet)
-
-  test("no query name collides across registries") {
-    for {
-      (na, a) <- queryMaps; (nb, b) <- queryMaps if na < nb
-      k <- a intersect b
-    } fail(s"query '$k' defined in both $na and $nb — one silently wins")
+  test("tier membership is pinned: 224 checked, 167 benched, 19 baseline, 16 memoized") {
+    assert(Gates.checked.size == 224)
+    assert(Gates.checked.forall(_.oracleSql.trim.nonEmpty))
+    assert(Gates.benched.size == 167)
+    assert(Gates.baseline.map(_.name).toSet == Set(
+      "q1_agg", "pack_concat", "unpack_cells", "salt_bucket",
+      "broadcast_join", "lookup_join", "diff_compare", "topk",
+      "date_format_q", "regex_extract", "dedup_exact", "dedup_minhash",
+      "dedup_ngram", "dedup_simhash", "ann_topk", "ann_lsh",
+      "text_quality", "text_fingerprint", "multimodal_features"))
+    assert(Gates.all.count(_.memoized) == 16)
+    assert(Gates.probes.map(_.name) == Seq("env_canary"))
+    assert(SparkEntry.queries.keySet == SparkEntry.oracleSql.keySet)
+    assert(SparkEntry.queries.size == 224)
   }
 
-  test("no oracle entry collides or orphans") {
-    for {
-      (na, a) <- oracleMaps; (nb, b) <- oracleMaps if na < nb
-      k <- a intersect b
-    } fail(s"oracle '$k' defined in both $na and $nb")
-    val orphans = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
+  test("a gate name declared twice fails when the list is built") {
+    val g = Gates.all.head
+    val e = intercept[IllegalArgumentException](Gates.unique(Seq(g, g)))
+    assert(e.getMessage.contains(g.name))
   }
 
-  test("every bench headline name resolves to a query") {
-    val missing = Bench.headline.filterNot(SparkEntry.queries.contains)
-    assert(missing.isEmpty, s"stale headline entries: $missing")
+  test("selection fails loudly on unknown or empty names") {
+    val picked = Gates.select(Gates.benched, Seq("topk", "q1_agg"), "T")
+    assert(picked.map(_.name) == Seq("topk", "q1_agg"))
+    val e = intercept[IllegalArgumentException](
+      Gates.select(Gates.benched, Seq("q1_agg", "q1_aggg", "nope"), "T"))
+    assert(e.getMessage.contains("q1_aggg") && e.getMessage.contains("nope"))
+    // known, but not benched: not a valid Bench selection
+    assert(!Gates.benched.exists(_.name == "limit1"))
+    intercept[IllegalArgumentException](
+      Gates.select(Gates.benched, Seq("limit1"), "T"))
+    intercept[IllegalArgumentException](
+      Gates.selectFromEnv(Gates.checked, "V", Map("V" -> " , ")))
+    assert(Gates.selectFromEnv(Gates.checked, "V", Map.empty) == Gates.checked)
+    assert(Gates.selectFromEnv(Gates.checked, "V", Map("V" -> "limit1, topk"))
+      .map(_.name) == Seq("limit1", "topk"))
+  }
+
+  test("SPARK_GRAFT_CONF parses k=v tokens and names a bad one") {
+    assert(Bench.parseConf(" a.b=1 ; ;c=x=y;") == Seq("a.b" -> "1", "c" -> "x=y"))
+    val e = intercept[IllegalArgumentException](Bench.parseConf("a=1;oops;b=2"))
+    assert(e.getMessage.contains("'oops'"))
+    intercept[IllegalArgumentException](Bench.parseConf("=1"))
   }
 }

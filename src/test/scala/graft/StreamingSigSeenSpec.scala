@@ -86,12 +86,12 @@ class StreamingSigSeenSpec extends AnyFunSuite {
     // realistic wire shape: crawl shards ship base64 payloads in JSONL;
     // the fold hashes REAL AVI bytes after unbase64. Frames realize
     // EXACT target dHashes via the gate fixtures' shared ±14 walk
-    // (ExtensionQueries.dhashWalkGray), so frame classes sit ≥ 32
+    // (GateFixtures.dhashWalkGray), so frame classes sit ≥ 32
     // bits apart.
     def clip(sig0: Long, sig1: Long): String =
       java.util.Base64.getEncoder.encodeToString(
         Avi.encodeAviGray(9, 8, 2,
-          (f, k) => graft.queries.ExtensionQueries.dhashWalkGray(
+          (f, k) => graft.queries.GateFixtures.dhashWalkGray(
             if (f == 0) sig0 else sig1, k)))
     val c1 = clip(0L, -1L)
     val c3 = clip(0x0F0F0F0F0F0F0F0FL, 0xF0F0F0F0F0F0F0F0L)
