@@ -13,12 +13,15 @@ object Verify {
     // those gates (unset → all of them); an
     // unknown name fails here, before any Spark work
     val selected = Gates.selectFromEnv(Gates.checked, "SPARK_GRAFT_VERIFY_ONLY")
+    // session overrides, SPARK_GRAFT_CONF="k=v;k=v" (the Bench parser):
+    // a malformed token fails here, before Spark starts
+    val conf = sys.env.get("SPARK_GRAFT_CONF").map(Bench.parseConf).getOrElse(Nil)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = conf.foldLeft(SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+      .config("spark.ui.enabled", "false")) { case (b, (k, v)) => b.config(k, v) }
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

@@ -1,6 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import graft.meta.PipelineMetrics
 
 /** The ONE delta-log layout and fold contract every rolling state
   * index in the engine shares — [[graft.dedup.UrlSeen]] (URL state),
@@ -43,10 +47,11 @@ import org.apache.spark.sql.SparkSession
   * contract, as everywhere in this lifecycle; concurrent cutovers
   * would race for the same generation number.
   *
-  * Keeping the mechanics in one object is what makes "all rolling
-  * indexes share one lifecycle contract" a checkable property instead
-  * of a convention: an index family cannot drift to its own replay
-  * semantics without leaving this file. */
+  * Keeping the mechanics in one object — and the lifecycle over them
+  * in one trait, [[DeltaIndex]] — is what makes "all rolling indexes
+  * share one lifecycle contract" a checkable property instead of a
+  * convention: an index family cannot drift to its own replay
+  * semantics without leaving these files. */
 object DeltaLog {
 
   val deltaPrefix = "delta-b"
@@ -146,8 +151,7 @@ object DeltaLog {
       .getOrElse(Listing(0L, path, deltasUnder(fs, root)))
   }
 
-  /** Committed (batchId, dir) deltas of the CURRENT generation,
-    * unordered. */
+  /** The CURRENT generation's committed (batchId, dir) deltas, unordered. */
   def committedDeltas(spark: SparkSession, path: String)
       : Seq[(Long, String)] =
     listing(spark, path).deltas.map(d => (d.batchId, d.dir))
@@ -161,17 +165,18 @@ object DeltaLog {
   def generation(spark: SparkSession, path: String): Long =
     listing(spark, path).generation
 
-  /** The fold-entry check: true when `batchId` is a REPLAY (its delta
-    * committed — mutate nothing, annotate as the first run did);
-    * throws on an out-of-order backfill (at/below the watermark with
-    * no committed delta of its own). */
-  def replayOrGuard(deltas: Seq[(Long, String)], batchId: Long,
-                    path: String): Boolean = {
-    val replay = deltas.exists(_._1 == batchId)
-    if (!replay && deltas.nonEmpty && batchId <= deltas.map(_._1).max)
+  /** The fold-entry check against the fold's resolved listing: true
+    * when `batchId` is a REPLAY (its delta committed — mutate nothing,
+    * annotate as the first run did; every committed fold leaves its
+    * delta dir, even one that found zero novel rows); throws on an
+    * out-of-order backfill (at/below the watermark with no committed
+    * delta of its own). */
+  def replayOrGuard(l: Listing, batchId: Long, path: String): Boolean = {
+    val replay = l.deltas.exists(_.batchId == batchId)
+    for (wm <- l.watermark if !replay && batchId <= wm)
       throw new IllegalArgumentException(
         s"out-of-order fold: batch $batchId is below the watermark " +
-          s"${deltas.map(_._1).max} but was never committed at $path — " +
+          s"$wm but was never committed at $path — " +
           "batches must be folded in ascending order (backfill would " +
           "silently lose this batch's novel rows)")
     replay
@@ -184,12 +189,6 @@ object DeltaLog {
     * placement. */
   def deltaDir(path: String, batchId: Long): String =
     s"$path/$deltaPrefix$batchId"
-
-  /** Parquet files across the current generation's committed deltas —
-    * the IndexHealth `files` compaction signal (every fold adds at
-    * least one; reads open all). */
-  def parquetFileCount(spark: SparkSession, path: String): Int =
-    listing(spark, path).deltas.map(_.parquetFiles).sum
 
   /** Atomic in-place compaction: `write` receives the NEXT generation's
     * root and must commit the merged state as a delta under it (the
@@ -230,7 +229,7 @@ object DeltaLog {
   /** The fold-loop's self-maintenance policy: when the current
     * generation's per-read parquet file count exceeds `maxFiles`, run
     * the family's atomic cutover (`compact` — e.g.
-    * [[graft.dedup.UrlSeen.compactInPlace]]) and prune retired
+    * [[DeltaIndex.compactInPlace]]) and prune retired
     * generations; otherwise do nothing. Returns the new generation
     * when a cutover ran. This is what keeps a year of rolling folds
     * bounded-file WITHOUT a maintenance window: the fold loop calls it
@@ -296,5 +295,143 @@ object DeltaLog {
     val victims = dropGens ++ legacy
     victims.foreach(p => fs.delete(p, true))
     victims.map(_.toString)
+  }
+}
+
+/** The rolling-index lifecycle over the [[DeltaLog]] layout, written
+  * ONCE for every family ([[graft.dedup.UrlSeen]],
+  * [[graft.dedup.SigSeen]], [[graft.ingest.CdxLog]]): read, watermark,
+  * health, and compaction with its min-fold heal. A family declares
+  * its `schema`, heal `key` and batch `stamp`, and writes its own fold
+  * against [[DeltaLog.replayOrGuard]] and [[writeDelta]] — it cannot
+  * drift to its own read, heal or compaction contract unnoticed. */
+trait DeltaIndex {
+
+  /** The index row — every read's projection, the cold read's schema. */
+  def schema: StructType
+
+  /** The heal key — an in-contract writer keeps exactly one row per
+    * key, and `health`'s `maxList`/`skew` measure the degree. */
+  protected def key: Seq[String]
+
+  /** The batch-stamp field leading the heal's `min(struct(...))`: the
+    * min is then first-batch-wins, with the winning batch's FULL row
+    * carried along (a per-column min could splice two rows). */
+  protected def stamp: String
+
+  /** Physical layout of the compacted generation. The file count is a
+    * CONTRACT, not a shuffle-partition accident: reads open every file,
+    * and [[compactIfFragmented]] compares this count to its threshold.
+    * coalesce CAPS at `targetFiles` without another exchange (small
+    * states keep their naturally few files; a 200-shuffle-partition
+    * corpus state lands at `targetFiles`, under the next trigger). */
+  protected def layout(healed: DataFrame, targetFiles: Int): DataFrame =
+    healed.coalesce(targetFiles)
+
+  /** The standing index, empty (with schema) on a cold path.
+    *
+    * A RAW union of the committed deltas — no per-read aggregation:
+    * deltas are disjoint by each family's fold invariant (a fold only
+    * writes rows absent from the standing state, an uncommitted crash
+    * is invisible, and a retry overwrites its own delta dir), so the
+    * defensive min-fold would cost a corpus-scale shuffle on EVERY
+    * read (twice per fold) to heal a state no in-contract writer can
+    * produce. [[compact]] still applies the heal — the once-in-a-while
+    * maintenance pass is where defense belongs. */
+  def read(spark: SparkSession, path: String): DataFrame =
+    readFrom(spark, DeltaLog.listing(spark, path))
+
+  /** [[read]] against an already-resolved listing — a fold threads ONE
+    * resolution through its guard, reads, and write instead of
+    * re-listing the log per question (O(deltas) metadata round trips
+    * each on an object store). */
+  protected def readFrom(spark: SparkSession,
+                         l: DeltaLog.Listing): DataFrame =
+    if (l.deltas.isEmpty)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.parquet(l.deltas.map(_.dir): _*)
+      .select(schema.fieldNames.toSeq.map(col): _*)
+
+  /** Max committed batch stamp — the replay guard. */
+  def watermark(spark: SparkSession, path: String): Option[Long] =
+    DeltaLog.watermark(spark, path)
+
+  /** Post-fold lifecycle telemetry — the
+    * [[graft.dedup.Dedup.appendToMinhashIndex]] IndexHealth contract
+    * over the delta-log layout: `files` counts parquet files across
+    * COMMITTED deltas (the compaction signal — every fold adds at least
+    * one, and reads open them all), `keys` the distinct heal keys, and
+    * `maxList`/`skew` the duplicate-key degree, which an in-contract
+    * writer keeps at exactly 1.0 — above 1.0 means out-of-contract
+    * writes that [[compact]]'s min-fold will heal. O(index) — pace
+    * calls at the orchestration layer, never per micro-fold. */
+  def health(spark: SparkSession,
+             path: String): PipelineMetrics.IndexHealth = {
+    val l = DeltaLog.listing(spark, path)
+    PipelineMetrics
+      .indexHealth(readFrom(spark, l), struct(key.map(col): _*), path)
+      .copy(files = l.parquetFiles, generation = l.generation)
+  }
+
+  /** Merge the delta log into ONE delta at `dest` (stamped with the
+    * source's watermark, so replay guarding survives compaction for
+    * the WATERMARK batch — the only one a crash-retry can replay;
+    * older batch ids lose their per-batch deltas here and a
+    * re-submitted old id after compaction fails the monotone-fold
+    * guard loudly rather than being mistaken for a replay) —
+    * the response to a growing per-read file count. Compact to a
+    * FRESH path, then swap pointers (the compactMinhashIndex
+    * convention). */
+  def compact(spark: SparkSession, path: String, dest: String): Unit = {
+    require(path != dest,
+      "compact to a FRESH path, then swap pointers — or use " +
+        "compactInPlace for the atomic generation cutover")
+    writeCompacted(spark, path, dest, 32)
+  }
+
+  /** Atomic in-place compaction: [[compact]]'s healed, watermark-
+    * stamped state lands as generation N+1 through the
+    * [[DeltaLog.compactCutover]] discipline — readers see exactly the
+    * old or the new state, a crash leaves an invisible orphan, later
+    * folds land in the new generation, old generations stay until
+    * [[DeltaLog.pruneGenerations]]. Returns the new generation. */
+  def compactInPlace(spark: SparkSession, path: String,
+                     targetFiles: Int = 32): Long =
+    DeltaLog.compactCutover(spark, path)(
+      writeCompacted(spark, path, _, targetFiles))
+
+  /** Self-maintenance for the fold loop: atomic cutover + prune when
+    * the per-read file count exceeds `maxFiles`, no-op otherwise — the
+    * [[DeltaLog.compactIfFragmented]] policy. Call on the IndexHealth
+    * cadence, never per micro-fold. */
+  def compactIfFragmented(spark: SparkSession, path: String,
+                          maxFiles: Int = 64): Option[Long] =
+    DeltaLog.compactIfFragmented(spark, path, maxFiles)(
+      // compact to HALF the trigger: the next cutover is then
+      // ~maxFiles/2 folds away, not one — no rewrite-per-fold churn
+      compactInPlace(spark, path, targetFiles = (maxFiles / 2).max(1)))
+
+  /** Commit `rows` as `batchId`'s delta under the generation `root`;
+    * overwrite, so a crashed write's retry replaces its own dir. */
+  protected def writeDelta(rows: DataFrame, root: String,
+                           batchId: Long): Unit =
+    rows.write.mode("overwrite").parquet(DeltaLog.deltaDir(root, batchId))
+
+  // the min-fold heal lives HERE, not in read(): compaction is the
+  // maintenance pass, and it makes the healed state durable
+  private def writeCompacted(spark: SparkSession, path: String,
+                             destRoot: String, targetFiles: Int): Unit = {
+    val l = DeltaLog.listing(spark, path)
+    val wm = l.watermark.getOrElse(
+      throw new IllegalStateException(s"nothing committed at $path"))
+    val fields = schema.fieldNames.toSeq
+    val rest = fields.filterNot(key.contains)
+    val healed = readFrom(spark, l)
+      .groupBy(key.map(col): _*)
+      .agg(min(struct((stamp +: rest.filterNot(_ == stamp)).map(col): _*))
+        .as("m"))
+      .select(fields.map(f =>
+        if (key.contains(f)) col(f) else col(s"m.$f").as(f)): _*)
+    writeDelta(layout(healed, targetFiles), destRoot, wm)
   }
 }

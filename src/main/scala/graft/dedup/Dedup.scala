@@ -626,7 +626,7 @@ object Dedup {
   /** Atomic in-place compaction of an appended index: the healed tables
     * land under `path/gen-<N+1>` and become current the instant the
     * params `_SUCCESS` marker (the builder's LAST write) lands — the
-    * [[graft.dedup.UrlSeen.compactInPlace]] cutover contract over the
+    * [[graft.core.DeltaIndex.compactInPlace]] cutover contract over the
     * bucketed-table store. Readers and appends resolve through
     * [[minhashIndexRoot]], so they see exactly the old or the new
     * generation; a crash mid-write leaves an invisible orphan the retry

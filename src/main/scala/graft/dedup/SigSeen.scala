@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -40,11 +40,12 @@ import org.apache.spark.sql.types._
   * Null signatures (undecodable payloads) drop from both state and
   * annotation — they can never be seen, and never fail a task.
   *
-  * Idempotence and ordering are the [[UrlSeen]] contract verbatim: a
-  * batchId with a committed delta is a replay (state untouched,
-  * annotation filtered to strictly-earlier state rows — identical to
-  * the first run); a batchId at/below the watermark WITHOUT its own
-  * delta is an out-of-order backfill and fails loudly.
+  * Idempotence and ordering are the shared [[graft.core.DeltaLog]]
+  * contract, as in [[UrlSeen]]: a batchId with a committed delta is a
+  * replay (state untouched, annotation filtered to strictly-earlier
+  * state rows — identical to the first run); a batchId at/below the
+  * watermark WITHOUT its own delta is an out-of-order backfill and
+  * fails loudly.
   *
   * Scale shape — the fold never shuffles the standing state: the
   * batch collapses to its distinct signatures map-side, those are
@@ -57,42 +58,19 @@ import org.apache.spark.sql.types._
   * signatures — sets `broadcastBatch = false` for a shuffle-hash
   * plan.) The match frame is localCheckpointed: it is consumed by
   * both the delta write and the annotation, and is at most one row
-  * per distinct batch signature. [[compact]] merges the delta log
-  * into one generation with the min-fold heal, bounding the per-fold
-  * file count a year of rolling folds would otherwise accumulate. */
-object SigSeen {
+  * per distinct batch signature. Read, health and compaction are the
+  * shared [[graft.core.DeltaIndex]] lifecycle, healed on `sig`:
+  * [[compact]] merges the delta log into one generation with the
+  * min-fold heal, bounding the per-fold file count a year of rolling
+  * folds would otherwise accumulate. */
+object SigSeen extends graft.core.DeltaIndex {
 
   val schema: StructType = StructType(Seq(
     StructField("sig", LongType),
     StructField("first_seen_batch", LongType),
     StructField("first_doc", LongType)))
-
-  /** Committed (batchId, dir) deltas under `path`, unordered. */
-  private def committedDeltas(spark: SparkSession, path: String)
-      : Seq[(Long, String)] =
-    graft.core.DeltaLog.committedDeltas(spark, path)
-
-  /** Max committed batch stamp — the replay guard. */
-  def watermark(spark: SparkSession, path: String): Option[Long] =
-    graft.core.DeltaLog.watermark(spark, path)
-
-  /** The standing index: one row per distinct signature ever folded.
-    * Raw union of committed deltas (disjoint by the fold invariant —
-    * the [[UrlSeen.read]] rationale); [[compact]] applies the
-    * defensive min-fold heal. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    readFrom(spark, graft.core.DeltaLog.listing(spark, path))
-
-  /** [[read]] against an already-resolved listing — the fold threads
-    * ONE resolution through (the [[UrlSeen.readFrom]] rationale). */
-  private def readFrom(spark: SparkSession,
-                       l: graft.core.DeltaLog.Listing): DataFrame =
-    if (l.deltas.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      spark.read.parquet(l.deltas.map(_.dir): _*)
-        .select(col("sig"), col("first_seen_batch"), col("first_doc"))
+  protected val key: Seq[String] = Seq("sig")
+  protected val stamp: String = "first_seen_batch"
 
   /** Fold one media batch into the standing index and return the
     * annotated batch: (doc_id, sig, status, first_doc, hamming) with
@@ -111,11 +89,10 @@ object SigSeen {
       .localCheckpoint(false)
     val batchMin = canon.groupBy(col("sig"))
       .agg(min(col("doc_id")).as("batch_first"))
-    // monotone-fold guard: the UrlSeen contract verbatim, against ONE
+    // monotone-fold guard (the shared DeltaLog contract), against ONE
     // log resolution shared with the state read and the delta write
     val l = graft.core.DeltaLog.listing(spark, path)
-    val replay = graft.core.DeltaLog.replayOrGuard(
-      l.deltas.map(d => (d.batchId, d.dir)), batchId, path)
+    val replay = graft.core.DeltaLog.replayOrGuard(l, batchId, path)
     // ── the ONE state pass: banded near-match of batch sigs vs the
     // strictly-earlier state (when !replay the state cannot contain
     // rows at/above batchId, so this view doubles as the exact-novelty
@@ -143,14 +120,12 @@ object SigSeen {
       // ≤ one row per distinct batch signature; LAZY — the delta
       // write (or on replay the annotation) materializes it once
       .localCheckpoint(false)
-    if (!replay) {
-      batchMin.join(matches.where(col("exact") === 1).select(col("sig")),
+    if (!replay)
+      writeDelta(batchMin
+        .join(matches.where(col("exact") === 1).select(col("sig")),
           Seq("sig"), "left_anti")
         .select(col("sig"), lit(batchId).as("first_seen_batch"),
-          col("batch_first").as("first_doc"))
-        .write.mode("overwrite")
-        .parquet(graft.core.DeltaLog.deltaDir(l.genRoot, batchId))
-    }
+          col("batch_first").as("first_doc")), l.genRoot, batchId)
     // in-batch near relation: for each distinct batch signature, the
     // earliest first-doc among its in-radius batch neighbors (itself
     // included — near_first == batch_first means no precedent). The
@@ -210,66 +185,4 @@ object SigSeen {
           .as("first_doc"),
         col("m").getField("hamming").as("hamming"))
   }
-
-  /** Post-fold lifecycle telemetry — the
-    * [[Dedup.appendToMinhashIndex]] IndexHealth contract over the
-    * delta-log layout: `files` counts parquet files across COMMITTED
-    * deltas (the compaction signal — every fold adds at least one, and
-    * reads open them all), `keys` the distinct signatures, and
-    * `maxList`/`skew` the duplicate-key degree, which an in-contract
-    * writer keeps at exactly 1.0 — above 1.0 means out-of-contract
-    * writes that [[compact]]'s min-fold will heal. O(index) — pace
-    * calls at the orchestration layer, never per micro-fold. */
-  def health(spark: SparkSession,
-             path: String): graft.meta.PipelineMetrics.IndexHealth = {
-    val l = graft.core.DeltaLog.listing(spark, path)
-    graft.meta.PipelineMetrics
-      .indexHealth(readFrom(spark, l), col("sig"), path)
-      .copy(files = l.parquetFiles, generation = l.generation)
-  }
-
-  /** Merge the delta log into ONE delta at `dest` — stamped with the
-    * source watermark, min-fold healed: the [[UrlSeen.compact]]
-    * contract (only the watermark batch stays replayable after
-    * compaction; older ids fail the monotone guard loudly). */
-  def compact(spark: SparkSession, path: String, dest: String): Unit = {
-    require(path != dest,
-      "compact to a FRESH path, then swap pointers — or use " +
-        "compactInPlace for the atomic generation cutover")
-    val wm = watermark(spark, path).getOrElse(
-      throw new IllegalStateException(s"nothing committed at $path"))
-    writeCompacted(spark, path, dest, wm)
-  }
-
-  /** Atomic in-place compaction — the [[UrlSeen.compactInPlace]]
-    * generation-cutover contract over signature state. Returns the new
-    * generation number. */
-  def compactInPlace(spark: SparkSession, path: String,
-                     targetFiles: Int = 32): Long = {
-    val wm = watermark(spark, path).getOrElse(
-      throw new IllegalStateException(s"nothing committed at $path"))
-    graft.core.DeltaLog.compactCutover(spark, path)(
-      writeCompacted(spark, path, _, wm, targetFiles))
-  }
-
-  /** Self-maintenance for the fold loop — the
-    * [[UrlSeen.compactIfFragmented]] policy over signature state. */
-  def compactIfFragmented(spark: SparkSession, path: String,
-                          maxFiles: Int = 64): Option[Long] =
-    graft.core.DeltaLog.compactIfFragmented(spark, path, maxFiles)(
-      compactInPlace(spark, path, targetFiles = (maxFiles / 2).max(1)))
-
-  private def writeCompacted(spark: SparkSession, path: String,
-                             destRoot: String, wm: Long,
-                             targetFiles: Int = 32): Unit =
-    read(spark, path)
-      .groupBy(col("sig"))
-      .agg(min(struct(col("first_seen_batch"), col("first_doc"))).as("m"))
-      .select(col("sig"),
-        col("m.first_seen_batch").as("first_seen_batch"),
-        col("m.first_doc").as("first_doc"))
-      // bounded-file cap — the UrlSeen.writeCompacted rationale
-      .coalesce(targetFiles)
-      .write.mode("overwrite")
-      .parquet(graft.core.DeltaLog.deltaDir(destRoot, wm))
 }

@@ -1,6 +1,6 @@
 package graft.dedup
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -17,9 +17,11 @@ import org.apache.spark.sql.types._
   * The standing state is the union of committed deltas; a fold WRITES
   * only the batch's first-occurrence URLs, so per-batch write volume
   * is proportional to novelty, never to the accumulated index — the
-  * property that keeps a year of rolling crawls foldable. [[compact]]
-  * merges the delta log into one generation when the file count grows
-  * (the `compactMinhashIndex` response to append telemetry).
+  * property that keeps a year of rolling crawls foldable. Read,
+  * health and compaction are the shared [[graft.core.DeltaIndex]]
+  * lifecycle, healed on `url_canon`; [[compact]] merges the delta log
+  * into one generation when the file count grows (the
+  * `compactMinhashIndex` response to append telemetry).
   *
   * IDEMPOTENT by batch watermark: a fold whose `batchId` is at or
   * below the max committed delta stamp is a REPLAY — the state is not
@@ -36,48 +38,14 @@ import org.apache.spark.sql.types._
   * internal first-doc aggregate collapses map-side. Null-normalizing
   * URLs (unparseable) drop from both the state and the annotation —
   * they can never be "seen". */
-object UrlSeen {
+object UrlSeen extends graft.core.DeltaIndex {
 
   val schema: StructType = StructType(Seq(
     StructField("url_canon", StringType),
     StructField("first_seen_batch", LongType),
     StructField("first_doc", LongType)))
-
-  /** Committed (batchId, dir) deltas under `path`, unordered. */
-  private def committedDeltas(spark: SparkSession, path: String)
-      : Seq[(Long, String)] =
-    graft.core.DeltaLog.committedDeltas(spark, path)
-
-  /** Max committed batch stamp — the replay guard. */
-  def watermark(spark: SparkSession, path: String): Option[Long] =
-    graft.core.DeltaLog.watermark(spark, path)
-
-  /** The standing index: one row per canonical URL with its first-seen
-    * batch and first document. Empty (with schema) on a cold path.
-    *
-    * A RAW union of the committed deltas — no per-read aggregation:
-    * deltas are disjoint by the fold invariant (a fold only writes
-    * URLs absent from the standing state, an uncommitted crash is
-    * invisible, and a retry overwrites its own delta dir), so the
-    * defensive min-fold would cost a corpus-scale shuffle on EVERY
-    * read (twice per fold) to heal a state no in-contract writer can
-    * produce. [[compact]] still applies the heal — the once-in-a-while
-    * maintenance pass is where defense belongs. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    readFrom(spark, graft.core.DeltaLog.listing(spark, path))
-
-  /** [[read]] against an already-resolved listing — the fold threads
-    * ONE resolution through its guard, reads, and write instead of
-    * re-listing the log per question (O(deltas) metadata round trips
-    * each on an object store). */
-  private def readFrom(spark: SparkSession,
-                       l: graft.core.DeltaLog.Listing): DataFrame =
-    if (l.deltas.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else
-      spark.read.parquet(l.deltas.map(_.dir): _*)
-        .select(col("url_canon"), col("first_seen_batch"), col("first_doc"))
+  protected val key: Seq[String] = Seq("url_canon")
+  protected val stamp: String = "first_seen_batch"
 
   /** Fold one crawl batch into the standing index and return the
     * annotated batch: (doc_id, url_canon, status, first_doc) where
@@ -106,24 +74,15 @@ object UrlSeen {
     // ONE log resolution serves the guard, both state reads, and the
     // delta-dir placement for this whole fold
     val l = graft.core.DeltaLog.listing(spark, path)
-    // A batchId at/below the watermark is a replay ONLY if that exact
-    // fold committed (every committed fold leaves delta-b<batchId>,
-    // even when it found zero novel URLs). An unknown id below the
-    // watermark is an out-of-order backfill — silently treating it as
-    // a replay would permanently drop its novel URLs, so fail loudly.
-    val replay = graft.core.DeltaLog.replayOrGuard(
-      l.deltas.map(d => (d.batchId, d.dir)), batchId, path)
-    if (!replay) {
+    if (!graft.core.DeltaLog.replayOrGuard(l, batchId, path)) {
       // delta = this batch's first-occurrence URLs only: write volume
       // ∝ novelty. Anti-join against the full standing state (which
       // cannot yet contain rows at/above batchId — watermark checked).
-      batchMin
+      writeDelta(batchMin
         .join(readFrom(spark, l).select(col("url_canon")),
           Seq("url_canon"), "left_anti")
         .select(col("url_canon"), lit(batchId).as("first_seen_batch"),
-          col("batch_first").as("first_doc"))
-        .write.mode("overwrite")
-        .parquet(graft.core.DeltaLog.deltaDir(l.genRoot, batchId))
+          col("batch_first").as("first_doc")), l.genRoot, batchId)
     }
     // annotation view: strictly-earlier state rows — a replayed fold's
     // own committed delta (first_seen_batch == batchId) carries
@@ -143,85 +102,4 @@ object UrlSeen {
           .otherwise(lit("new")).as("status"),
         coalesce(col("seen_doc"), col("batch_first")).as("first_doc"))
   }
-
-  /** Post-fold lifecycle telemetry — the [[SigSeen.health]] contract
-    * over URL state: `files` across committed deltas (compaction
-    * signal), `keys` distinct canonical URLs, `maxList`/`skew` the
-    * duplicate-key degree an in-contract writer keeps at 1.0 (above:
-    * out-of-contract writes [[compact]]'s min-fold heals). O(index). */
-  def health(spark: SparkSession,
-             path: String): graft.meta.PipelineMetrics.IndexHealth = {
-    val l = graft.core.DeltaLog.listing(spark, path)
-    graft.meta.PipelineMetrics
-      .indexHealth(readFrom(spark, l), col("url_canon"), path)
-      .copy(files = l.parquetFiles, generation = l.generation)
-  }
-
-  /** Merge the delta log into ONE delta at `dest` (stamped with the
-    * source's watermark, so replay guarding survives compaction for
-    * the WATERMARK batch — the only one a crash-retry can replay;
-    * older batch ids lose their per-batch deltas here and a
-    * re-submitted old id after compaction fails the monotone-fold
-    * guard loudly rather than being mistaken for a replay) —
-    * the response to a growing per-read file count. Compact to a
-    * FRESH path, then swap pointers (the compactMinhashIndex
-    * convention). */
-  def compact(spark: SparkSession, path: String, dest: String): Unit = {
-    require(path != dest,
-      "compact to a FRESH path, then swap pointers — or use " +
-        "compactInPlace for the atomic generation cutover")
-    val wm = watermark(spark, path).getOrElse(
-      throw new IllegalStateException(s"nothing committed at $path"))
-    writeCompacted(spark, path, dest, wm)
-  }
-
-  /** Atomic in-place compaction — the [[graft.core.DeltaLog
-    * .compactCutover]] generation discipline: the min-folded state
-    * lands as the first delta of generation N+1 (stamped with the
-    * source watermark, so the replay guard survives for the watermark
-    * batch) and becomes current the instant its `_SUCCESS` marker
-    * lands; readers see exactly the old or the new state, a crash
-    * leaves an invisible orphan, post-cutover folds land in the new
-    * generation. Old generations stay until
-    * [[graft.core.DeltaLog.pruneGenerations]]. Returns the new
-    * generation number. */
-  def compactInPlace(spark: SparkSession, path: String,
-                     targetFiles: Int = 32): Long = {
-    val wm = watermark(spark, path).getOrElse(
-      throw new IllegalStateException(s"nothing committed at $path"))
-    graft.core.DeltaLog.compactCutover(spark, path)(
-      writeCompacted(spark, path, _, wm, targetFiles))
-  }
-
-  /** Self-maintenance for the fold loop: atomic cutover + prune when
-    * the per-read file count exceeds `maxFiles`, no-op otherwise — the
-    * [[graft.core.DeltaLog.compactIfFragmented]] policy over URL
-    * state. Call on the IndexHealth cadence, never per micro-fold. */
-  def compactIfFragmented(spark: SparkSession, path: String,
-                          maxFiles: Int = 64): Option[Long] =
-    graft.core.DeltaLog.compactIfFragmented(spark, path, maxFiles)(
-      // compact to HALF the trigger: the next cutover is then
-      // ~maxFiles/2 folds away, not one — no rewrite-per-fold churn
-      compactInPlace(spark, path, targetFiles = (maxFiles / 2).max(1)))
-
-  // the min-fold heal lives HERE, not in read(): compaction is the
-  // maintenance pass, and it makes the healed state durable
-  private def writeCompacted(spark: SparkSession, path: String,
-                             destRoot: String, wm: Long,
-                             targetFiles: Int = 32): Unit =
-    read(spark, path)
-      .groupBy(col("url_canon"))
-      .agg(min(struct(col("first_seen_batch"), col("first_doc"))).as("m"))
-      .select(col("url_canon"),
-        col("m.first_seen_batch").as("first_seen_batch"),
-        col("m.first_doc").as("first_doc"))
-      // the compacted generation's file count is a CONTRACT, not a
-      // shuffle-partition accident: reads open every file, and the
-      // self-maintenance trigger compares this count to its threshold.
-      // coalesce CAPS at targetFiles without another exchange (small
-      // states keep their naturally few files; a 200-shuffle-partition
-      // corpus state lands at targetFiles, under the next trigger)
-      .coalesce(targetFiles)
-      .write.mode("overwrite")
-      .parquet(graft.core.DeltaLog.deltaDir(destRoot, wm))
 }

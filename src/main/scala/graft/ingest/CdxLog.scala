@@ -24,11 +24,12 @@ import org.apache.spark.sql.types._
   *
   * Scale shape: one narrow indexing pass over the batch's shards
   * (slim index rows only — payload bytes never leave their tasks),
-  * one parquet write. No shuffle at all. [[compact]] merges the delta
-  * log into one generation with a first-batch-wins heal keyed by
-  * (file_id, rec_idx) — the degree an in-contract writer keeps at
-  * exactly one row. */
-object CdxLog {
+  * one parquet write. No shuffle at all. Read, health and compaction
+  * are the shared [[graft.core.DeltaIndex]] lifecycle: [[compact]]
+  * merges the delta log into one generation with a first-batch-wins
+  * heal keyed by (file_id, rec_idx) — the degree an in-contract writer
+  * keeps at exactly one row — laid out for point reads ([[layout]]). */
+object CdxLog extends graft.core.DeltaIndex {
 
   val schema: StructType = StructType(Seq(
     StructField("file_id", LongType),
@@ -41,8 +42,19 @@ object CdxLog {
     StructField("target_uri", StringType),
     StructField("date_s", StringType),
     StructField("batch_id", LongType)))
+  protected val key: Seq[String] = Seq("file_id", "rec_idx")
+  protected val stamp: String = "batch_id"
 
-  private def cols = schema.fieldNames.toSeq.map(col)
+  /** The compacted generation is the index's long-lived READ form:
+    * range-layout + sort it on the point-read key so a selection like
+    * `file_id IN (…)` prunes whole files via parquet min/max stats
+    * instead of scanning the full index — the layout that keeps
+    * "select 10k records out of a 100 TB archive's index" an
+    * O(selection) read — with the bounded-file contract on top. */
+  override protected def layout(healed: DataFrame,
+                                targetFiles: Int): DataFrame =
+    healed.repartitionByRange(targetFiles, key.map(col): _*)
+      .sortWithinPartitions(key.map(col): _*)
 
   /** Index one landed shard batch into the standing log. Replays are
     * no-ops; out-of-order batch ids fail loudly. */
@@ -50,98 +62,8 @@ object CdxLog {
              payload: Column, path: String, batchId: Long): Unit = {
     // ONE log resolution serves the guard and the delta-dir placement
     val l = graft.core.DeltaLog.listing(spark, path)
-    val replay = graft.core.DeltaLog.replayOrGuard(
-      l.deltas.map(d => (d.batchId, d.dir)), batchId, path)
-    if (!replay)
-      Warc.cdxIndex(spark, files, fileId, payload)
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("overwrite")
-        .parquet(graft.core.DeltaLog.deltaDir(l.genRoot, batchId))
-  }
-
-  /** The standing index: every record of every committed batch. Raw
-    * union — deltas are disjoint by the append contract (one batch
-    * per file set, replays write nothing); [[compact]] applies the
-    * defensive heal. Empty (with schema) on a cold path. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val ds = graft.core.DeltaLog.committedDeltas(spark, path)
-    if (ds.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.parquet(ds.map(_._2): _*).select(cols: _*)
-  }
-
-  def watermark(spark: SparkSession, path: String): Option[Long] =
-    graft.core.DeltaLog.watermark(spark, path)
-
-  /** Lifecycle telemetry — the shared IndexHealth contract keyed by
-    * (file_id, rec_idx): `maxList`/`skew` at exactly 1.0 for an
-    * in-contract writer; above means out-of-contract double-indexing
-    * that [[compact]]'s first-batch-wins heals. O(index). */
-  def health(spark: SparkSession,
-             path: String): graft.meta.PipelineMetrics.IndexHealth = {
-    val l = graft.core.DeltaLog.listing(spark, path)
-    graft.meta.PipelineMetrics
-      .indexHealth(read(spark, path),
-        struct(col("file_id"), col("rec_idx")), path)
-      .copy(files = l.parquetFiles, generation = l.generation)
-  }
-
-  /** Merge the delta log into ONE generation at `dest`, stamped with
-    * the source watermark; duplicate (file_id, rec_idx) keys (only an
-    * out-of-contract writer produces them) heal first-batch-wins with
-    * the earliest batch's full row kept. */
-  def compact(spark: SparkSession, path: String, dest: String): Unit = {
-    require(path != dest,
-      "compact to a FRESH path, then swap pointers — or use " +
-        "compactInPlace for the atomic generation cutover")
-    val wm = watermark(spark, path).getOrElse(
-      throw new IllegalStateException(s"nothing committed at $path"))
-    writeCompacted(spark, path, dest, wm)
-  }
-
-  /** Atomic in-place compaction — the
-    * [[graft.dedup.UrlSeen.compactInPlace]] generation-cutover
-    * contract over the archive index. Returns the new generation. */
-  def compactInPlace(spark: SparkSession, path: String,
-                     targetFiles: Int = 32): Long = {
-    val wm = watermark(spark, path).getOrElse(
-      throw new IllegalStateException(s"nothing committed at $path"))
-    graft.core.DeltaLog.compactCutover(spark, path)(
-      writeCompacted(spark, path, _, wm, targetFiles))
-  }
-
-  /** Self-maintenance for the append loop — the
-    * [[graft.dedup.UrlSeen.compactIfFragmented]] policy over the
-    * archive index. */
-  def compactIfFragmented(spark: SparkSession, path: String,
-                          maxFiles: Int = 64): Option[Long] =
-    graft.core.DeltaLog.compactIfFragmented(spark, path, maxFiles)(
-      compactInPlace(spark, path, targetFiles = (maxFiles / 2).max(1)))
-
-  private def writeCompacted(spark: SparkSession, path: String,
-                             destRoot: String, wm: Long,
-                             targetFiles: Int = 32): Unit = {
-    val rest = schema.fieldNames.toSeq.filterNot(Set("file_id", "rec_idx"))
-    // batch_id leads the struct: min() is then first-batch-wins, with
-    // the winning batch's full row carried along
-    val ordered = "batch_id" +: rest.filterNot(_ == "batch_id")
-    read(spark, path)
-      .groupBy(col("file_id"), col("rec_idx"))
-      .agg(min(struct(ordered.map(col): _*)).as("m"))
-      .select(col("file_id") +: col("rec_idx") +:
-        rest.map(f => col(s"m.$f").as(f)): _*)
-      // the compacted generation is the index's long-lived READ form:
-      // range-layout + sort it on the point-read key so a selection
-      // like `file_id IN (…)` prunes whole files via parquet min/max
-      // stats instead of scanning the full index — the layout that
-      // keeps "select 10k records out of a 100 TB archive's index"
-      // an O(selection) read
-      // bounded-file contract (the UrlSeen.writeCompacted rationale)
-      // on top of the range layout
-      .repartitionByRange(targetFiles, col("file_id"), col("rec_idx"))
-      .sortWithinPartitions(col("file_id"), col("rec_idx"))
-      .write.mode("overwrite")
-      .parquet(graft.core.DeltaLog.deltaDir(destRoot, wm))
+    if (!graft.core.DeltaLog.replayOrGuard(l, batchId, path))
+      writeDelta(Warc.cdxIndex(spark, files, fileId, payload)
+        .withColumn("batch_id", lit(batchId)), l.genRoot, batchId)
   }
 }

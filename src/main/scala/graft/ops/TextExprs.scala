@@ -681,11 +681,14 @@ object TextKernels {
   }
 
   /** Nearest-centroid argmax for the Lloyd loop: dot(v, c_j) computed
-    * left-to-right ([[vecDot]] parity), ranked under Spark's double
-    * total order (NaN greatest, -0.0 < 0.0 — `Double.compare`), ties
-    * to the HIGHEST cluster id — bit-for-bit the
+    * left-to-right ([[vecDot]] parity), ranked by `Double.compare`
+    * (NaN greatest), ties to the HIGHEST cluster id — bit-for-bit the
     * `max(struct(sim, cluster))` the crossJoin + groupBy(cid) plan
-    * computed, in one kernel call with no exchange. `ids` ascending;
+    * computed, in one kernel call with no exchange. The one place the
+    * two orders differ is signed zero — Spark's double ordering treats
+    * -0.0 == 0.0, `Double.compare` puts -0.0 first — and it cannot
+    * arise: the sum starts at +0.0, and round-to-nearest addition
+    * onto +0.0 never yields -0.0. `ids` ascending;
     * `>=` keeps the later (higher) id on ties. Dimension mismatches
     * throw (the [[vecDot]] schema-drift contract). */
   def ivfAssign(vec: ArrayData, ids: Array[Int],

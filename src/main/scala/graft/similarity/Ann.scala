@@ -196,6 +196,7 @@ object Ann {
     * the full corpus. */
   def ivfIndex(corpus: DataFrame, nClusters: Int, iters: Int = 2,
                maxTrainRows: Int = 0): (DataFrame, DataFrame) = {
+    require(nClusters >= 1, s"nClusters=$nClusters must be >= 1")
     // rows with EMPTY vectors are excluded from training AND assignment
     // (no cosine to any centroid exists — they would crash the dot
     // kernel and cannot be searched); mismatched non-empty dims still
@@ -224,6 +225,15 @@ object Ann {
     import spark.implicits._
     val seeds = train.orderBy(col("cid")).limit(nClusters)
       .select(col("v")).collect().map(_.getSeq[Double](0))
+    // with nClusters >= 1, no seed means no trainable row at all (empty
+    // corpus, or every vector empty): skip Lloyd and return both frames
+    // empty. The placeholder centroid keeps the assignment's kernel
+    // column — and so its schema — and is never evaluated: `normed` is
+    // empty
+    if (seeds.isEmpty)
+      return (normed.select(col("cid"), graft.ops.TextExprs
+          .ivfAssign(col("v"), Seq(0), Seq(Seq.empty[Double])).as("cluster")),
+        Seq.empty[(Int, Seq[Double])].toDF("cluster", "centroid"))
     // the centroid set lives as driver arrays between rounds (k×dim
     // doubles — the same tiny-materialization class as the former
     // per-round broadcast + eager checkpoint), feeding the ivf_assign

@@ -112,7 +112,13 @@ object KvConnector {
     * java.io atomic renames, and `File.listFiles` on an `hdfs://`/`s3a://`
     * URI returns null — every scan (and COUNT(*)) of a remote store
     * would silently report an EMPTY store. Remote stores go through the
-    * plain parquet source (`KvStore.read`), which speaks Hadoop FS. */
+    * plain parquet source (`KvStore.read`), which speaks Hadoop FS.
+    *
+    * Any other top-level directory fails the scan as loudly: a store
+    * laid out under another partition level (the `muprStream`
+    * `batch_id=…/salt=…` tree) would otherwise read as EMPTY — no rows
+    * and a COUNT(*) of 0. Only the connector's own `_`-prefixed
+    * staging/commit dirs and hidden `.` entries are skipped. */
   private[sources] def storeFiles(path: String): Seq[(java.io.File, Int)] = {
     schemeOf(path).foreach { s =>
       throw new IllegalArgumentException(
@@ -123,7 +129,14 @@ object KvConnector {
     val root = new java.io.File(path)
     for {
       dir <- Option(root.listFiles()).getOrElse(Array.empty).toSeq
-      if dir.isDirectory && dir.getName.startsWith("salt=")
+      if dir.isDirectory && !dir.getName.startsWith("_") &&
+        !dir.getName.startsWith(".")
+      _ = if (!dir.getName.startsWith("salt="))
+        throw new IllegalStateException(
+          s"KV store at $path contains '${dir.getName}', which is not a " +
+            "salt=N partition — graft.sources.KvSource reads only the " +
+            "flat KvStore.write layout; read partitioned trees (e.g. a " +
+            "muprStream store's batch_id=…/salt=…) with KvStore.read")
       salt = dir.getName.stripPrefix("salt=") match {
         // guard, don't toInt: a null salt written around the connector
         // leaves salt=__HIVE_DEFAULT_PARTITION__, and a raw toInt would

@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Files
 
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ingest.{CdxLog, Warc}
@@ -91,6 +91,57 @@ class CdxLogSpec extends AnyFunSuite {
       CdxLog.append(spark, rogue, col("fid"), col("payload"), dest, 1L)
     }
     assert(e.getMessage.contains("out-of-order"))
+  }
+
+  test("compaction heals a planted duplicate key to the earliest " +
+      "batch's full row") {
+    val path = Files.createTempDirectory("graft_cdxlog_d").toString
+    CdxLog.append(spark, shards(0L until 3L),
+      col("fid"), col("payload"), path, 0L)
+    val orig = CdxLog.read(spark, path).where(col("file_id") === 1L)
+      .collect()(0)
+    // a rogue row for (1, 0) under a later batch whose every other field
+    // sorts BELOW the original: a per-column min would splice the two
+    CdxLog.read(spark, path).where(col("file_id") === 1L)
+      .select(col("file_id"), col("rec_idx"), lit(-1L).as("offset"),
+        lit(-1L).as("length"), lit(-1).as("member_ord"),
+        lit("").as("warc_type"), lit("").as("record_id"),
+        lit("").as("target_uri"), lit("").as("date_s"),
+        lit(9L).as("batch_id"))
+      .write.parquet(graft.core.DeltaLog.deltaDir(path, 9L))
+    assert(CdxLog.health(spark, path).maxList == 2)
+    val dest = Files.createTempDirectory("graft_cdxlog_d2").toString
+    CdxLog.compact(spark, path, dest)
+    val healed = CdxLog.read(spark, dest)
+    assert(healed.count() == 3)
+    assert(healed.where(col("file_id") === 1L).collect().toSeq === Seq(orig))
+    assert(CdxLog.watermark(spark, dest) === Some(9L))
+  }
+
+  test("the compacted generation is range-laid-out on file_id: the " +
+      "files' file_id ranges do not overlap") {
+    val path = Files.createTempDirectory("graft_cdxlog_r").toString
+    // interleaved batches, so every delta spans the whole file_id range
+    for (b <- 0L until 4L)
+      CdxLog.append(spark, shards((0L until 40L).filter(_ % 4 == b)),
+        col("fid"), col("payload"), path, b)
+    assert(CdxLog.compactInPlace(spark, path, targetFiles = 4) === 1L)
+    val l = graft.core.DeltaLog.listing(spark, path)
+    assert(l.deltas.size == 1)
+    val dir = new org.apache.hadoop.fs.Path(l.deltas.head.dir).toUri.getPath
+    val files = new java.io.File(dir).listFiles()
+      .filter(_.getName.endsWith(".parquet")).map(_.getPath).toSeq
+    assert(files.size > 1, s"expected a multi-file generation: $files")
+    val ranges = files.map { f =>
+      val ids = spark.read.parquet(f).select(col("file_id")).as[Long]
+        .collect().toSeq
+      assert(ids === ids.sorted, s"$f is not sorted on file_id")
+      (ids.min, ids.max)
+    }.sortBy(_._1)
+    ranges.zip(ranges.tail).foreach { case ((_, hi), (lo, _)) =>
+      assert(hi < lo, s"overlapping file_id ranges: $ranges")
+    }
+    assert(ranges.map(_._1).min == 0L && ranges.map(_._2).max == 39L)
   }
 
   test("crash safety: an uncommitted delta (no _SUCCESS) is invisible " +

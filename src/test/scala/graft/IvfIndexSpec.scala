@@ -35,6 +35,19 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(indexed === direct)
   }
 
+  test("an empty training set yields empty frames with the usual schemas") {
+    val (q, c) = qc
+    val (assign, cents) = Ann.ivfIndex(c, nClusters = 4)
+    val noRows = c.where(lit(false))
+    val allEmpty = c.withColumn("cvec", slice(col("cvec"), 1, 0))
+    for (corpus <- Seq(noRows, allEmpty); iters <- Seq(0, 2)) {
+      val (a, z) = Ann.ivfIndex(corpus, nClusters = 4, iters = iters)
+      assert(a.schema === assign.schema && z.schema === cents.schema)
+      assert(a.count() === 0L && z.count() === 0L)
+      assert(Ann.ivfTopK(q, corpus, k = 3, nClusters = 4).count() === 0L)
+    }
+  }
+
   test("append: grown lists stay exact (all-probe equals brute force)") {
     val (q, c) = qc
     val half = c.where(col("cid") % 2 === 0)

@@ -216,6 +216,23 @@ class KvConnectorSpec extends AnyFunSuite {
     assert(entries.forall(_.startsWith("salt=")), s"stray entries: $entries")
   }
 
+  test("a streaming store (batch_id=…/salt=…) fails the scan and the " +
+      "COUNT(*) loudly instead of reading as empty") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_stream").toString
+    // the muprStream layout: one batch_id=… partition above the salts
+    KvStore.write(packedKv, s"$dir/batch_id=0")
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString(" / ")
+    val conn = spark.read.format("graft.sources.KvSource").load(dir)
+    for (action <- Seq[DataFrame => Any](_.collect(), _.count())) {
+      val msg = messages(intercept[Exception](action(conn)))
+      assert(msg.contains("batch_id=0") && msg.contains("KvStore.read"), msg)
+    }
+    // the parquet source reads the same tree (partition discovery)
+    assert(KvStore.read(spark, dir).count() === packedKv.count())
+  }
+
   test("DSv2-written files are rowKey-sorted (row-group pruning works)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_ws").toString
     packedKv.write.format("graft.sources.KvSource")

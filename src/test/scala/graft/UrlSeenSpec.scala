@@ -115,6 +115,27 @@ class UrlSeenSpec extends AnyFunSuite {
     assert(hc.keys === 3L && hc.files < h2.files && hc.skew === 1.0)
   }
 
+  test("compaction heals an out-of-contract duplicate URL to the " +
+      "earliest batch's full row") {
+    val path = tmp()
+    annotate(Seq((5L, "https://a.example/1"),
+      (6L, "https://a.example/2")), path, 1L)
+    // a rogue writer plants url 1 again under a LATER batch but with a
+    // SMALLER first_doc: a per-column min would splice (1, 0); the heal
+    // must keep batch 1's row whole
+    UrlSeen.read(spark, path).where(col("url_canon") === "https://a.example/1")
+      .select(col("url_canon"), lit(9L).as("first_seen_batch"),
+        lit(0L).as("first_doc"))
+      .write.parquet(path + "/delta-b9")
+    assert(UrlSeen.health(spark, path).maxList === 2L)
+    val dest = tmp()
+    UrlSeen.compact(spark, path, dest)
+    assert(stateSet(dest) === Set(
+      ("https://a.example/1", 1L, 5L), ("https://a.example/2", 1L, 6L)))
+    assert(UrlSeen.health(spark, dest).maxList === 1L)
+    assert(UrlSeen.watermark(spark, dest) === Some(9L))
+  }
+
   test("unparseable URLs drop; cold read is empty with schema") {
     val path = tmp()
     val empty = UrlSeen.read(spark, path)
