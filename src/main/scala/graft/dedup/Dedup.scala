@@ -40,6 +40,8 @@ import graft.text.TextOps
   */
 object Dedup {
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   /** Distinct word n-gram shingles of the normalized text (native
     * kernel — see [[graft.ops.TextKernels.wordNgrams]]). */
   def shingles(text: Column, n: Int = 2): Column =
@@ -112,15 +114,58 @@ object Dedup {
     * (content class, band), NEVER per document. Exposed as the seam
     * for the duplicate-flood proportionality spec: the band join's
     * input row count must stay O(distinct classes), whatever the
-    * duplicate multiplicity. `classes` is (cls, sh). */
-  private[graft] def bandedClasses(classes: DataFrame, k: Int,
-                                   bands: Int): DataFrame = {
-    val r = k / bands
+    * duplicate multiplicity. `classes` is (`id`, sh); the persistent
+    * index stores the same rows keyed by doc_id. */
+  private[graft] def bandedClasses(classes: DataFrame, k: Int, bands: Int,
+                                   id: String = "cls"): DataFrame =
     classes
       .withColumn("sig", minhashSignature(col("sh"), k))
-      .select(col("cls"), posexplode(bandKeys(col("sig"), bands, r)))
+      .select(col(id), posexplode(bandKeys(col("sig"), bands, k / bands)))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bandKey")
+
+  /** The exact-duplicate collapse of a keyed (…, sh, cls) frame: one
+    * (cls, sh) row per content class — first(sh) is deterministic IN
+    * VALUE under set-Jaccard: every member of a class carries the same
+    * shingle set (sorted-join equality), so signature, bands, and
+    * verify read identically whichever member's array is kept — and
+    * the `members` columns of every classed row. */
+  private def contentClasses(keyed: DataFrame,
+                             members: String*): (DataFrame, DataFrame) = {
+    val classed = keyed.where(col("cls").isNotNull)
+    (classed.groupBy(col("cls")).agg(first(col("sh")).as("sh"))
+      .localCheckpoint(false), classed.select(members.map(col): _*))
+  }
+
+  /** Banded candidate pairs of `classes` (cls, sh) verified with exact
+    * Jaccard ONCE PER CLASS PAIR — m·n duplicate copies of a near-dup
+    * pair cost one verification, not m·n. (cls_a < cls_b, jaccard). */
+  private def verifiedClassPairs(classes: DataFrame, k: Int, bands: Int,
+                                 threshold: Double): DataFrame = {
+    val banded = pinJoinParallelism(bandedClasses(classes, k, bands),
+      col("band"), col("bandKey"))
+    // merge-pinned: both sides canonicalize onto ONE banded-class
+    // exchange (AQE ReusedExchange → the minhash kernel runs once),
+    // and the exploded band frame is never broadcast
+    val cands = banded.select(col("band"), col("bandKey"), col("cls").as("cls_a"))
+      .hint("merge")
+      .join(banded.select(col("band"), col("bandKey"), col("cls").as("cls_b")),
+        Seq("band", "bandKey"))
+      .where(col("cls_a") < col("cls_b"))
+      .select(col("cls_a"), col("cls_b"))
+      .dropDuplicates("cls_a", "cls_b")
+    // merge-pinned: the class frame is one row per DISTINCT document —
+    // corpus-scale — and the static post-checkpoint estimate would
+    // happily broadcast it at small SF, a plan that cannot survive
+    // production scale (the exactCanonical discipline)
+    cands
+      .join(classes.select(col("cls").as("cls_a"), col("sh").as("sh_a"))
+        .hint("merge"), Seq("cls_a"))
+      .join(classes.select(col("cls").as("cls_b"), col("sh").as("sh_b"))
+        .hint("merge"), Seq("cls_b"))
+      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
+      .where(col("jaccard") >= threshold)
+      .select(col("cls_a"), col("cls_b"), col("jaccard"))
   }
 
   /** The session's resolved shuffle parallelism — the already-parsed
@@ -161,7 +206,11 @@ object Dedup {
     if (cached.length == rddIds.length && cached.nonEmpty)
       BigInt(cached.map(i => i.memSize + i.diskSize).sum)
     else plan.stats.sizeInBytes
-  }.getOrElse(BigInt(Long.MaxValue))
+  }.recover { case e =>
+    log.warn(s"planBytes: no size estimate ($e) — the width clamp " +
+      "falls back to the full shuffle parallelism")
+    BigInt(Long.MaxValue)
+  }.get
 
   /** Width for a restore-parallelism repartition: the configured
     * shuffle parallelism CLAMPED by a bytes-per-partition floor
@@ -194,12 +243,11 @@ object Dedup {
       else df.sparkSession.conf
         .get("spark.graft.spread.partitionBytesFloor", "65536")
         .toLong.max(1L))
-    val byBytes = ((planBytes(df) + floor - 1) / floor)
-      .min(BigInt(parts)).toInt
+    val bytes = planBytes(df)
+    val byBytes = ((bytes + floor - 1) / floor).min(BigInt(parts)).toInt
     val w = math.min(parts, math.max(byBytes, atLeast))
-    if (sys.env.contains("SPARK_GRAFT_WIDTH_DEBUG"))
-      System.err.println(s"[scaledWidth] bytes=${planBytes(df)} " +
-        s"atLeast=$atLeast -> $w\n" +
+    if (log.isDebugEnabled)
+      log.debug(s"scaledWidth bytes=$bytes atLeast=$atLeast -> $w\n" +
         df.queryExecution.logical.treeString.linesIterator.take(8)
           .mkString("\n"))
     w
@@ -297,42 +345,8 @@ object Dedup {
       .withColumn("cls", shingleClassKey(col("sh")))
       .transform(graft.core.PlanTrace.checkpoint(_, eager = false,
         "minhash shingle classes (doc_id, sh, cls)"))
-    // first(sh) is deterministic IN VALUE under set-Jaccard: every
-    // member of a class carries the same shingle set (sorted-join
-    // equality), so signature, bands, and verify read identically
-    // whichever member's array is kept
-    val classes = keyed.where(col("cls").isNotNull)
-      .groupBy(col("cls"))
-      .agg(first(col("sh")).as("sh"))
-      .localCheckpoint(false)
-    val members = keyed.where(col("cls").isNotNull)
-      .select(col("doc_id"), col("cls"))
-    val banded = pinJoinParallelism(bandedClasses(classes, k, bands),
-      col("band"), col("bandKey"))
-    // merge-pinned: both sides canonicalize onto ONE banded-class
-    // exchange (AQE ReusedExchange → the minhash kernel runs once),
-    // and the exploded band frame is never broadcast
-    val cands = banded.select(col("band"), col("bandKey"), col("cls").as("cls_a"))
-      .hint("merge")
-      .join(banded.select(col("band"), col("bandKey"), col("cls").as("cls_b")),
-        Seq("band", "bandKey"))
-      .where(col("cls_a") < col("cls_b"))
-      .select(col("cls_a"), col("cls_b"))
-      .dropDuplicates("cls_a", "cls_b")
-    // exact-Jaccard verify ONCE PER CLASS PAIR — m·n duplicate copies
-    // of a near-dup pair cost one verification, not m·n
-    // merge-pinned: the class frame is one row per DISTINCT document —
-    // corpus-scale — and the static post-checkpoint estimate would
-    // happily broadcast it at small SF, a plan that cannot survive
-    // production scale (the exactCanonical discipline)
-    val classPairs = cands
-      .join(classes.select(col("cls").as("cls_a"), col("sh").as("sh_a"))
-        .hint("merge"), Seq("cls_a"))
-      .join(classes.select(col("cls").as("cls_b"), col("sh").as("sh_b"))
-        .hint("merge"), Seq("cls_b"))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("cls_a"), col("cls_b"), col("jaccard"))
+    val (classes, members) = contentClasses(keyed, "doc_id", "cls")
+    val classPairs = verifiedClassPairs(classes, k, bands, threshold)
     // exact duplicates score Jaccard exactly 1.0 — a (pathological)
     // threshold above that excludes them, decided at plan time
     expandClassPairs(members, classPairs, "jaccard",
@@ -382,10 +396,14 @@ object Dedup {
     * the 32-hex digest, so each side shuffles exactly once and no text
     * payload moves at all. */
   def exactAgainstExisting(batch: DataFrame, existing: DataFrame,
-                           id: Column, text: Column): DataFrame = {
-    val b = batch.select(id.as("doc_id"), md5(text).as("__h"))
-    val e = existing.select(id.as("doc_id"), md5(text).as("__h"))
-      .groupBy(col("__h")).agg(min(col("doc_id")).as("dup_of"))
+                           id: Column, text: Column): DataFrame =
+    dupOf(batch.select(id.as("doc_id"), md5(text).as("__h")),
+      existing.select(id.as("doc_id"), md5(text).as("__h")))
+
+  /** (doc_id, dup_of, is_new) of a hashed (doc_id, __h) batch against
+    * the hashed existing rows. */
+  private def dupOf(b: DataFrame, existing: DataFrame): DataFrame = {
+    val e = existing.groupBy(col("__h")).agg(min(col("doc_id")).as("dup_of"))
       .withColumnRenamed("__h", "__eh")
     // null-SAFE hash join: md5(null) is null, and a plain equi-join
     // would report every null-text batch doc is_new even when the
@@ -417,17 +435,11 @@ object Dedup {
     import graft.ops.BloomOps
     val b = batch.select(id.as("doc_id"), md5(text).as("__h"))
     val bf = BloomOps.build(b, col("__h"), expectedBatchDocs, fpp)
-    val e = existing.select(id.as("doc_id"), md5(text).as("__h"))
+    dupOf(b, existing.select(id.as("doc_id"), md5(text).as("__h"))
       // null hashes pass the prefilter: mightContain(null) is null and a
       // bare where() would drop the null-text corpus rows the null-safe
-      // join below exists to match
-      .where(col("__h").isNull || BloomOps.mightContain(bf, col("__h")))
-      .groupBy(col("__h")).agg(min(col("doc_id")).as("dup_of"))
-      .withColumnRenamed("__h", "__eh")
-    // null-safe join — see [[exactAgainstExisting]]
-    b.join(e, col("__h") <=> col("__eh"), "left")
-      .select(col("doc_id"), col("dup_of"),
-        col("dup_of").isNull.cast("int").as("is_new"))
+      // join exists to match
+      .where(col("__h").isNull || BloomOps.mightContain(bf, col("__h"))))
   }
 
   /** Near-dup pairs BETWEEN two corpora (batch × existing) via the same
@@ -462,33 +474,8 @@ object Dedup {
       .select(col("doc_id"), col("isNew"), shingles(col("__t")).as("sh"))
       .withColumn("cls", shingleClassKey(col("sh")))
       .localCheckpoint(false)
-    val classes = keyed.where(col("cls").isNotNull)
-      .groupBy(col("cls"))
-      .agg(first(col("sh")).as("sh"))
-      .localCheckpoint(false)
-    val members = keyed.where(col("cls").isNotNull)
-      .select(col("doc_id"), col("isNew"), col("cls"))
-    val banded = pinJoinParallelism(bandedClasses(classes, k, bands),
-      col("band"), col("bandKey"))
-    val cands = banded.select(col("band"), col("bandKey"), col("cls").as("cls_a"))
-      .hint("merge")
-      .join(banded.select(col("band"), col("bandKey"), col("cls").as("cls_b")),
-        Seq("band", "bandKey"))
-      .where(col("cls_a") < col("cls_b"))
-      .select(col("cls_a"), col("cls_b"))
-      .dropDuplicates("cls_a", "cls_b")
-    // merge-pinned: the class frame is one row per DISTINCT document —
-    // corpus-scale — and the static post-checkpoint estimate would
-    // happily broadcast it at small SF, a plan that cannot survive
-    // production scale (the exactCanonical discipline)
-    val classPairs = cands
-      .join(classes.select(col("cls").as("cls_a"), col("sh").as("sh_a"))
-        .hint("merge"), Seq("cls_a"))
-      .join(classes.select(col("cls").as("cls_b"), col("sh").as("sh_b"))
-        .hint("merge"), Seq("cls_b"))
-      .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
-      .where(col("jaccard") >= threshold)
-      .select(col("cls_a"), col("cls_b"), col("jaccard"))
+    val (classes, members) = contentClasses(keyed, "doc_id", "isNew", "cls")
+    val classPairs = verifiedClassPairs(classes, k, bands, threshold)
     def side(isNew: Int, as: String, idAs: String) =
       members.where(col("isNew") === isNew)
         .select(col("cls").as(as), col("doc_id").as(idAs))
@@ -513,240 +500,121 @@ object Dedup {
 
   // ── Persistent MinHash LSH index ─────────────────────────────────────
 
-  private def idxName(path: String, part: String): String =
-    graft.sources.BucketedTables.tableName("graft_mhidx", path, part)
+  /** MinHash on the shared lifecycle ([[graft.sources.BucketedIndex]]):
+    * compaction re-buckets the healed stored shingles and re-derives
+    * bands — one index-sized pass, no corpus scan, no re-tokenize. */
+  private object MinhashStore extends graft.sources.BucketedIndex {
+    import graft.sources.BucketedTables.Part
+    val prefix = "graft_mhidx"
+    val tables = Seq(Part("bands", "bandKey", Seq("bandKey")),
+      Part("shingles", "doc_id"))
+    val carried = Nil
+    override protected def compactRows(spark: SparkSession, cur: String,
+        p: org.apache.spark.sql.Row, w: Writer): Unit =
+      writeTables(w, spark.read.parquet(s"$cur/shingles").dropDuplicates(),
+        p.getAs[Int]("k"), p.getAs[Int]("bands"))
+  }
 
-  /** Resolve a minhash index path to its current generation: the
-    * highest-numbered `gen-*` subdir whose `params/_SUCCESS` marker
-    * exists, else the path itself (the legacy flat layout reads as
-    * generation 0). `params` is written LAST by the builder, so its
-    * `_SUCCESS` — one atomic filesystem create — commits the whole
-    * three-table generation: the [[graft.core.DeltaLog.compactCutover]]
-    * discipline applied to the bucketed-table store. A crashed
-    * [[compactMinhashIndexInPlace]] leaves an orphan generation with no
-    * params marker — invisible; the retry overwrites it. */
-  private def minhashGenValid(fs: org.apache.hadoop.fs.FileSystem,
-                              p: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(p, "params/_SUCCESS"))
+  /** Store the (doc_id, sh) frame, then bands derived from the WRITTEN
+    * shingles — one pass over the input however many tables. */
+  private def writeTables(w: MinhashStore.Writer, sh: DataFrame, k: Int,
+                          bands: Int): Unit =
+    w("bands", bandedClasses(w("shingles", sh), k, bands, "doc_id"))
 
-  private def minhashGen(spark: org.apache.spark.sql.SparkSession,
-                         path: String): (Long, String) =
-    graft.core.DeltaLog.resolveGeneration(spark, path)(minhashGenValid)
-
-  /** The directory the CURRENT index generation lives in — every read
-    * and append resolves through this. */
-  def minhashIndexRoot(spark: org.apache.spark.sql.SparkSession,
-                       path: String): String = minhashGen(spark, path)._2
+  /** The CURRENT generation's directory — reads and appends use it. */
+  def minhashIndexRoot(spark: SparkSession, path: String): String =
+    MinhashStore.current(spark, path)._2
 
   /** Current index generation number (0 = legacy flat layout). */
-  def minhashIndexGeneration(spark: org.apache.spark.sql.SparkSession,
-                             path: String): Long =
-    minhashGen(spark, path)._1
+  def minhashIndexGeneration(spark: SparkSession, path: String): Long =
+    MinhashStore.current(spark, path)._1
 
   /** Materialize a standing corpus's MinHash LSH index under `path`:
     *
-    *  - `bands`:    (doc_id, band, bandKey), BUCKETED + sorted by
-    *                bandKey — the candidate join's index side reads
-    *                pre-partitioned, so querying never shuffles the
-    *                corpus-sized table (only the arriving batch moves);
+    *  - `bands`: (doc_id, band, bandKey), BUCKETED + sorted by bandKey
+    *    — the candidate join's index side reads pre-partitioned, so
+    *    querying never shuffles the corpus-sized table (only the
+    *    arriving batch moves);
     *  - `shingles`: (doc_id, sh), bucketed by doc_id — the exact-verify
-    *                point join, same property;
-    *  - `params`:   one row (k, bands, n, buckets) —
-    *                [[queryMinhashIndex]] reads its configuration from
-    *                here, so a query can never band differently than
-    *                the build, and a NEW application can re-register
-    *                the bucketed tables from the stored files
-    *                ([[graft.sources.BucketedTables.table]]).
+    *    point join, same property;
+    *  - `params`: one row (k, bands, n, buckets) — [[queryMinhashIndex]]
+    *    reads its configuration from here, so a query can never band
+    *    differently than the build, and a NEW application can
+    *    re-register the bucketed tables from the stored files
+    *    ([[graft.sources.BucketedTables.table]]).
     *
     * This is the amortization shape of rolling ingestion: the shingle +
     * signature kernels run ONCE per corpus version (one corpus scan —
     * the bands table derives from the stored shingles, not a second
     * scan), and every arriving batch pays only its own kernels plus two
     * slim joins. `buckets` must scale with the corpus (thousands at
-    * 100 TB), like every bucket count in this library.
-    *
-    * VERSIONING: write each corpus version to a FRESH path and swap the
-    * pointer at the orchestration layer once the build completes — the
-    * three tables are written sequentially, so rebuilding IN PLACE
-    * leaves a mixed-version index if the job dies mid-write. */
+    * 100 TB), like every bucket count in this library. Lifecycle and
+    * VERSIONING: [[graft.sources.BucketedIndex]]. */
   def writeMinhashIndex(docs: DataFrame, id: Column, text: Column,
                         path: String, k: Int = 24, bands: Int = 8,
                         n: Int = 2, buckets: Int = 32): Unit = {
     require(k % bands == 0, "bands must divide k")
-    writeIndexTables(docs.sparkSession,
-      docs.select(id.as("doc_id"), shingles(text, n).as("sh")),
-      path, k, bands, n, buckets)
-  }
-
-  /** The builder's write tail, shared with [[compactMinhashIndex]]:
-    * store the (doc_id, sh) frame bucketed, derive+store bands from the
-    * WRITTEN shingles (one pass over the input however many tables the
-    * index holds), record params. */
-  private def writeIndexTables(spark: org.apache.spark.sql.SparkSession,
-                               sh: DataFrame, path: String, k: Int,
-                               bands: Int, n: Int, buckets: Int): Unit = {
-    val r = k / bands
-    sh.repartition(buckets, col("doc_id"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "doc_id")
-      .option("path", s"$path/shingles")
-      .saveAsTable(idxName(path, "shingles"))
-    spark.table(idxName(path, "shingles"))
-      .withColumn("sig", minhashSignature(col("sh"), k))
-      .select(col("doc_id"), posexplode(bandKeys(col("sig"), bands, r)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandKey")
-      .repartition(buckets, col("bandKey"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "bandKey")
-      .sortBy("bandKey")
-      .option("path", s"$path/bands")
-      .saveAsTable(idxName(path, "bands"))
+    val spark = docs.sparkSession
     import spark.implicits._
-    Seq((k, bands, n, buckets)).toDF("k", "bands", "n", "buckets")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/params")
+    MinhashStore.build(spark, path, buckets,
+      Seq((k, bands, n, buckets)).toDF("k", "bands", "n", "buckets"))(
+      writeTables(_, docs.select(id.as("doc_id"), shingles(text, n).as("sh")),
+        k, bands))
   }
 
   /** Compact an appended [[writeMinhashIndex]] index into a FRESH path
-    * WITHOUT the corpus: the stored shingles table already holds every
-    * document's kernel output, so compaction re-buckets it and
-    * re-derives bands — one index-sized pass, no corpus scan, no
-    * re-tokenize. This is the response to a rising `files` count in the
-    * append telemetry ([[appendToMinhashIndex]]): many append files per
-    * bucket cost Spark its per-bucket sorted-merge trust; the compacted
-    * index holds one file per bucket again. Same pointer-swap
-    * versioning note as the builder. */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String, dest: String): Unit = {
+    * WITHOUT the corpus — the response to a rising `files` count in the
+    * append telemetry: one file per bucket again. */
+  def compactMinhashIndex(spark: SparkSession, path: String,
+                          dest: String): Unit = {
     require(path != dest,
       "compact to a FRESH path, then swap pointers — or use " +
         "compactMinhashIndexInPlace for the atomic generation cutover")
-    writeCompactedIndex(spark, minhashIndexRoot(spark, path), dest)
+    MinhashStore.compact(spark, path, dest)
   }
 
-  /** Atomic in-place compaction of an appended index: the healed tables
-    * land under `path/gen-<N+1>` and become current the instant the
-    * params `_SUCCESS` marker (the builder's LAST write) lands — the
-    * [[graft.core.DeltaIndex.compactInPlace]] cutover contract over the
-    * bucketed-table store. Readers and appends resolve through
-    * [[minhashIndexRoot]], so they see exactly the old or the new
-    * generation; a crash mid-write leaves an invisible orphan the retry
-    * overwrites. The previous generation stays on disk until
-    * [[pruneMinhashGenerations]]. Returns the new generation number. */
-  def compactMinhashIndexInPlace(spark: org.apache.spark.sql.SparkSession,
-                                 path: String): Long = {
-    val (g, root) = minhashGen(spark, path)
-    graft.core.DeltaLog.cutoverBy(spark, path, g,
-      () => minhashIndexGeneration(spark, path))(
-      writeCompactedIndex(spark, root, _))
-  }
+  /** Atomic in-place compaction into `path/gen-<N+1>` (returned); the
+    * previous generation stays until [[pruneMinhashGenerations]]. */
+  def compactMinhashIndexInPlace(spark: SparkSession, path: String): Long =
+    MinhashStore.compactInPlace(spark, path)
 
-  /** Explicit maintenance after [[compactMinhashIndexInPlace]]: delete
-    * index generations older than the previous valid one (and orphan
-    * dirs), keeping current + previous — the
-    * [[graft.core.DeltaLog.pruneGenerations]] keep-previous guarantee.
-    * Legacy flat tables at the root retire once two generation dirs
-    * cover it. Returns deleted paths. */
-  def pruneMinhashGenerations(spark: org.apache.spark.sql.SparkSession,
-                              path: String): Seq[String] =
-    graft.core.DeltaLog.pruneBy(spark, path, minhashGenValid,
-      st => Set("shingles", "bands", "params")
-        .contains(st.getPath.getName))
-
-  private def writeCompactedIndex(
-      spark: org.apache.spark.sql.SparkSession,
-      cur: String, dest: String): Unit = {
-    val p = spark.read.parquet(s"$cur/params").head()
-    // full-row dropDuplicates HEALS a replayed append (the only source
-    // of byte-identical (doc_id, sh) rows — see the appendToMinhashIndex
-    // atomicity note); legitimately distinct rows are never merged
-    writeIndexTables(spark,
-      spark.read.parquet(s"$cur/shingles").dropDuplicates(),
-      dest, p.getAs[Int]("k"), p.getAs[Int]("bands"), p.getAs[Int]("n"),
-      p.getAs[Int]("buckets"))
-  }
+  /** Maintenance after [[compactMinhashIndexInPlace]]: delete older
+    * generations and orphans, keeping current + previous. */
+  def pruneMinhashGenerations(spark: SparkSession, path: String): Seq[String] =
+    MinhashStore.prune(spark, path)
 
   /** Append an arriving batch into a standing [[writeMinhashIndex]]
     * index WITHOUT rebuilding: the batch's shingles and bands are
     * computed with the index's OWN stored params (a batch can never
     * band differently than the corpus it joins) and appended to the
     * bucketed tables — rolling ingestion pays one batch-sized kernel
-    * pass per day, not a corpus rebuild.
+    * pass per day, not a corpus rebuild. NOT atomic, NOT idempotent
+    * (two sequential table writes): [[queryMinhashIndex]] stays CORRECT
+    * over a replayed append's duplicate rows (its output dedup
+    * collapses the repeated verifies) and compaction heals them; the
+    * append and multi-file-bucket notes are
+    * [[graft.sources.BucketedIndex]]'s.
     *
-    * NOT atomic, NOT idempotent: the shingles and bands appends are two
-    * sequential jobs, so a crash between them (or an orchestrator
-    * retry of a succeeded append) leaves duplicated batch rows in the
-    * stored tables. [[queryMinhashIndex]] stays CORRECT over such a
-    * store (its output dedup collapses the repeated verifies), and
-    * [[compactMinhashIndex]] heals the storage (full-row
-    * dropDuplicates) — but pace retries at the orchestration layer:
-    * append-at-most-once per batch, compact after any doubtful run.
-    *
-    * Each append adds one file per touched bucket; co-location for the
-    * candidate join is preserved (bucket routing is by key hash), but
-    * Spark stops trusting per-bucket sort once buckets hold multiple
-    * files — after many appends, compact the index (re-run
-    * [[writeMinhashIndex]] on the union, fresh path) to restore the
-    * sorted-merge property. Requires an index with recorded buckets
-    * (anything written by this library's builder).
-    *
-    * Returns (and logs) the index's post-append
-    * [[graft.meta.PipelineMetrics.IndexHealth]] — band-list skew and
-    * file fragmentation, the rebuild/compaction signals a rolling
-    * ingestion operator watches. The probe aggregates the WHOLE index's
-    * key column (one slim column scan), so high-frequency micro-batch
-    * ingestion should pass `probeHealth = false` and pace its own
-    * [[graft.meta.PipelineMetrics.indexHealth]] calls — an O(index)
-    * probe per O(batch) append would dominate at scale. */
+    * Returns (and logs) the post-append
+    * [[graft.meta.PipelineMetrics.IndexHealth]] of the bands table —
+    * band-list skew and file fragmentation, the rebuild/compaction
+    * signals; `probeHealth = false` skips the O(index) probe. */
   def appendToMinhashIndex(docs: DataFrame, id: Column, text: Column,
                            path: String, probeHealth: Boolean = true)
-      : Option[graft.meta.PipelineMetrics.IndexHealth] = {
-    import graft.sources.BucketedTables
-    val spark = docs.sparkSession
-    // appends land in the CURRENT generation (post-compaction cutovers
-    // re-root the index under path/gen-N)
-    val root = minhashIndexRoot(spark, path)
-    val pdf = spark.read.parquet(s"$root/params")
-    val p = pdf.head()
-    val (k, bands, n) = (p.getAs[Int]("k"), p.getAs[Int]("bands"),
-      p.getAs[Int]("n"))
-    require(pdf.columns.contains("buckets"),
-      "appendToMinhashIndex needs an index with a recorded bucket count")
-    val buckets = p.getAs[Int]("buckets")
-    val r = k / bands
-    // ensure catalog registrations exist (a new application appends to
-    // re-registered external tables), with the build's exact spec
-    BucketedTables.table(spark, idxName(root, "shingles"),
-      s"$root/shingles", buckets, "doc_id")
-    BucketedTables.table(spark, idxName(root, "bands"),
-      s"$root/bands", buckets, "bandKey", Seq("bandKey"))
-    // materialize the batch's (doc_id, shingles) ONCE: the frame feeds
-    // two independent write actions (shingles table, then bands), and an
-    // unmaterialized plan would run the tokenize/shingle kernel twice
-    // over the batch text — the builder avoids this by deriving bands
-    // from the written shingles table, but an append must not re-read
-    // the whole standing table to find its own rows
-    val sig = docs.select(id.as("doc_id"), shingles(text, n).as("sh"))
-      .localCheckpoint(true)
-    sig.repartition(buckets, col("doc_id"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(buckets, "doc_id")
-      .saveAsTable(idxName(root, "shingles"))
-    sig.withColumn("sig", minhashSignature(col("sh"), k))
-      .select(col("doc_id"), posexplode(bandKeys(col("sig"), bands, r)))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bandKey")
-      .repartition(buckets, col("bandKey"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(buckets, "bandKey")
-      .sortBy("bandKey")
-      .saveAsTable(idxName(root, "bands"))
-    if (!probeHealth) None else {
-      val health = graft.meta.PipelineMetrics.indexHealth(
-        spark.table(idxName(root, "bands")), col("bandKey"), s"$root/bands")
-        .copy(generation = minhashIndexGeneration(spark, path))
-      System.err.println(s"[graft] minhash index after append: $health")
-      Some(health)
+      : Option[graft.meta.PipelineMetrics.IndexHealth] =
+    MinhashStore.append(docs.sparkSession, path, probeHealth) { (w, p) =>
+      // materialize the batch's (doc_id, shingles) ONCE: the frame feeds
+      // two independent write actions (shingles table, then bands), and
+      // an unmaterialized plan would run the tokenize/shingle kernel
+      // twice over the batch text — the builder avoids this by deriving
+      // bands from the written shingles table, but an append must not
+      // re-read the whole standing table to find its own rows
+      val sh = docs.select(id.as("doc_id"), shingles(text, p.getAs[Int]("n"))
+        .as("sh")).localCheckpoint(true)
+      w("shingles", sh)
+      w("bands", bandedClasses(sh, p.getAs[Int]("k"), p.getAs[Int]("bands"),
+        "doc_id"))
     }
-  }
 
   /** A MinHash index's driver-side resolution — stored params plus the
     * (possibly bucketed) band/shingle frames — separated from the query
@@ -761,24 +629,13 @@ object Dedup {
     * from the stored files and params. */
   def resolveMinhashIndex(spark: SparkSession,
                           path: String): ResolvedMinhashIndex = {
-    import graft.sources.BucketedTables
-    // resolve the CURRENT generation — an in-place compaction re-roots
-    // the index under path/gen-N and this is the cutover's read side
-    val root = minhashIndexRoot(spark, path)
-    val pdf = spark.read.parquet(s"$root/params")
-    val p = pdf.head()
-    val (k, bands, n) = (p.getAs[Int]("k"), p.getAs[Int]("bands"),
-      p.getAs[Int]("n"))
-    // a params file predating the bucket record degrades to plain
-    // parquet reads — correct results, bucketing advantage lost
-    val buckets = if (pdf.columns.contains("buckets"))
-      Some(p.getAs[Int]("buckets")) else None
-    ResolvedMinhashIndex(k, bands, n,
-      BucketedTables.tableOrPlain(spark,
-        idxName(root, "bands"), s"$root/bands", buckets, "bandKey",
-        Seq("bandKey")),
-      BucketedTables.tableOrPlain(spark,
-        idxName(root, "shingles"), s"$root/shingles", buckets, "doc_id"))
+    // the CURRENT generation — an in-place compaction re-roots the
+    // index under path/gen-N and this is the cutover's read side
+    val (root, params, t) = MinhashStore.open(spark, path)
+    val p = params.getOrElse(
+      throw new IllegalArgumentException(s"no MinHash index params at $root"))
+    ResolvedMinhashIndex(p.getAs[Int]("k"), p.getAs[Int]("bands"),
+      p.getAs[Int]("n"), t("bands"), t("shingles"))
   }
 
   /** Near-dup pairs of an arriving batch against a standing
@@ -808,24 +665,14 @@ object Dedup {
                                 idx: ResolvedMinhashIndex,
                                 threshold: Double = 0.8): DataFrame = {
     val ResolvedMinhashIndex(k, bands, n, bandsTable, shinglesTable) = idx
-    val r = k / bands
     val keyed = batch.select(id.as("doc_id"), shingles(text, n).as("sh"))
       .withColumn("cls", shingleClassKey(col("sh")))
       .localCheckpoint(false)
-    val classes = keyed.where(col("cls").isNotNull)
-      .groupBy(col("cls"))
-      .agg(first(col("sh")).as("sh"))
-      .localCheckpoint(false)
-    val members = keyed.where(col("cls").isNotNull)
-      .select(col("doc_id"), col("cls"))
-    val bb = classes
-      .withColumn("sig", minhashSignature(col("sh"), k))
-      .select(col("cls"),
-        explode(bandKeys(col("sig"), bands, r)).as("bandKey"))
+    val (classes, members) = contentClasses(keyed, "doc_id", "cls")
     // the candidate join runs on bandKey alone (the band index is
     // folded into the hash), so the bucketed index side joins WITHOUT
     // a shuffle — only the slim per-class band frame moves
-    val cands = bb
+    val cands = bandedClasses(classes, k, bands).select(col("cls"), col("bandKey"))
       .join(bandsTable.select(col("bandKey"), col("doc_id").as("id_b")),
         Seq("bandKey"))
       .select(col("cls"), col("id_b"))
@@ -1407,7 +1254,7 @@ object Dedup {
       i += 1
     }
     if (!converged)
-      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      log.warn(
         s"canonicalFromPairs did not converge in $maxIters rounds — " +
           "unconverged components keep split labels; raise maxIters")
     // the converged frame is a star: ONE (node, component-min) edge per

@@ -123,12 +123,14 @@ case class VecSumDecimalAggregate(
 
   override def createAggregationBuffer(): Array[JBig] = Array.empty
 
-  // null slot = a component whose cast or sum became NULL (non-finite
-  // input, precision-38 overflow) — NULL is absorbing for +, exactly
-  // like sum() over a group where cast() nulled a row... except sum()
-  // SKIPS nulls; mirror that: null input-components are skipped, the
-  // slot only goes (and stays) null when every contribution was null
-  // or the running total overflowed.
+  // null slot = no non-null contribution yet: sum() SKIPS the rows
+  // whose cast() went NULL (non-finite input), so null components are
+  // skipped. A precision-38 OVERFLOW is different — sum() keeps an
+  // overflowed group NULL whatever follows — so it is its own marker
+  // ([[VecSumDecimalAggregate.Overflow]]), absorbing for +, carried
+  // through serialize/deserialize, and evaluated to NULL.
+  import VecSumDecimalAggregate.Overflow
+
   private def castComponent(d: Double): JBig =
     if (java.lang.Double.isNaN(d) || java.lang.Double.isInfinite(d)) null
     else {
@@ -137,11 +139,12 @@ case class VecSumDecimalAggregate(
     }
 
   private def addSlot(a: JBig, b: JBig): JBig =
-    if (b == null) a
+    if ((a eq Overflow) || (b eq Overflow)) Overflow
+    else if (b == null) a
     else if (a == null) b
     else {
       val s = a.add(b)
-      if (s.precision - s.scale > 20) null else s // sum overflow -> null
+      if (s.precision - s.scale > 20) Overflow else s
     }
 
   private def add(buf: Array[JBig], v: Array[JBig]): Array[JBig] =
@@ -182,7 +185,7 @@ case class VecSumDecimalAggregate(
 
   override def eval(buf: Array[JBig]): Any =
     new GenericArrayData(buf.map(b =>
-      if (b == null) null
+      if (b == null || (b eq Overflow)) null
       else org.apache.spark.sql.types.Decimal(scala.math.BigDecimal(b), 38, 18))
       .asInstanceOf[Array[Any]])
 
@@ -192,6 +195,7 @@ case class VecSumDecimalAggregate(
     out.writeInt(buf.length)
     buf.foreach { b =>
       if (b == null) out.writeInt(-1)
+      else if (b eq Overflow) out.writeInt(-2)
       else {
         val bytes = b.unscaledValue().toByteArray
         out.writeInt(bytes.length)
@@ -208,7 +212,8 @@ case class VecSumDecimalAggregate(
     val n = in.readInt()
     Array.fill(n) {
       val len = in.readInt()
-      if (len < 0) null
+      if (len == -2) Overflow
+      else if (len < 0) null
       else {
         val b = new Array[Byte](len)
         in.readFully(b)
@@ -223,6 +228,12 @@ case class VecSumDecimalAggregate(
     copy(inputAggBufferOffset = newOffset)
   override protected def withNewChildrenInternal(newChildren: IndexedSeq[Expression]): VecSumDecimalAggregate =
     copy(child = newChildren.head)
+}
+
+object VecSumDecimalAggregate {
+  /** The overflowed-slot marker, compared by reference: no arithmetic
+    * result is ever this instance. */
+  private[ops] val Overflow = new java.math.BigDecimal(0)
 }
 
 object VecSumAggregate {

@@ -118,19 +118,20 @@ object Ann {
         (intDot /
           (sqrt(aggregate(col("ccodes"), lit(0L), (a, x) => a + x * x)
             .cast("double")) + lit(1e-12))).as("iscore"))
-    val pw = Window.partitionBy(col("qid"))
-      .orderBy(col("iscore").desc, col("cid"))
-    val survivors = pre.withColumn("prn", row_number().over(pw))
-      .where(col("prn") <= k * overscan)
-      .select(col("qid"), col("cid"))
-    // survivors are ids-only; floats re-attach here — the float store is
-    // point-joined for k·overscan rows per query, never scanned
+    reRank(pre, k * overscan, corpus, queries, k, roundTo)
+  }
+
+  /** The exact re-rank tail of every prefilter variant: the top `n`
+    * (qid, cid) per query by `iscore`; floats re-attach from `corpus`
+    * (cid, cvec) for those rows only — the float store is point-joined,
+    * never scanned — then [[rankTopK]]. */
+  private[similarity] def reRank(scored: DataFrame, n: Int, corpus: DataFrame,
+      queries: DataFrame, k: Int, roundTo: Int): DataFrame =
     rankTopK(
-      survivors
+      topPerQuery(scored, "iscore", n).select(col("qid"), col("cid"))
         .join(corpus.select(col("cid"), col("cvec")), Seq("cid"))
         .join(broadcast(queries.select(col("qid"), col("qvec"))), Seq("qid")),
       k, roundTo)
-  }
 
   /** Sign-bit LSH signature: one bit per hyperplane = sign of the dot
     * product with a deterministic hash-derived hyperplane (no RNG state
@@ -312,17 +313,27 @@ object Ann {
     * MISMATCHED dimensions still throw ([[graft.ops.TextKernels.vecDot]]'s
     * schema-drift contract). */
   private[similarity] def rankTopK(cands: DataFrame, k: Int,
-                                   roundTo: Int): DataFrame = {
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col("cid"))
-    cands
+                                   roundTo: Int): DataFrame =
+    topPerQuery(cands
       .where(size(col("qvec")) > 0 && size(col("cvec")) > 0)
       .select(col("qid"), col("cid"),
         round(cosine(asDouble(col("qvec")), asDouble(col("cvec"))), roundTo)
-          .as("sim"))
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .select(col("qid"), col("cid"), col("sim"))
+          .as("sim")), "sim", k)
+
+  /** The per-query top-`n` of (qid, cid, `score`) by (`score` desc,
+    * cid), each (qid, cid) once — after a replayed append an index
+    * stores rows twice, and one cid must not take two slots and push
+    * out a true neighbour: dense_rank ranks the copies alike, so the
+    * cut admits `n` distinct cids, and the dedup after it rides the
+    * window's qid partitioning (no extra exchange). The `<= n` rank
+    * filter keeps Spark's partial WindowGroupLimit below the exchange. */
+  private[similarity] def topPerQuery(df: DataFrame, score: String,
+                                      n: Int): DataFrame = {
+    val w = Window.partitionBy(col("qid")).orderBy(col(score).desc, col("cid"))
+    df.withColumn("rn", dense_rank().over(w))
+      .where(col("rn") <= n)
+      .select(col("qid"), col("cid"), col(score))
+      .dropDuplicates("qid", "cid")
   }
 
   /** IVF-bucketed approximate top-k: probe the `nprobe` nearest clusters
@@ -348,8 +359,30 @@ object Ann {
 
   // ── Persistent IVF index ─────────────────────────────────────────────
 
-  private def ivfName(path: String): String =
-    graft.sources.BucketedTables.tableName("graft_ivfidx", path, "lists")
+  /** IVF on the shared lifecycle ([[graft.sources.BucketedIndex]]). */
+  private object IvfStore extends graft.sources.BucketedIndex {
+    val prefix = "graft_ivfidx"
+    val tables = Seq(graft.sources.BucketedTables.Part("lists", "cluster"))
+    val carried = Seq("centroids")
+  }
+
+  /** (cid, cluster, cvec): each batch vector assigned to its nearest
+    * STORED centroid at `root` — the append face of [[ivfIndex]]'s
+    * final assignment, for IVF and IVF+PQ: the same ivf_assign kernel
+    * over the same centroids (parquet round-trips doubles exactly)
+    * puts it in exactly the list a rebuild would. EMPTY vectors are
+    * excluded, as in the build and query surfaces: a missing embedding
+    * is routine dirty data and must not kill the ingest (non-empty dim
+    * mismatches still throw). */
+  private[similarity] def assignToStored(batch: DataFrame, root: String)
+      : DataFrame = {
+    val cents = batch.sparkSession.read.parquet(s"$root/centroids")
+      .orderBy(col("cluster")).collect()
+    batch.where(size(col("cvec")) > 0).select(col("cid"),
+      graft.ops.TextExprs.ivfAssign(normalize(asDouble(col("cvec"))),
+        cents.map(_.getInt(0)).toSeq, cents.map(_.getSeq[Double](1)).toSeq)
+        .as("cluster"), col("cvec"))
+  }
 
   /** Materialize an IVF index for a standing corpus under `path`:
     * `lists` — the inverted lists (cid, cluster, cvec) BUCKETED by
@@ -362,117 +395,47 @@ object Ann {
     * the probe ranking and two slim joins. `buckets` scales with the
     * corpus, and at very large scale the stored `cvec` would be the
     * [[Quantize]]/[[Pq]] compressed form with a float re-rank — here it
-    * keeps floats for exactness within probed lists.
-    *
-    * VERSIONING: as with [[graft.dedup.Dedup.writeMinhashIndex]], write
-    * each corpus version to a FRESH path and swap pointers after the
-    * build — the tables are written sequentially, not atomically. */
+    * keeps floats for exactness within probed lists. Lifecycle and
+    * VERSIONING: [[graft.sources.BucketedIndex]]. */
   def writeIvfIndex(corpus: DataFrame, path: String, nClusters: Int = 16,
                     iters: Int = 2, buckets: Int = 16,
                     maxTrainRows: Int = 0): Unit = {
-    import org.apache.spark.sql.SaveMode
     val spark = corpus.sparkSession
-    val (assign, centroids) = ivfIndex(corpus, nClusters, iters, maxTrainRows)
-    corpus.join(assign, Seq("cid"))
-      .select(col("cid"), col("cluster"), col("cvec"))
-      .repartition(buckets, col("cluster"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "cluster")
-      .option("path", s"$path/lists")
-      .saveAsTable(ivfName(path))
-    centroids.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
     import spark.implicits._
-    Seq(Tuple1(buckets)).toDF("buckets")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/params")
-  }
-
-  /** Append a vector batch into a standing [[writeIvfIndex]] index
-    * WITHOUT retraining: new vectors are assigned to the STORED
-    * centroids (standard IVF rolling ingestion — the coarse clustering
-    * is frozen at build time) and appended to the bucketed lists.
-    * Exactness of query results over the grown corpus is unchanged —
-    * probes rank against the same centroids and the per-list scan is
-    * exact cosine — only recall-vs-nprobe drifts as the data
-    * distribution moves away from the training snapshot; re-train to a
-    * fresh path when it does. Same multi-file-bucket note as
-    * [[graft.dedup.Dedup.appendToMinhashIndex]].
-    *
-    * Returns (and logs) the index's post-append
-    * [[graft.meta.PipelineMetrics.IndexHealth]]: rising list skew IS
-    * the "distribution drifted, re-train" signal quantified, and the
-    * file count paces compaction. The probe scans the whole lists
-    * table's key column — high-frequency micro-batch ingestion should
-    * pass `probeHealth = false` and pace its own
-    * [[graft.meta.PipelineMetrics.indexHealth]] calls. */
-  def appendToIvfIndex(batch: DataFrame, path: String,
-                       probeHealth: Boolean = true)
-      : Option[graft.meta.PipelineMetrics.IndexHealth] = {
-    import org.apache.spark.sql.SaveMode
-    import graft.sources.BucketedTables
-    val spark = batch.sparkSession
-    val buckets = BucketedTables.readBuckets(spark, s"$path/params")
-      .getOrElse(throw new IllegalArgumentException(
-        "appendToIvfIndex needs an index with a recorded bucket count"))
-    BucketedTables.table(spark, ivfName(path), s"$path/lists", buckets,
-      "cluster")
-    val centroids = spark.read.parquet(s"$path/centroids")
-    // tie-break on the HIGHEST cluster id, matching the build's
-    // max(struct(sim, cluster)) assignment — an appended vector lands in
-    // exactly the list a rebuild would put it in
-    val assignW = Window.partitionBy(col("cid"))
-      .orderBy(col("csim").desc, col("cluster").desc)
-    // EMPTY vectors are excluded, matching the build ([[ivfIndex]]) and
-    // query surfaces: an appended batch is the same routine-dirty corpus
-    // data, and a missing embedding must not kill the ingest job (while
-    // non-empty dim mismatches still throw — the schema-drift contract)
-    batch.where(size(col("cvec")) > 0)
-      .select(col("cid"), normalize(asDouble(col("cvec"))).as("v"),
-        col("cvec"))
-      .crossJoin(broadcast(centroids))
-      .select(col("cid"), col("cvec"), col("cluster"),
-        dot(col("v"), col("centroid")).as("csim"))
-      .withColumn("rn", row_number().over(assignW))
-      .where(col("rn") === 1)
-      .select(col("cid"), col("cluster"), col("cvec"))
-      .repartition(buckets, col("cluster"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(buckets, "cluster")
-      .saveAsTable(ivfName(path))
-    if (!probeHealth) None else {
-      val health = graft.meta.PipelineMetrics.indexHealth(
-        spark.table(ivfName(path)), col("cluster"), s"$path/lists")
-      System.err.println(s"[graft] ivf index after append: $health")
-      Some(health)
+    val (assign, centroids) = ivfIndex(corpus, nClusters, iters, maxTrainRows)
+    IvfStore.build(spark, path, buckets,
+        Seq(Tuple1(buckets)).toDF("buckets")) { w =>
+      w("lists", corpus.join(assign, Seq("cid"))
+        .select(col("cid"), col("cluster"), col("cvec")))
+      w.plain("centroids", centroids)
     }
   }
 
+  /** Append a vector batch into a standing [[writeIvfIndex]] index
+    * WITHOUT retraining (standard IVF rolling ingestion: the coarse
+    * clustering is frozen at build time, [[assignToStored]]). Query
+    * exactness over the grown corpus is unchanged — probes rank
+    * against the same centroids and the per-list scan is exact cosine
+    * — only recall-vs-nprobe drifts as the data moves away from the
+    * training snapshot; re-train to a fresh path when it does.
+    *
+    * Returns (and logs) the post-append
+    * [[graft.meta.PipelineMetrics.IndexHealth]]: rising list skew IS
+    * the "distribution drifted, re-train" signal quantified, and the
+    * file count paces compaction. */
+  def appendToIvfIndex(batch: DataFrame, path: String,
+                       probeHealth: Boolean = true)
+      : Option[graft.meta.PipelineMetrics.IndexHealth] =
+    IvfStore.append(batch.sparkSession, path, probeHealth) { (w, _) =>
+      w("lists", assignToStored(batch, w.root))
+    }
+
   /** Compact an appended [[writeIvfIndex]] index into a FRESH path
-    * without the corpus OR retraining: the lists table already holds
-    * every (cid, cluster, cvec) assignment, so compaction re-buckets it
-    * and carries the centroids/params over — one index-sized pass. The
-    * response to a rising `files` count in the append telemetry; the
-    * cluster-size `skew` signal still requires a true re-train against
-    * the corpus. Same pointer-swap versioning note as the builder. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String, dest: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    require(path != dest, "compact to a FRESH path, then swap pointers")
-    val buckets = graft.sources.BucketedTables
-      .readBuckets(spark, s"$path/params")
-      .getOrElse(throw new IllegalArgumentException(
-        "compactIvfIndex needs an index with a recorded bucket count"))
-    spark.read.parquet(s"$path/lists")
-      .repartition(buckets, col("cluster"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "cluster")
-      .option("path", s"$dest/lists")
-      .saveAsTable(ivfName(dest))
-    spark.read.parquet(s"$path/centroids").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dest/centroids")
-    spark.read.parquet(s"$path/params").coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$dest/params")
-  }
+    * without the corpus OR retraining — the response to a rising
+    * `files` count; the `skew` signal still requires a re-train. */
+  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                      dest: String): Unit =
+    IvfStore.compact(spark, path, dest)
 
   /** Approximate top-k against a stored [[writeIvfIndex]] index —
     * identical ranking semantics to [[ivfTopK]] over the same trained
@@ -480,21 +443,16 @@ object Ann {
     * re-training per query batch. The lists table is bucketed by cluster
     * with vectors in place, so the probe join is ONE shuffle-free
     * bucketed read — probed clusters' vectors arrive in the same pass.
-    * Works from any application — an absent catalog registration is
-    * rebuilt from the stored files and params (a params file predating
-    * the bucket record degrades to a plain parquet read: correct
-    * results, bucketing advantage lost). */
+    * A replayed append's duplicate list rows collapse before the top-k
+    * cut. Works from any application (catalog re-registration from the
+    * stored files and params). */
   def queryIvfIndex(queries: DataFrame, path: String, k: Int,
                     nprobe: Int = 4, roundTo: Int = 4): DataFrame = {
-    val spark = queries.sparkSession
-    val lists = graft.sources.BucketedTables.tableOrPlain(spark,
-      ivfName(path), s"$path/lists",
-      graft.sources.BucketedTables.readBuckets(spark, s"$path/params"),
-      "cluster")
-    val centroids = spark.read.parquet(s"$path/centroids")
+    val (root, _, t) = IvfStore.open(queries.sparkSession, path)
+    val centroids = queries.sparkSession.read.parquet(s"$root/centroids")
     rankTopK(
       probeClusters(queries, centroids, nprobe)
-        .join(lists, Seq("cluster"))
+        .join(t("lists"), Seq("cluster"))
         .where(col("qid") =!= col("cid"))
         .join(broadcast(queries), Seq("qid")),
       k, roundTo)

@@ -148,16 +148,19 @@ object Pq {
         // from a frame instead of replaying every prior round
         .localCheckpoint(true)
     }
-    val collected = centroids
-      .orderBy(col("sub"), col("cluster"))
-      .collect()
-      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, rows) => rows.toSeq.map(_.getSeq[Double](2)) }
+    val collected = codebook(centroids)
     require(collected.nonEmpty,
       "PQ training needs a non-empty corpus (no subvectors survived — " +
         "empty input or all-null/empty vectors)")
     Model(m, subdim, collected)
   }
+
+  /** The `centroids(sub)(cluster)` nesting of (sub, cluster, centroid)
+    * rows. */
+  private def codebook(rows: DataFrame): Seq[Seq[Seq[Double]]] =
+    rows.orderBy(col("sub"), col("cluster")).collect()
+      .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
+      .map { case (_, rs) => rs.toSeq.map(_.getSeq[Double](2)) }
 
   private def centroidsLit(model: Model): Column = typedlit(model.centroids)
 
@@ -213,35 +216,37 @@ object Pq {
   /** Load a [[writeModel]] codebook. */
   def readModel(spark: org.apache.spark.sql.SparkSession,
                 path: String): Model = {
-    val rows = spark.read.parquet(path)
-      .orderBy(col("sub"), col("cluster")).collect()
-    val cents = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)
-      .map { case (_, rs) => rs.toSeq.map(_.getSeq[Double](2)) }
+    val cents = codebook(spark.read.parquet(path))
     Model(cents.size, cents.head.head.size, cents)
   }
 
   // ── Persistent IVF+PQ index ──────────────────────────────────────────
 
-  private def ivfpqName(path: String): String =
-    graft.sources.BucketedTables.tableName("graft_ivfpq", path, "lists")
+  /** IVF+PQ on the shared lifecycle ([[graft.sources.BucketedIndex]]). */
+  private object IvfPqStore extends graft.sources.BucketedIndex {
+    import graft.sources.BucketedTables.Part
+    val prefix = "graft_ivfpq"
+    val tables = Seq(Part("lists", "cluster"), Part("vecs", "cid"))
+    val carried = Seq("centroids", "pq_model")
+  }
 
   /** The composed big-corpus ANN index — IVF coarse partitioning with
     * PQ-compressed codes INSIDE the inverted lists:
     *
-    *  - `lists`:     (cid, cluster, codes) bucketed by cluster — m
-    *                 small ints per vector instead of the floats (64×
-    *                 smaller at dim 64 / m=8), so a probe reads a
-    *                 fraction of a fraction of the corpus bytes;
-    *  - `vecs`:      (cid, cvec) bucketed by cid — floats touched ONLY
-    *                 by the final k·overscan re-rank point join;
+    *  - `lists`: (cid, cluster, codes) bucketed by cluster — m small
+    *    ints per vector instead of the floats (64× smaller at dim 64 /
+    *    m=8), so a probe reads a fraction of a fraction of the corpus
+    *    bytes;
+    *  - `vecs`: (cid, cvec) bucketed by cid — floats touched ONLY by
+    *    the final k·overscan re-rank point join;
     *  - `centroids`: IVF coarse centroids (small parquet, broadcast);
     *  - `pq_model`:  the PQ codebook ([[writeModel]]);
     *  - `params`:    (buckets) for catalog re-registration.
     *
     * Query cost at 100 TB: probe ranking over k coarse centroids,
     * an ADC scan of nprobe/nClusters of the CODES bytes, and a float
-    * point-join for k·overscan rows per query. VERSIONING: fresh path
-    * per corpus version, as with the other index writers.
+    * point-join for k·overscan rows per query. Lifecycle and
+    * VERSIONING: [[graft.sources.BucketedIndex]].
     *
     * `maxTrainRows` is SHARED by both training stages — the IVF coarse
     * k-means (k = nClusters) and the PQ codebook (k = nCentroids): an
@@ -253,159 +258,69 @@ object Pq {
                       m: Int = 8, nCentroids: Int = 16,
                       nClusters: Int = 16, iters: Int = 2,
                       buckets: Int = 16, maxTrainRows: Int = 0): Unit = {
-    import org.apache.spark.sql.SaveMode
     val spark = corpus.sparkSession
+    import spark.implicits._
     val (assign, centroids) = Ann.ivfIndex(corpus, nClusters, iters, maxTrainRows)
     val mdl = train(corpus, col("cid"), col("cvec"), dim, m, nCentroids, iters,
       maxTrainRows)
-    corpus.join(assign, Seq("cid"))
-      .select(col("cid"), col("cluster"),
-        encode(col("cvec"), mdl).as("codes"))
-      .repartition(buckets, col("cluster"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "cluster")
-      .option("path", s"$path/lists")
-      .saveAsTable(ivfpqName(path))
-    // empty vectors never enter the index (the assign join above already
-    // excludes them from the lists); keep the float store consistent so
-    // a compaction or rebuild from vecs sees the same corpus
-    corpus.where(size(col("cvec")) > 0)
-      .select(col("cid"), col("cvec"))
-      .repartition(buckets, col("cid"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "cid")
-      .option("path", s"$path/vecs")
-      .saveAsTable(
-        graft.sources.BucketedTables.tableName("graft_ivfpq", path, "vecs"))
-    centroids.coalesce(1)
-      .write.mode(SaveMode.Overwrite).parquet(s"$path/centroids")
-    writeModel(spark, mdl, s"$path/pq_model")
-    import spark.implicits._
-    Seq(Tuple1(buckets)).toDF("buckets")
-      .coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$path/params")
-  }
-
-  /** Append a vector batch into a standing [[writeIvfPqIndex]] index
-    * WITHOUT retraining: assign to the STORED coarse centroids, encode
-    * with the STORED codebook, append to the bucketed lists and float
-    * store — the IVF+PQ face of the rolling-ingestion family
-    * ([[graft.dedup.Dedup.appendToMinhashIndex]],
-    * [[graft.similarity.Ann.appendToIvfIndex]]; same frozen-params and
-    * multi-file-bucket notes). Quantization error for appended vectors
-    * reflects the training snapshot; re-train to a fresh path when the
-    * distribution drifts.
-    *
-    * Returns (and logs) the post-append
-    * [[graft.meta.PipelineMetrics.IndexHealth]] of the CODES lists —
-    * same telemetry contract as [[Ann.appendToIvfIndex]]: `files` paces
-    * [[compactIvfPqIndex]], rising `skew` is the re-train signal. The
-    * float `vecs` table fragments at the same rate (one append = one
-    * write to each), so one probe serves both. High-frequency
-    * micro-batch ingestion should pass `probeHealth = false` and pace
-    * its own [[graft.meta.PipelineMetrics.indexHealth]] calls. */
-  def appendToIvfPqIndex(batch: DataFrame, path: String,
-                         probeHealth: Boolean = true)
-      : Option[graft.meta.PipelineMetrics.IndexHealth] = {
-    import org.apache.spark.sql.SaveMode
-    import graft.sources.BucketedTables
-    val spark = batch.sparkSession
-    val buckets = BucketedTables.readBuckets(spark, s"$path/params")
-      .getOrElse(throw new IllegalArgumentException(
-        "appendToIvfPqIndex needs an index with a recorded bucket count"))
-    BucketedTables.table(spark, ivfpqName(path), s"$path/lists", buckets,
-      "cluster")
-    val vecsName = BucketedTables.tableName("graft_ivfpq", path, "vecs")
-    BucketedTables.table(spark, vecsName, s"$path/vecs", buckets, "cid")
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val mdl = readModel(spark, s"$path/pq_model")
-    // tie-break on the HIGHEST cluster id, matching the build's
-    // max(struct(sim, cluster)) assignment — an appended vector lands in
-    // exactly the list a rebuild would put it in
-    val assignW = Window.partitionBy(col("cid"))
-      .orderBy(col("csim").desc, col("cluster").desc)
-    // EMPTY vectors excluded, matching the build and query surfaces
-    // (Ann.appendToIvfIndex note): missing embeddings are routine dirty
-    // data and must not kill the ingest; encode's checkedDim would
-    // otherwise throw on the 0-vs-dim mismatch
-    val cleaned = batch.where(size(col("cvec")) > 0)
-    cleaned.select(col("cid"), Ann.normalize(Ann.asDouble(col("cvec"))).as("v"),
-        col("cvec"))
-      .crossJoin(broadcast(centroids))
-      .select(col("cid"), col("cvec"), col("cluster"),
-        TextExprs.vecDot(col("v"), col("centroid")).as("csim"))
-      .withColumn("rn", row_number().over(assignW))
-      .where(col("rn") === 1)
-      .select(col("cid"), col("cluster"),
-        encode(col("cvec"), mdl).as("codes"))
-      .repartition(buckets, col("cluster"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(buckets, "cluster")
-      .saveAsTable(ivfpqName(path))
-    cleaned.select(col("cid"), col("cvec"))
-      .repartition(buckets, col("cid"))
-      .write.mode(SaveMode.Append)
-      .bucketBy(buckets, "cid")
-      .saveAsTable(vecsName)
-    if (!probeHealth) None else {
-      val health = graft.meta.PipelineMetrics.indexHealth(
-        spark.table(ivfpqName(path)), col("cluster"), s"$path/lists")
-      System.err.println(s"[graft] ivfpq index after append: $health")
-      Some(health)
+    IvfPqStore.build(spark, path, buckets,
+        Seq(Tuple1(buckets)).toDF("buckets")) { w =>
+      w("lists", corpus.join(assign, Seq("cid")).select(col("cid"),
+        col("cluster"), encode(col("cvec"), mdl).as("codes")))
+      // empty vectors never enter the index (the assign join above
+      // already excludes them from the lists); keep the float store
+      // consistent so a compaction or rebuild from vecs sees the same
+      // corpus
+      w("vecs", corpus.where(size(col("cvec")) > 0)
+        .select(col("cid"), col("cvec")))
+      w.plain("centroids", centroids)
+      writeModel(spark, mdl, s"${w.root}/pq_model")
     }
   }
 
+  /** Append a vector batch into a standing [[writeIvfPqIndex]] index
+    * WITHOUT retraining: assign to the STORED coarse centroids
+    * ([[Ann.assignToStored]]), encode with the STORED codebook, append
+    * to the lists and float store — the IVF+PQ face of
+    * [[Ann.appendToIvfIndex]]. Quantization error for appended vectors
+    * reflects the training snapshot; re-train to a fresh path when the
+    * distribution drifts. The returned health is of the CODES lists:
+    * `vecs` fragments at the same rate (one write to each per append),
+    * so one probe serves both. */
+  def appendToIvfPqIndex(batch: DataFrame, path: String,
+                         probeHealth: Boolean = true)
+      : Option[graft.meta.PipelineMetrics.IndexHealth] =
+    IvfPqStore.append(batch.sparkSession, path, probeHealth) { (w, _) =>
+      val mdl = readModel(batch.sparkSession, s"${w.root}/pq_model")
+      // assignToStored excludes EMPTY vectors, matching the build and
+      // query surfaces; encode's checkedDim would otherwise throw on
+      // the 0-vs-dim mismatch
+      val assigned = Ann.assignToStored(batch, w.root)
+      w("lists", assigned.select(col("cid"), col("cluster"),
+        encode(col("cvec"), mdl).as("codes")))
+      w("vecs", assigned.select(col("cid"), col("cvec")))
+    }
+
   /** Compact an appended [[writeIvfPqIndex]] index into a FRESH path
     * without the corpus OR retraining — the IVF+PQ face of
-    * [[Ann.compactIvfIndex]]: the lists and vecs tables already hold
-    * every row, so compaction re-buckets both and carries
-    * centroids/params/codebook over. One index-sized pass; the response
-    * to a rising `files` count in the append telemetry (the `skew`
-    * signal still requires a true re-train). Same pointer-swap
-    * versioning note as the builder. */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String, dest: String): Unit = {
-    import org.apache.spark.sql.SaveMode
-    require(path != dest, "compact to a FRESH path, then swap pointers")
-    val buckets = graft.sources.BucketedTables
-      .readBuckets(spark, s"$path/params")
-      .getOrElse(throw new IllegalArgumentException(
-        "compactIvfPqIndex needs an index with a recorded bucket count"))
-    spark.read.parquet(s"$path/lists")
-      .repartition(buckets, col("cluster"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "cluster")
-      .option("path", s"$dest/lists")
-      .saveAsTable(ivfpqName(dest))
-    spark.read.parquet(s"$path/vecs")
-      .repartition(buckets, col("cid"))
-      .write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, "cid")
-      .option("path", s"$dest/vecs")
-      .saveAsTable(
-        graft.sources.BucketedTables.tableName("graft_ivfpq", dest, "vecs"))
-    for (part <- Seq("centroids", "pq_model", "params"))
-      spark.read.parquet(s"$path/$part").coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(s"$dest/$part")
-  }
+    * [[Ann.compactIvfIndex]]. */
+  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
+                        dest: String): Unit =
+    IvfPqStore.compact(spark, path, dest)
 
   /** Approximate top-k against a stored [[writeIvfPqIndex]] index:
     * probe the `nprobe` best coarse clusters, ADC-score their CODES,
     * keep k·overscan survivors, exact-cosine re-rank from the float
-    * store. Works from any application (catalog re-registration from
-    * the stored files). */
+    * store. Duplicate rows of a replayed append collapse at both cuts.
+    * Works from any application (catalog re-registration from the
+    * stored files). */
   def queryIvfPqIndex(queries: DataFrame, path: String, k: Int,
                       nprobe: Int = 4, overscan: Int = 4,
                       roundTo: Int = 4): DataFrame = {
-    import graft.sources.BucketedTables
     val spark = queries.sparkSession
-    val buckets = BucketedTables.readBuckets(spark, s"$path/params")
-    val lists = BucketedTables.tableOrPlain(spark, ivfpqName(path),
-      s"$path/lists", buckets, "cluster")
-    val vecs = BucketedTables.tableOrPlain(spark,
-      BucketedTables.tableName("graft_ivfpq", path, "vecs"),
-      s"$path/vecs", buckets, "cid")
-    val centroids = spark.read.parquet(s"$path/centroids")
-    val mdl = readModel(spark, s"$path/pq_model")
+    val (root, _, t) = IvfPqStore.open(spark, path)
+    val centroids = spark.read.parquet(s"$root/centroids")
+    val mdl = readModel(spark, s"$root/pq_model")
     // probe stage shared with the IVF twins (Ann.probeClusters) — tie
     // breaks and normalization cannot drift between variants
     val probes = Ann.probeClusters(queries, centroids, nprobe)
@@ -414,23 +329,15 @@ object Pq {
     // BUILDING the broadcast, killing the query job
     val qt = queries.where(size(col("qvec")) > 0)
       .select(col("qid"), queryTable(col("qvec"), mdl).as("qtab"))
-    val pw = Window.partitionBy(col("qid"))
-      .orderBy(col("iscore").desc, col("cid"))
-    val survivors = probes
-      .join(lists, Seq("cluster"))
-      .where(col("qid") =!= col("cid"))
-      .join(broadcast(qt), Seq("qid"))
-      .select(col("qid"), col("cid"),
-        adcScore(col("codes"), col("qtab")).as("iscore"))
-      .withColumn("prn", row_number().over(pw))
-      .where(col("prn") <= k * overscan)
-      .select(col("qid"), col("cid"))
-    // exact re-rank tail shared with every ANN variant (Ann.rankTopK)
-    Ann.rankTopK(
-      survivors
-        .join(vecs, Seq("cid"))
-        .join(broadcast(queries.select(col("qid"), col("qvec"))), Seq("qid")),
-      k, roundTo)
+    // exact re-rank tail shared with every ANN variant (Ann.reRank)
+    Ann.reRank(
+      probes
+        .join(t("lists"), Seq("cluster"))
+        .where(col("qid") =!= col("cid"))
+        .join(broadcast(qt), Seq("qid"))
+        .select(col("qid"), col("cid"),
+          adcScore(col("codes"), col("qtab")).as("iscore")),
+      k * overscan, t("vecs"), queries, k, roundTo)
   }
 
   /** Approximate top-k via PQ: train (or reuse) a codebook, encode the
@@ -452,21 +359,12 @@ object Pq {
       .select(col("cid"), encode(col("cvec"), mdl).as("codes"))
     val qt = queries.where(size(col("qvec")) > 0)
       .select(col("qid"), queryTable(col("qvec"), mdl).as("qtab"))
-    val pw = Window.partitionBy(col("qid"))
-      .orderBy(col("iscore").desc, col("cid"))
-    val survivors = coded.crossJoin(broadcast(qt))
-      .where(col("qid") =!= col("cid"))
-      .select(col("qid"), col("cid"),
-        adcScore(col("codes"), col("qtab")).as("iscore"))
-      .withColumn("prn", row_number().over(pw))
-      .where(col("prn") <= k * overscan)
-      .select(col("qid"), col("cid"))
-    // floats re-attach for k·overscan rows per query only; ranking tail
-    // shared with every ANN variant (Ann.rankTopK)
-    Ann.rankTopK(
-      survivors
-        .join(corpus.select(col("cid"), col("cvec")), Seq("cid"))
-        .join(broadcast(queries.select(col("qid"), col("qvec"))), Seq("qid")),
-      k, roundTo)
+    // floats re-attach for the survivors only (Ann.reRank)
+    Ann.reRank(
+      coded.crossJoin(broadcast(qt))
+        .where(col("qid") =!= col("cid"))
+        .select(col("qid"), col("cid"),
+          adcScore(col("codes"), col("qtab")).as("iscore")),
+      k * overscan, corpus, queries, k, roundTo)
   }
 }

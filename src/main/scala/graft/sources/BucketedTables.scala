@@ -1,10 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.col
+
+import graft.core.DeltaLog
+import graft.meta.PipelineMetrics
 
 /** Catalog plumbing for the persistent index tables
   * ([[graft.dedup.Dedup.writeMinhashIndex]],
-  * [[graft.similarity.Ann.writeIvfIndex]]).
+  * [[graft.similarity.Ann.writeIvfIndex]],
+  * [[graft.similarity.Pq.writeIvfPqIndex]]), whose shared lifecycle is
+  * [[BucketedIndex]].
   *
   * `saveAsTable` registration lives in the SESSION catalog — in-memory
   * by default — so it dies with the application that built the index
@@ -108,17 +115,186 @@ object BucketedTables {
   /** The recorded bucket count of an index params table, if present —
     * None for a missing params file or a pre-bucket-record schema. */
   def readBuckets(spark: SparkSession, paramsPath: String): Option[Int] =
-    try {
-      val df = spark.read.parquet(paramsPath)
-      if (!df.columns.contains("buckets")) None
-      else
-        // take(1), not head(): a crashed writeIndex can leave a params
-        // table that reads fine but holds zero rows (or a null cell) —
-        // the contract is "None when unreadable as params", which must
-        // cover half-written just like missing (callers then degrade to
-        // the plain, bucketing-less read; correctness is unaffected)
-        df.take(1).headOption
-          .filter(r => !r.isNullAt(r.fieldIndex("buckets")))
-          .map(_.getAs[Int]("buckets"))
-    } catch { case scala.util.control.NonFatal(_) => None }
+    readParams(spark, paramsPath).flatMap(bucketsOf)
+
+  /** The params row, None when the table is missing or unreadable.
+    * take(1), not head(): a crashed writeIndex can leave a params
+    * table that reads fine but holds zero rows (or a null cell) — the
+    * contract is "None when unreadable as params", which must cover
+    * half-written just like missing (callers then degrade to the
+    * plain, bucketing-less read; correctness is unaffected). */
+  private[sources] def readParams(spark: SparkSession,
+                                  paramsPath: String): Option[Row] =
+    try spark.read.parquet(paramsPath).take(1).headOption
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  private[graft] def bucketsOf(p: Row): Option[Int] =
+    if (!p.schema.fieldNames.contains("buckets") ||
+        p.isNullAt(p.fieldIndex("buckets"))) None
+    else Some(p.getAs[Int]("buckets"))
+
+  /** One bucketed table of an index: its directory under the
+    * generation root, its bucket column and its sort columns. */
+  private[graft] final case class Part(dir: String, bucketCol: String,
+                                       sortCols: Seq[String] = Nil)
+}
+
+/** The persistent bucketed-index lifecycle, written ONCE for the
+  * MinHash ([[graft.dedup.Dedup.writeMinhashIndex]]), IVF
+  * ([[graft.similarity.Ann.writeIvfIndex]]) and IVF+PQ
+  * ([[graft.similarity.Pq.writeIvfPqIndex]]) indexes. A family declares
+  * its catalog `prefix`, its bucketed `tables` and the plain parts
+  * compaction `carried` over, and derives its rows through a [[Writer]].
+  *
+  * GENERATIONS: the parts and `params` live flat under the path
+  * (generation 0) or under `path/gen-<%016d>`. `params` is written LAST,
+  * so its `_SUCCESS` marker — one atomic filesystem create — commits a
+  * generation; the current one is the highest `gen-*` dir holding it,
+  * else the path ([[DeltaLog.resolveGeneration]]). A crashed in-place
+  * compaction leaves an orphan with no marker — invisible; the retry
+  * overwrites it. A build writes generation 0 table by table, so an
+  * in-place rebuild that dies mid-write leaves a mixed-version index:
+  * build each corpus version to a FRESH path and swap the pointer at
+  * the orchestration layer.
+  *
+  * APPENDS add one file per touched bucket: co-location holds (bucket
+  * routing is by key hash), but Spark stops trusting per-bucket sort
+  * once buckets hold several files — compaction restores one file per
+  * bucket. Appends are sequential table writes, neither atomic nor
+  * idempotent: a crash or a retried append leaves byte-identical rows
+  * (their only source). Queries stay correct over them and
+  * compaction's full-row `dropDuplicates` heals them without merging
+  * distinct rows — still, append at most once per batch. */
+private[graft] trait BucketedIndex {
+  import BucketedTables.Part
+
+  def prefix: String
+  /** The FIRST table holds the lists the append health probe measures. */
+  def tables: Seq[Part]
+  /** Plain parts compaction copies (`params` always, last). */
+  def carried: Seq[String]
+
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private def tableName(root: String, dir: String): String =
+    BucketedTables.tableName(prefix, root, dir)
+
+  private def committed(fs: FileSystem, p: Path): Boolean =
+    fs.exists(new Path(p, "params/_SUCCESS"))
+
+  /** (generation, root) of the CURRENT generation at `path`. */
+  def current(spark: SparkSession, path: String): (Long, String) =
+    DeltaLog.resolveGeneration(spark, path)(committed)
+
+  /** The current generation for reading: root, params row (None when
+    * unreadable) and every table by dir, through
+    * [[BucketedTables.tableOrPlain]] with the recorded bucket count. */
+  def open(spark: SparkSession, path: String)
+      : (String, Option[Row], Map[String, DataFrame]) = {
+    val root = current(spark, path)._2
+    val p = BucketedTables.readParams(spark, s"$root/params")
+    val buckets = p.flatMap(BucketedTables.bucketsOf)
+    (root, p, tables.map(t => t.dir -> BucketedTables.tableOrPlain(spark,
+      tableName(root, t.dir), s"$root/${t.dir}", buckets, t.bucketCol,
+      t.sortCols)).toMap)
+  }
+
+  private def requireParams(spark: SparkSession, root: String): (Row, Int) = {
+    val p = BucketedTables.readParams(spark, s"$root/params")
+    p.flatMap(BucketedTables.bucketsOf).map(b => (p.get, b)).getOrElse(
+      throw new IllegalArgumentException(s"the $prefix index at $root " +
+        "has no recorded bucket count (missing or pre-bucket params)"))
+  }
+
+  /** Writes the generation at `root`: `apply` one bucketed table (one
+    * file per bucket per write), returned as stored; `plain` one file. */
+  final class Writer private[BucketedIndex] (spark: SparkSession,
+      val root: String, buckets: Int, mode: SaveMode) {
+    def apply(dir: String, rows: DataFrame): DataFrame = {
+      val t = tables.find(_.dir == dir).get
+      // an append writes into the registered table's own location
+      val loc = if (mode == SaveMode.Append) Map.empty[String, String]
+        else Map("path" -> s"$root/$dir")
+      val w = rows.repartition(buckets, col(t.bucketCol)).write.mode(mode)
+        .options(loc).bucketBy(buckets, t.bucketCol)
+      t.sortCols.headOption.fold(w)(w.sortBy(_, t.sortCols.tail: _*))
+        .saveAsTable(tableName(root, dir))
+      spark.table(tableName(root, dir))
+    }
+
+    def plain(dir: String, rows: DataFrame): Unit =
+      rows.coalesce(1).write.mode(SaveMode.Overwrite).parquet(s"$root/$dir")
+  }
+
+  /** Write a generation at `root`: `derive`, then `params` LAST. */
+  def build(spark: SparkSession, root: String, buckets: Int,
+            params: DataFrame)(derive: Writer => Unit): Unit = {
+    val w = new Writer(spark, root, buckets, SaveMode.Overwrite)
+    derive(w)
+    w.plain("params", params)
+  }
+
+  /** Append into the CURRENT generation: `derive` gets an append-mode
+    * writer and the stored params row (a batch derives its rows with
+    * the index's own frozen parameters). Registrations are ensured
+    * first, so a new application appends with the build's exact spec.
+    * Returns (and logs) the post-append [[PipelineMetrics.IndexHealth]]
+    * of the lists; the probe aggregates the WHOLE table's key column,
+    * so micro-batch ingestion should pass `probeHealth = false` and
+    * pace its own [[PipelineMetrics.indexHealth]] calls. */
+  def append(spark: SparkSession, path: String, probeHealth: Boolean)
+            (derive: (Writer, Row) => Unit)
+      : Option[PipelineMetrics.IndexHealth] = {
+    val (g, root) = current(spark, path)
+    val (p, buckets) = requireParams(spark, root)
+    for (t <- tables)
+      BucketedTables.table(spark, tableName(root, t.dir), s"$root/${t.dir}",
+        buckets, t.bucketCol, t.sortCols)
+    derive(new Writer(spark, root, buckets, SaveMode.Append), p)
+    if (!probeHealth) None else {
+      val lists = tables.head
+      val health = PipelineMetrics.indexHealth(
+        spark.table(tableName(root, lists.dir)), col(lists.bucketCol),
+        s"$root/${lists.dir}").copy(generation = g)
+      log.info(s"index at $path after append: $health")
+      Some(health)
+    }
+  }
+
+  /** The compacted tables: each stored table healed, unless a family
+    * derives one table from another. */
+  protected def compactRows(spark: SparkSession, cur: String, params: Row,
+                            w: Writer): Unit =
+    for (t <- tables)
+      w(t.dir, spark.read.parquet(s"$cur/${t.dir}").dropDuplicates())
+
+  /** Compact the current generation into a FRESH path `dest`. */
+  def compact(spark: SparkSession, path: String, dest: String): Unit = {
+    require(path != dest, "compact to a FRESH path, then swap pointers")
+    writeCompacted(spark, current(spark, path)._2, dest)
+  }
+
+  /** Compact into generation N+1 ([[DeltaLog.cutoverBy]]); returns it. */
+  def compactInPlace(spark: SparkSession, path: String): Long = {
+    val (g, root) = current(spark, path)
+    DeltaLog.cutoverBy(spark, path, g, () => current(spark, path)._1)(
+      writeCompacted(spark, root, _))
+  }
+
+  /** Keep the current and previous generations ([[DeltaLog.pruneBy]]);
+    * returns the deleted paths. */
+  def prune(spark: SparkSession, path: String): Seq[String] = {
+    val parts = (tables.map(_.dir) ++ carried :+ "params").toSet
+    DeltaLog.pruneBy(spark, path, committed,
+      st => parts.contains(st.getPath.getName))
+  }
+
+  private def writeCompacted(spark: SparkSession, cur: String,
+                             dest: String): Unit = {
+    val (p, buckets) = requireParams(spark, cur)
+    build(spark, dest, buckets, spark.read.parquet(s"$cur/params")) { w =>
+      compactRows(spark, cur, p, w)
+      for (dir <- carried) w.plain(dir, spark.read.parquet(s"$cur/$dir"))
+    }
+  }
 }

@@ -70,6 +70,38 @@ class AggSpec extends AnyFunSuite {
     assert(messages(e2).exists(_.contains("null element")))
   }
 
+  test("vec_sum_decimal: an overflowed slot stays null, like sum over the cast") {
+    import spark.implicits._
+    import graft.ops.VecSumAggregate
+    // slot 0 overflows decimal(38,18) after the two big rows, and the
+    // later 1.0 must not restart it; slot 1 never overflows. One
+    // partition exercises update; two partitions (the overflow in one,
+    // the 1.0 in the other) exercise serialize/deserialize and merge.
+    val big = 6e19
+    val rows = Seq(Seq(1.0, 3.0), Seq(big, 1.0), Seq(big, 2.0))
+    def kernel(df: org.apache.spark.sql.DataFrame) =
+      df.agg(VecSumAggregate.vecSumDecimal(col("v"))).head()
+        .getSeq[java.math.BigDecimal](0).map(Option(_).map(_.doubleValue))
+    val onePart = rows.reverse.toDF("v").coalesce(1)
+    val twoParts = spark.createDataset(spark.sparkContext.parallelize(rows, 2))
+      .toDF("v")
+    assert(twoParts.rdd.getNumPartitions === 2)
+    // the reference: Spark's own sum(cast(x AS decimal(38,18))), which
+    // nulls an overflowed group sum (and keeps it null) with ANSI off
+    val ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    val reference = try {
+      onePart.select(posexplode(col("v")))
+        .groupBy(col("pos"))
+        .agg(sum(col("col").cast("decimal(38,18)")).as("s"))
+        .orderBy(col("pos")).collect()
+        .map(r => Option(r.getDecimal(1)).map(_.doubleValue)).toSeq
+    } finally spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert(reference === Seq(None, Some(6.0)))
+    assert(kernel(onePart) === reference)
+    assert(kernel(twoParts) === reference)
+  }
+
   test("tokenChunks keeps trailing tokens in a final partial chunk") {
     import spark.implicits._
     import graft.text.TextOps

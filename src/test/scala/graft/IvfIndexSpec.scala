@@ -86,6 +86,29 @@ class IvfIndexSpec extends AnyFunSuite {
     assert(files(s"$src/lists") > files(s"$dst/lists"))
   }
 
+  test("a replayed append keeps top-k exact; compaction heals the lists") {
+    // an orchestrator retry appends the same batch twice: every list row
+    // of the batch is stored twice, and one cid must still take ONE
+    // top-k slot — full probing stays equal to brute force
+    val (q, c) = qc
+    val half = c.where(col("cid") % 2 === 0)
+    val rest = c.where(col("cid") % 2 =!= 0)
+    val root = Files.createTempDirectory("graft_ivfidx_r").toString
+    val (src, dst) = (s"$root/idx", s"$root/compact")
+    Ann.writeIvfIndex(half, src, nClusters = 8, iters = 2, buckets = 4)
+    Ann.appendToIvfIndex(rest, src)
+    Ann.appendToIvfIndex(rest, src) // replay
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("qid", "cid").collect().map(_.toSeq).toSeq
+    val exact = rows(Ann.bruteForceTopK(q, c, k = 10))
+    assert(rows(Ann.queryIvfIndex(q, src, k = 10, nprobe = 8)) === exact)
+    Ann.compactIvfIndex(spark, src, dst)
+    assert(rows(Ann.queryIvfIndex(q, dst, k = 10, nprobe = 8)) === exact)
+    val lists = spark.read.parquet(s"$dst/lists")
+    assert(lists.count() === c.count())
+    assert(lists.select("cid").distinct().count() === c.count())
+  }
+
   test("the inverted lists scan bucketed, exactly once") {
     val (q, _) = qc
     val path = Files.createTempDirectory("graft_ivfidx2").toString + "/idx"

@@ -113,6 +113,36 @@ class PqSpec extends AnyFunSuite {
     assert(grown === exact)
   }
 
+  test("IVF+PQ replayed append: top-k stays exact; compaction heals both tables") {
+    // a retried append stores the batch's list AND float rows twice;
+    // duplicates must neither take extra survivor or top-k slots nor
+    // outlive compaction
+    import java.nio.file.Files
+    val (q, c) = qc
+    val half = c.where(col("cid") % 2 === 0)
+    val rest = c.where(col("cid") % 2 =!= 0)
+    val root = Files.createTempDirectory("graft_ivfpq_r").toString
+    val (src, dst) = (s"$root/idx", s"$root/compact")
+    Pq.writeIvfPqIndex(half, src, dim = 64, m = 8, nCentroids = 16,
+      nClusters = 8, buckets = 4)
+    Pq.appendToIvfPqIndex(rest, src)
+    Pq.appendToIvfPqIndex(rest, src) // replay
+    val n = c.count()
+    def rows(path: String) = Pq.queryIvfPqIndex(q, path, k = 10, nprobe = 8,
+        overscan = n.toInt / 10 + 1)
+      .orderBy("qid", "cid").collect().map(_.toSeq).toSeq
+    val exact = Ann.bruteForceTopK(q, c, k = 10)
+      .orderBy("qid", "cid").collect().map(_.toSeq).toSeq
+    assert(rows(src) === exact)
+    Pq.compactIvfPqIndex(spark, src, dst)
+    assert(rows(dst) === exact)
+    for (part <- Seq("lists", "vecs")) {
+      val t = spark.read.parquet(s"$dst/$part")
+      assert(t.count() === n && t.select("cid").distinct().count() === n,
+        s"$part holds each cid once")
+    }
+  }
+
   test("encode raises on a dimension-mismatched vector, not code 0") {
     val (_, c) = qc
     val mdl = Pq.train(c, col("cid"), col("cvec"), dim = 64, m = 8, k = 16)
