@@ -44,33 +44,34 @@ object MuprReader {
     "mode" -> "PERMISSIVE",
     "columnNameOfCorruptRecord" -> "_corrupt_record")
 
-  private def parsed(spark: SparkSession, path: String, sep: String): DataFrame =
-    spark.read.text(path)
-      .select(from_csv(col("value"), corruptSchema, csvOpts(sep)).as("r"),
-        col("value"))
-
   /** Clean rows only. */
   def readClean(spark: SparkSession, path: String,
                 sep: String = Delims.Delim): DataFrame =
-    parsed(spark, path, sep)
-      .where(col("r._corrupt_record").isNull)
-      .select(col("r.*")).drop("_corrupt_record")
+    cleanFrom(spark.read.text(path), sep)
 
   /** [[readClean]] over an already-loaded text frame (column `value`) —
     * the form the STREAMING file source needs (it reads raw lines);
     * sharing the parse + quarantine keeps batch and stream clean-row
-    * semantics on one code path. */
+    * semantics on one code path.
+    *
+    * The parsed struct comes out of a one-element `explode`: filter
+    * pushdown inlines a projected alias but never a generator's output,
+    * so the quarantine filter and the field projection share ONE
+    * `from_csv` per line (as a plain alias it runs in both). */
   def cleanFrom(lines: DataFrame, sep: String = Delims.Delim): DataFrame =
     lines
-      .select(from_csv(col("value"), corruptSchema, csvOpts(sep)).as("r"))
+      .select(explode(array(
+        from_csv(col("value"), corruptSchema, csvOpts(sep)))).as("r"))
       .where(col("r._corrupt_record").isNull)
       .select(col("r.*")).drop("_corrupt_record")
 
-  /** Quarantined raw lines — route to a dead-letter sink, don't lose them. */
+  /** Quarantined raw lines — route to a dead-letter sink, don't lose them.
+    * The parse feeds only the filter here, so it runs once as is. */
   def readCorrupt(spark: SparkSession, path: String,
                   sep: String = Delims.Delim): DataFrame =
-    parsed(spark, path, sep)
-      .where(col("r._corrupt_record").isNotNull)
+    spark.read.text(path)
+      .where(from_csv(col("value"), corruptSchema, csvOpts(sep))
+        .getField("_corrupt_record").isNotNull)
       .select(col("value").as("_corrupt_record"))
 }
 
@@ -239,11 +240,13 @@ object KvStore {
     *
     * Scale note: the exchange ranges over (salt, rowKey), NOT salt alone —
     * hashing on a 24-value column funnels the entire store through ≤24
-    * write tasks no matter the cluster size. Range partitioning scales the
-    * task count with `spark.sql.shuffle.partitions` (AQE can still
-    * coalesce small outputs), keeps each task's rows contiguous in
-    * (salt, rowKey) so a task usually writes one salt directory, and
-    * hands the writer pre-sorted runs. */
+    * write tasks no matter the cluster size. Range partitioning gives
+    * each task one contiguous, pre-sorted (salt, rowKey) run, so each
+    * range boundary splits at most one salt directory: at most
+    * 24 + width − 1 files. The width is `spark.sql.shuffle.partitions`,
+    * passed as an explicit count: AQE coalesces a width-less exchange by
+    * bytes, which folds a small store into ONE task that sorts and
+    * writes all 24 salts. */
   def write(kv: DataFrame, path: String): Unit =
     writeLayout(kv)
       .write.mode(SaveMode.Overwrite).partitionBy("salt").parquet(path)
@@ -261,7 +264,8 @@ object KvStore {
     * `leading` must be constant within each write (a literal batch id),
     * so the range exchange on (salt, rowKey) is unaffected. */
   def writeLayout(kv: DataFrame, leading: Seq[Column]): DataFrame =
-    kv.repartitionByRange(col("salt"), col("rowKey"))
+    kv.repartitionByRange(kv.sparkSession.sessionState.conf.numShufflePartitions,
+        col("salt"), col("rowKey"))
       // the sort MUST lead with the partition column: V1Writes requires
       // ordering by salt and silently REPLACES (not extends) any user
       // sort that doesn't satisfy it — sorting (rowKey, columnName) alone

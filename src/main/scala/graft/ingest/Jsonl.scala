@@ -21,15 +21,22 @@ import org.apache.spark.sql.types.{StringType, StructType}
 object Jsonl {
 
   /** Parse a one-string-column frame of JSONL lines into `schema` rows
-    * plus the capture column. `lines` may be batch or streaming. */
+    * plus the capture column. `lines` may be batch or streaming.
+    *
+    * `r` is a one-element `explode`'s output, not a projected alias:
+    * filter pushdown inlines an alias into every predicate that reads
+    * it, so the clean/corrupt tests and the field projection would
+    * each re-run `from_json`; a generator's output is evaluated once
+    * per line. A null struct (whitespace line) still explodes to one
+    * row with `r` null. */
   def parse(lines: DataFrame, line: Column, schema: StructType): DataFrame = {
     require(!schema.fieldNames.contains("_corrupt_record"),
       "schema must not predeclare _corrupt_record — the parser adds it")
     val full = schema.add("_corrupt_record", StringType)
     lines.select(line.as("__line"))
-      .select(col("__line"), from_json(col("__line"), full,
+      .select(col("__line"), explode(array(from_json(col("__line"), full,
         Map("mode" -> "PERMISSIVE",
-          "columnNameOfCorruptRecord" -> "_corrupt_record")).as("r"))
+          "columnNameOfCorruptRecord" -> "_corrupt_record")))).as("r"))
   }
 
   /** Typed clean rows of a JSONL file/glob. */

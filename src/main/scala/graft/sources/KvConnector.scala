@@ -12,6 +12,8 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.MessageType
+import org.apache.spark.paths.SparkPath
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -21,6 +23,8 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, S
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{EqualTo, Filter, StringStartsWith}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -311,12 +315,6 @@ class KvCountScan(path: String) extends Scan with Batch {
 
 case class KvCountPartition(count: Long) extends InputPartition
 
-/** One InputPartition per parquet file, carrying the salt from its
-  * directory — at store scale the files are the parallelism units, and
-  * salt/point-get pruning happens here on the driver before any task
-  * launches. */
-case class KvInputPartition(file: String, salt: Int) extends InputPartition
-
 class KvScan(path: String, pushed: Array[Filter], required: StructType)
     extends Scan with Batch with SupportsRuntimeV2Filtering
     with SupportsReportStatistics {
@@ -358,12 +356,27 @@ class KvScan(path: String, pushed: Array[Filter], required: StructType)
     pushed.toSeq ++ runtimeKeys.map(ks =>
       org.apache.spark.sql.sources.In("rowKey", ks.toArray[Any]))
 
+  /** The pruned files, packed into Spark's own file partitions: salt and
+    * point-get pruning (static and runtime) happen here on the driver
+    * before any task launches, and the survivors are bin-packed by the
+    * rule every built-in file source uses (`maxPartitionBytes`,
+    * `openCostInBytes`, the session's default parallelism). A store of
+    * many small salt files scans in about one task per core instead of
+    * one task per file. Files stay whole — a reader streams a file's
+    * row groups in order — and each carries its salt as its partition
+    * value. */
   override def planInputPartitions(): Array[InputPartition] = {
     val (saltEq, pruneSalts) = saltPruning(runtimeKeys)
-    prunedFiles(saltEq, pruneSalts)
+    val files = prunedFiles(saltEq, pruneSalts)
+      .sortBy { case (f, _) => -f.length() } // largest first, as FileSourceScanExec
       .map { case (f, salt) =>
-        KvInputPartition(f.getAbsolutePath, salt): InputPartition }
-      .toArray
+        PartitionedFile(InternalRow(salt),
+          SparkPath.fromPath(new Path(f.getAbsolutePath)), 0, f.length()) }
+    val spark = SparkSession.active
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      files.map(_.length + openCost).sum)
+    FilePartition.getFilePartitions(spark, files, maxSplit).toArray
   }
 
   /** Shared salt-pruning derivation: the set of salts the pushed
@@ -401,7 +414,7 @@ class KvScan(path: String, pushed: Array[Filter], required: StructType)
     // point-get keys — static pruning only
     val (saltEq, pruneSalts) = saltPruning(runtime = None)
     val bytes = prunedFiles(saltEq, pruneSalts).map(_._1.length()).sum
-    val factor = org.apache.spark.sql.internal.SQLConf.get.fileCompressionFactor
+    val factor = SQLConf.get.fileCompressionFactor
     new Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
         java.util.OptionalLong.of((bytes * factor).toLong)
@@ -416,35 +429,56 @@ class KvScan(path: String, pushed: Array[Filter], required: StructType)
 
 class KvReaderFactory(pushed: Array[Filter], required: StructType)
     extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[KvInputPartition]
-    new KvPartitionReader(p.file, p.salt, pushed, required)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new KvPartitionReader(partition.asInstanceOf[FilePartition].files.toSeq,
+      pushed, required)
 }
 
-/** Reads one rowKey-sorted parquet file with row-group skipping on the
-  * rowKey min/max statistics. Local-FS Configuration is rebuilt per
-  * reader (cheap, nothing cluster-specific to ship). */
-class KvPartitionReader(file: String, salt: Int, pushed: Array[Filter],
+/** Reads one packed partition's rowKey-sorted parquet files in turn, with
+  * row-group skipping on the rowKey min/max statistics. One local-FS
+  * Configuration serves every file of the task (nothing cluster-specific
+  * to ship). */
+class KvPartitionReader(files: Seq[PartitionedFile], pushed: Array[Filter],
                         required: StructType)
     extends PartitionReader[InternalRow] {
 
-  private val reader = ParquetFileReader.open(
-    HadoopInputFile.fromPath(new Path(file), new Configuration()))
-  private val fileSchema = reader.getFooter.getFileMetaData.getSchema
+  private val conf = new Configuration()
   private val dataFields = required.fieldNames.filter(_ != "salt")
-  private val requestedSchema = new MessageType(fileSchema.getName,
-    dataFields.map(f => fileSchema.getFields.asScala.find(_.getName == f)
-      .getOrElse(throw new IllegalArgumentException(s"no field $f in $file"))): _*)
-  reader.setRequestedSchema(requestedSchema)
+  // output slot → index in the requested (data-field) schema; -1 is the
+  // salt, which comes from the file's directory, not its columns
+  private val slots = required.fieldNames.map(f => dataFields.indexOf(f))
+  private val remaining = files.iterator
 
-  private val rowKeyIdx = fileSchema.getFields.asScala
-    .indexWhere(_.getName == "rowKey")
-  private val blocks = reader.getFooter.getBlocks.asScala
+  private var reader: ParquetFileReader = _
+  private var salt = 0
+  private var requestedSchema: MessageType = _
+  private var columnIO: org.apache.parquet.io.MessageColumnIO = _
+  private var rowKeyIdx = -1
+  private var blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] = Nil
   private var blockIdx = 0
   private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
   private var rowsLeftInGroup = 0L
   private var current: Group = _
+
+  /** Close the current file and open the next; false when none is left. */
+  private def openNextFile(): Boolean = {
+    close()
+    if (!remaining.hasNext) return false
+    val file = remaining.next()
+    reader = ParquetFileReader.open(HadoopInputFile.fromPath(file.toPath, conf))
+    salt = file.partitionValues.getInt(0)
+    val fileSchema = reader.getFooter.getFileMetaData.getSchema
+    requestedSchema = new MessageType(fileSchema.getName,
+      dataFields.map(f => fileSchema.getFields.asScala.find(_.getName == f)
+        .getOrElse(throw new IllegalArgumentException(
+          s"no field $f in ${file.filePath}"))): _*)
+    reader.setRequestedSchema(requestedSchema)
+    columnIO = new ColumnIOFactory().getColumnIO(requestedSchema)
+    rowKeyIdx = fileSchema.getFields.asScala.indexWhere(_.getName == "rowKey")
+    blocks = reader.getFooter.getBlocks.asScala.toSeq
+    blockIdx = 0
+    true
+  }
 
   private def blockMayMatch(i: Int): Boolean = {
     if (rowKeyIdx < 0) return true
@@ -459,19 +493,22 @@ class KvPartitionReader(file: String, salt: Int, pushed: Array[Filter],
       pushed.toSeq)
   }
 
+  /** Position on the next row group that may match, moving on through
+    * the partition's files; false when every file is exhausted. */
+  @scala.annotation.tailrec
   private def advanceGroup(): Boolean = {
     while (blockIdx < blocks.length && !blockMayMatch(blockIdx)) {
       reader.skipNextRowGroup()
       blockIdx += 1
     }
-    if (blockIdx >= blocks.length) return false
-    val pages = reader.readNextRowGroup()
-    rowsLeftInGroup = blocks(blockIdx).getRowCount
-    blockIdx += 1
-    val columnIO = new ColumnIOFactory().getColumnIO(requestedSchema)
-    recordReader = columnIO.getRecordReader(pages,
-      new GroupRecordConverter(requestedSchema))
-    true
+    if (blockIdx < blocks.length) {
+      val pages = reader.readNextRowGroup()
+      rowsLeftInGroup = blocks(blockIdx).getRowCount
+      blockIdx += 1
+      recordReader = columnIO.getRecordReader(pages,
+        new GroupRecordConverter(requestedSchema))
+      true
+    } else openNextFile() && advanceGroup()
   }
 
   override def next(): Boolean = {
@@ -481,18 +518,17 @@ class KvPartitionReader(file: String, salt: Int, pushed: Array[Filter],
     current != null || next()
   }
 
-  override def get(): InternalRow = {
-    val values = required.fieldNames.map {
-      case "salt" => salt: Any
-      case f =>
-        val gi = requestedSchema.getFieldIndex(f)
-        if (current.getFieldRepetitionCount(gi) == 0) null
-        else UTF8String.fromBytes(current.getBinary(gi, 0).getBytes)
-    }
-    new GenericInternalRow(values.asInstanceOf[Array[Any]])
-  }
+  override def get(): InternalRow =
+    new GenericInternalRow(slots.map { gi =>
+      if (gi < 0) salt
+      else if (current.getFieldRepetitionCount(gi) == 0) null
+      else UTF8String.fromBytes(current.getBinary(gi, 0).getBytes)
+    })
 
-  override def close(): Unit = reader.close()
+  override def close(): Unit = if (reader != null) {
+    reader.close()
+    reader = null
+  }
 }
 
 // ── DSv2 write path ────────────────────────────────────────────────────
@@ -749,8 +785,8 @@ class KvStreamingWrite(path: String, schema: StructType, queryId: String,
       // misconfiguration would silently discard every batch, and the
       // sink cannot tell the two apart (that is exactly what a distinct
       // .option("streamId", ...) per logical stream is for).
-      System.err.println(
-        s"[graft] kv sink: epoch $epochId of stream '$streamId' already " +
+      KvStreamingWrite.log.warn(
+        s"kv sink: epoch $epochId of stream '$streamId' already " +
           "committed — skipping as a replay. If this is a NEW query " +
           "(not a checkpoint recovery), set a distinct streamId option " +
           "or its batches will be dropped.")
@@ -808,6 +844,8 @@ class KvStreamingWrite(path: String, schema: StructType, queryId: String,
 }
 
 object KvStreamingWrite {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   private[sources] def stagingName(streamId: String, queryId: String,
                                    epochId: Long): String =
     s"_staging_$streamId=$queryId=e$epochId"

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
@@ -47,6 +49,23 @@ class JsonlSpec extends AnyFunSuite {
     assert(corrupt.contains("not json at all"))
     // blank/whitespace lines: no document, quarantined or dropped by
     // the text source — but NEVER a clean row (asserted above via count)
+  }
+
+  test("the clean path parses each line in exactly one operator") {
+    val dir = Files.createTempDirectory("graft_jsonl_once")
+    val p = dir.resolve("in.jsonl").toString
+    Seq("""{"id": 1, "text": "one"}""", "broken", "   ")
+      .toDF("value").coalesce(1).write.text(p)
+    val clean = Jsonl.readClean(spark, p, schema)
+    // a scan's pushed DataFilters are display only, so scans do not count
+    val parsing = clean.queryExecution.executedPlan.collect {
+      case n if !n.isInstanceOf[FileSourceScanExec] &&
+          n.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs])) =>
+        n.nodeName
+    }
+    assert(parsing.size === 1, clean.queryExecution.executedPlan.toString)
+    assert(clean.as[(Long, String)].collect().toSeq === Seq((1L, "one")))
+    assert(Jsonl.readCorrupt(spark, p, schema).count() === 2)
   }
 
   test("schema must not predeclare the capture column") {

@@ -1,11 +1,15 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.core.Salt
 import graft.ingest.KvStore
+import graft.sources.{KvScan, KvScanBuilder}
 
 /** DSv2 KV connector: the prefix-scan / point-get semantics of the
   * parquet path must survive the connector boundary unchanged, with
@@ -26,6 +30,19 @@ class KvConnectorSpec extends AnyFunSuite {
   private def viaConnector: DataFrame =
     spark.read.format("graft.sources.KvSource").load(store)
   private def viaParquet: DataFrame = KvStore.read(spark, store)
+
+  /** The files a scan plans, flattened across its packed partitions. */
+  private def filesOf(parts: Seq[InputPartition]): Seq[PartitionedFile] =
+    parts.flatMap(_.asInstanceOf[FilePartition].files)
+  private def plannedFiles(df: DataFrame): Seq[PartitionedFile] =
+    filesOf(df.queryExecution.executedPlan.collect {
+      case b: BatchScanExec => b.inputPartitions
+    }.flatten)
+  private def storeParquet(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("salt=")).toSeq
+      .flatMap(_.listFiles()).filter(_.getName.endsWith(".parquet"))
+      .map(_.getAbsolutePath)
 
   private def asSet(df: DataFrame): Set[(String, String, String, Int)] =
     df.select(col("rowKey"), col("columnName"), col("value"), col("salt"))
@@ -56,12 +73,25 @@ class KvConnectorSpec extends AnyFunSuite {
     // the connector plans only the files under salt=bucket(key)
     val saltDirFiles = new java.io.File(s"$store/salt=${Salt.bucket(key)}")
       .listFiles().count(_.getName.endsWith(".parquet"))
-    val allFiles = new java.io.File(store).listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith("salt="))
-      .map(_.listFiles().count(_.getName.endsWith(".parquet"))).sum
-    assert(get.rdd.getNumPartitions === saltDirFiles)
-    assert(viaConnector.rdd.getNumPartitions === allFiles)
+    val allFiles = storeParquet(store).size
+    assert(plannedFiles(get).size === saltDirFiles)
+    assert(plannedFiles(viaConnector).size === allFiles)
     assert(saltDirFiles < allFiles)
+  }
+
+  test("packed scan: at most one partition per core, every file once") {
+    val parts = new KvScanBuilder(store).build().asInstanceOf[KvScan]
+      .planInputPartitions().toSeq
+    val planned = filesOf(parts)
+    assert(storeParquet(store).size > spark.sparkContext.defaultParallelism,
+      "the store must hold more files than cores for packing to show")
+    assert(parts.size <= spark.sparkContext.defaultParallelism)
+    assert(planned.map(_.toPath.toUri.getPath).sorted ===
+      storeParquet(store).sorted)
+    // each file carries its directory's salt as its partition value
+    for (f <- planned)
+      assert(f.toPath.getParent.getName === s"salt=${f.partitionValues.getInt(0)}")
+    assert(viaConnector.rdd.getNumPartitions === parts.size)
   }
 
   test("column pruning: salt-only projection decodes from directory names") {
@@ -120,22 +150,20 @@ class KvConnectorSpec extends AnyFunSuite {
   test("runtime filtering: join keys prune to their salt directories") {
     import org.apache.spark.sql.connector.expressions.Expressions
     import org.apache.spark.sql.connector.expressions.filter.Predicate
-    import graft.sources.{KvInputPartition, KvScanBuilder}
     // unit level: an IN(rowKey, ...) predicate delivered via
     // SupportsRuntimeV2Filtering must replan to exactly the keys' salts
     val keys = viaParquet.select(col("rowKey")).distinct()
       .orderBy(col("rowKey")).limit(3).collect().map(_.getString(0))
     val scan = new KvScanBuilder(store).build()
       .asInstanceOf[graft.sources.KvScan]
-    val all = scan.planInputPartitions()
+    val all = filesOf(scan.planInputPartitions().toSeq)
     scan.filter(Array(new Predicate("IN",
       (Expressions.column("rowKey") +:
         keys.map(k => Expressions.literal(k)
           : org.apache.spark.sql.connector.expressions.Expression)).toArray)))
-    val pruned = scan.planInputPartitions()
+    val pruned = filesOf(scan.planInputPartitions().toSeq)
     val expectSalts = keys.map(k => Salt.bucket(k)).toSet
-    assert(pruned.map(_.asInstanceOf[KvInputPartition].salt).toSet
-      === expectSalts)
+    assert(pruned.map(_.partitionValues.getInt(0)).toSet === expectSalts)
     assert(pruned.length < all.length)
 
     // end to end: a broadcast lookup join on rowKey carries the build
@@ -157,7 +185,6 @@ class KvConnectorSpec extends AnyFunSuite {
 
   test("reported statistics shrink under pruning and unlock broadcast joins") {
     import org.apache.spark.sql.sources.EqualTo
-    import graft.sources.{KvScan, KvScanBuilder}
     val key = viaParquet.select(col("rowKey")).orderBy(col("rowKey"))
       .head().getString(0)
     val full = new KvScanBuilder(store).build().asInstanceOf[KvScan]

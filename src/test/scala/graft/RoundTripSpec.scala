@@ -2,10 +2,16 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.CsvToStructs
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanHelper, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.Delims
+import graft.core.{Delims, Salt}
 import graft.ingest.{KvStore, MuprReader, TriggerMeta}
 import graft.meta.LogMetrics
 import graft.ops.KvOps
@@ -170,6 +176,78 @@ class RoundTripSpec extends AnyFunSuite {
       .as[String].collect()
     assert(corrupt.length === 1)
     assert(corrupt(0) === bad)
+  }
+
+  /** Physical operators that evaluate `from_csv`. A scan's pushed
+    * DataFilters are display only, so scans do not count. */
+  private def parseOperators(df: DataFrame): Seq[String] =
+    df.queryExecution.executedPlan.collect {
+      case p if !p.isInstanceOf[FileSourceScanExec] &&
+          p.expressions.exists(_.exists(_.isInstanceOf[CsvToStructs])) =>
+        p.nodeName
+    }
+
+  test("MUPR clean path parses each line in exactly one operator") {
+    val dir = Files.createTempDirectory("graft_rt_once")
+    val (dataFile, _) = writeFixture(dir)
+    for (df <- Seq(MuprReader.readClean(spark, dataFile),
+        MuprReader.cleanFrom(spark.read.text(dataFile)))) {
+      assert(parseOperators(df).size === 1,
+        df.queryExecution.executedPlan.toString)
+      assert(df.count() === 5)
+    }
+  }
+
+  test("column pruning never lets a malformed line into the clean rows") {
+    // each bad line breaks a different column, none of them Test_Name:
+    // a pruned read must still parse (and reject) the whole line
+    val good = Seq("1001", "SS01", "2", "1", "1.0", "7", "0.5", "A", "P", "M", "t_x")
+    def broken(i: Int, v: String) = good.updated(i, v).mkString(D)
+    val lines = Seq.tabulate(4)(i => good.updated(0, s"${1001 + i}").mkString(D)) ++
+      Seq(broken(0, "u1"), broken(2, "x"), broken(3, "1.5e"), broken(4, "f"),
+        broken(5, "id"), broken(6, "0.5.5"), "not a real line at all")
+    val f = Files.createTempDirectory("graft_rt_prune").resolve("bad.dat")
+    Files.writeString(f, lines.mkString("\n"))
+    val clean = MuprReader.readClean(spark, f.toString)
+    val rows = clean.collect()
+    assert(rows.length === 4)
+    assert(clean.count() === rows.length)
+    assert(clean.select("Test_Name").count() === rows.length)
+    assert(rows.length + MuprReader.readCorrupt(spark, f.toString).count() ===
+      lines.length)
+  }
+
+  test("salted write keeps its range width under AQE") {
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(width > 1 && spark.conf.get("spark.sql.adaptive.enabled") === "true")
+    val src = spark.range(2000).select(col("id").cast("string").as("k"),
+      (col("id") % 7).cast("string").as("q"), lit("v").as("v"))
+    val kv = KvStore.pack(src, Seq(col("k")), col("q"), Seq(col("v")))
+    // AQE coalesces a width-less exchange this small into one partition
+    val layout = KvStore.writeLayout(kv)
+    layout.collect()
+    val aqe = new AdaptiveSparkPlanHelper {}
+    val finalPlan = layout.queryExecution.executedPlan
+    assert(finalPlan.toString.contains("isFinalPlan=true"), finalPlan)
+    val rangeWidths = aqe.collect(finalPlan) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] =>
+        e.outputPartitioning.numPartitions
+    }
+    assert(rangeWidths === Seq(width), finalPlan)
+    val coalescedRange = aqe.collect(finalPlan) {
+      case AQEShuffleReadExec(s: ShuffleQueryStageExec, _)
+          if s.shuffle.outputPartitioning.isInstanceOf[RangePartitioning] => s
+    }
+    assert(coalescedRange.isEmpty, finalPlan)
+    val store = Files.createTempDirectory("graft_rt_width").toString
+    KvStore.write(kv, store)
+    val files = new java.io.File(store).listFiles()
+      .filter(_.getName.startsWith("salt=")).toSeq
+      .flatMap(_.listFiles()).map(_.getName).filter(_.endsWith(".parquet"))
+    assert(files.size <= Salt.Buckets + width - 1, files.mkString(", "))
+    // part-<task>-…: every range partition wrote its own run of files
+    assert(files.map(_.split("-")(1)).distinct.size === width,
+      files.mkString(", "))
   }
 
   test("skew ops equal their unsalted twins") {
