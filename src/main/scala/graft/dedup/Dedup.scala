@@ -1437,8 +1437,8 @@ object Dedup {
         // the sampled choice is a plan-shape decision — surface it, so a
         // run-to-run cost difference is attributable to a layout flip
         // instead of reading as an unexplained drift
-        System.err.println(
-          s"[graft] hammingPairs layout auto-selected: " +
+        log.info(
+          s"hammingPairs layout auto-selected: " +
             s"${if (chosen) "block-pair (wide)" else "single-chunk"} tables")
         chosen
       }

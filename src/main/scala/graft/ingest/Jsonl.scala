@@ -77,7 +77,7 @@ object Jsonl {
     * escaping is lossless for any UTF-8 text, null fields are omitted
     * on write and read back as null, and struct field order is
     * preserved — pinned by the jsonl_export gate's md5 comparison. */
-  def export(spark: SparkSession, docs: DataFrame, record: Column,
+  def `export`(spark: SparkSession, docs: DataFrame, record: Column,
              path: String, maxRecordsPerFile: Int = 1000,
              gzip: Boolean = false): Unit = {
     import spark.implicits._

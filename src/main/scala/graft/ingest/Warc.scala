@@ -31,6 +31,7 @@ import org.apache.spark.sql.functions.{broadcast, col, collect_list, explode, li
   * scale extensions target.
   */
 object Warc {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** One parsed record. `block` is the raw record block; for
     * `response` records it is an HTTP message ([[httpParts]] splits
@@ -913,7 +914,7 @@ object Warc {
       if (touched.length <= maxPruneFiles)
         filesSel.where(col("file_id").isin(touched.toIndexedSeq: _*))
       else {
-        System.err.println(s"[graft] fetchSpans: request touches " +
+        log.warn(s"fetchSpans: request touches " +
           s"${touched.length}+ files (> maxPruneFiles=$maxPruneFiles) " +
           "— planning a semi-join filter instead of a literal predicate")
         // one slim row per touched file — broadcast-scale by the same

@@ -23,6 +23,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
   * same hash, so build and probe agree by construction.
   */
 object BloomOps {
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Bits for a target false-positive rate at `expectedItems` distinct
     * insertions (standard optimum: m = -n·ln(p)/ln(2)²). */
@@ -54,8 +55,8 @@ object BloomOps {
       val maxBits =
         cap("spark.sql.optimizer.runtime.bloomFilter.maxNumBits", 67108864L)
       if (expectedItems > maxItems || bits > maxBits)
-        System.err.println(
-          s"[graft] bloomAgg request (items=$expectedItems, bits=$bits) " +
+        log.warn(
+          s"bloomAgg request (items=$expectedItems, bits=$bits) " +
             s"exceeds session caps (maxNumItems=$maxItems, " +
             s"maxNumBits=$maxBits): Spark will clamp the filter and the " +
             "effective fpp degrades — raise the " +

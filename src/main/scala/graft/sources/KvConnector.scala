@@ -2,19 +2,15 @@ package graft.sources
 
 import java.util.{Map => JMap}
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -23,7 +19,9 @@ import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, S
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FilePartition, OutputWriter, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetOptions, ParquetUtils}
+import org.apache.spark.sql.execution.datasources.v2.PartitionReaderFromIterator
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{EqualTo, Filter, StringStartsWith}
 import org.apache.spark.sql.types._
@@ -32,12 +30,17 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.core.Salt
 
-/** DataSource V2 read connector over the salted-KV parquet layout
+/** DataSource V2 connector over the salted-KV parquet layout
   * (`KvStore.write` output: parquet files under `path/salt=N`, rowKey-sorted)
   * — the connector boundary the reference's HBase client occupies
   * (bulkGet `Utils.scala:288-369`, PrefixFilter scan
   * `MetricDetails.scala:99-117`), so the store becomes swappable for a
   * live KV backend without touching query code.
+  *
+  * The files are Spark's own parquet, read and written by Spark's own
+  * parquet reader and writer (the ones behind `KvStore.read`/`write`).
+  * The connector owns only what Spark cannot know: file placement, salt
+  * pruning and the commit protocol.
   *
   * Pushdown (SupportsPushDownFilters + SupportsPushDownRequiredColumns):
   *
@@ -47,16 +50,19 @@ import graft.core.Salt
   *    f(rowKey) is engine knowledge); it is exactly HBase's
   *    region-locating get.
   *  - `EqualTo(salt, n)` — explicit partition pruning.
-  *  - `StringStartsWith(rowKey, p)` — prefix scan: row groups whose
-  *    [min, max] rowKey statistics cannot intersect the prefix range are
-  *    skipped without decoding (HBase PrefixFilter + the rowKey-sorted
-  *    file layout doing its job).
+  *  - `StringStartsWith(rowKey, p)` — prefix scan.
+  *
+  * The rowKey predicates also go to Spark's parquet filter pushdown,
+  * which skips row groups whose [min, max] rowKey statistics (unsigned
+  * byte order) cannot match — HBase PrefixFilter + the rowKey-sorted
+  * file layout doing its job.
   *
   * All pushed filters are ALSO returned as residuals, so Spark
   * re-evaluates them post-scan — pruning here is an optimization, never
   * a correctness dependency. Column pruning decodes only requested
-  * fields; `salt` is materialized from the directory name (partitionBy
-  * strips it from the files), so a salt-only projection decodes nothing.
+  * fields; `salt` is the partition value from the directory name
+  * (partitionBy strips it from the files), so a salt-only projection
+  * decodes nothing.
   *
   * Runtime filtering (SupportsRuntimeV2Filtering): a broadcast join on
   * rowKey replans the scan with the build side's keys after the build
@@ -86,21 +92,10 @@ object KvConnector {
     StructField("value", StringType),
     StructField("salt", IntegerType)))
 
-  /** Smallest byte string greater than every p-prefixed byte string, or
-    * None when every byte of p is 0xFF (no finite upper bound). */
-  private[graft] def prefixUpperBound(p: Array[Byte]): Option[Array[Byte]] = {
-    var i = p.length - 1
-    while (i >= 0 && p(i) == -1) i -= 1
-    if (i < 0) None
-    else {
-      val out = java.util.Arrays.copyOf(p, i + 1)
-      out(i) = (out(i) + 1).toByte
-      Some(out)
-    }
-  }
-
-  private def utf8(s: String): Array[Byte] =
-    s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+  /** The columns a store file holds; the salt lives in the directory
+    * name. */
+  private[sources] val fileSchema: StructType =
+    StructType(schema.filterNot(_.name == "salt"))
 
   /** File-name-safe form of a caller-supplied identifier (query id,
     * stream id) — staged and committed file names embed these, and a
@@ -186,37 +181,6 @@ object KvConnector {
         d.lastModified() < cutoff)
     stale.foreach(deleteRec)
     stale.length
-  }
-
-  /** Conservative: can a row group with rowKey range [min, max] contain
-    * rows satisfying the pushed rowKey predicates? All comparisons are
-    * UNSIGNED BYTE order on raw UTF-8 — parquet computes binary min/max
-    * stats in byte order, and Java UTF-16 String order disagrees with it
-    * beyond ASCII (supplementary chars sort below U+E000 in UTF-16 but
-    * above in UTF-8), which would wrongly SKIP groups and silently drop
-    * rows — pruning must stay conservative for any key bytes. */
-  private[graft] def groupMayMatch(min: Array[Byte], max: Array[Byte],
-                                   filters: Seq[Filter]): Boolean = {
-    def cmp(a: Array[Byte], b: Array[Byte]): Int =
-      java.util.Arrays.compareUnsigned(a, b)
-    filters.forall {
-      case EqualTo("rowKey", v: String) =>
-        val vb = utf8(v)
-        cmp(min, vb) <= 0 && cmp(vb, max) <= 0
-      case StringStartsWith("rowKey", p) =>
-        val pb = utf8(p)
-        cmp(max, pb) >= 0 && prefixUpperBound(pb).forall(ub => cmp(min, ub) < 0)
-      case org.apache.spark.sql.sources.In("rowKey", vs) =>
-        // runtime bulkGet keys: the group survives if ANY key falls in
-        // its [min, max] — disjunction, unlike the ANDed cases above
-        vs.exists {
-          case s: String =>
-            val vb = utf8(s)
-            cmp(min, vb) <= 0 && cmp(vb, max) <= 0
-          case _ => true
-        }
-      case _ => true
-    }
   }
 }
 
@@ -318,7 +282,13 @@ case class KvCountPartition(count: Long) extends InputPartition
 class KvScan(path: String, pushed: Array[Filter], required: StructType)
     extends Scan with Batch with SupportsRuntimeV2Filtering
     with SupportsReportStatistics {
-  override def readSchema(): StructType = required
+  // the data columns as requested, then the salt: Spark's parquet
+  // reader appends partition values after the file's columns
+  private val (saltSchema, dataSchema) =
+    required.partition(_.name == "salt") match {
+      case (s, d) => (StructType(s), StructType(d)) }
+  private val readsSalt = saltSchema.nonEmpty
+  override def readSchema(): StructType = StructType(dataSchema ++ saltSchema)
   override def toBatch: Batch = this
   override def description(): String =
     s"graft_kv pushed=[${pushed.mkString(", ")}]"
@@ -330,8 +300,8 @@ class KvScan(path: String, pushed: Array[Filter], required: StructType)
   // an IN predicate AFTER the build side executes, and the scan replans
   // to ONLY the salt directories those keys hash to — a point-lookup
   // join against a 24-salt (or 24,000-salt) store reads the matching
-  // directories, not the store. The keys also join the row-group
-  // statistics check, so within a directory only covering row groups
+  // directories, not the store. The keys also go to the parquet
+  // row-group filter, so within a directory only covering row groups
   // decode. Conservative by design: an unrecognized predicate shape
   // prunes nothing (the join still filters rows), never drops data.
   private var runtimeKeys: Option[Array[String]] = None
@@ -364,13 +334,13 @@ class KvScan(path: String, pushed: Array[Filter], required: StructType)
     * many small salt files scans in about one task per core instead of
     * one task per file. Files stay whole — a reader streams a file's
     * row groups in order — and each carries its salt as its partition
-    * value. */
+    * value when the scan reads the salt. */
   override def planInputPartitions(): Array[InputPartition] = {
     val (saltEq, pruneSalts) = saltPruning(runtimeKeys)
     val files = prunedFiles(saltEq, pruneSalts)
       .sortBy { case (f, _) => -f.length() } // largest first, as FileSourceScanExec
       .map { case (f, salt) =>
-        PartitionedFile(InternalRow(salt),
+        PartitionedFile(if (readsSalt) InternalRow(salt) else InternalRow.empty,
           SparkPath.fromPath(new Path(f.getAbsolutePath)), 0, f.length()) }
     val spark = SparkSession.active
     val openCost = SQLConf.get.filesOpenCostInBytes
@@ -423,112 +393,26 @@ class KvScan(path: String, pushed: Array[Filter], required: StructType)
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory =
-    new KvReaderFactory(effectiveFilters.toArray, required)
+  /** Spark's own parquet reader (vectorized, one row at a time), built
+    * once per scan on the driver; the rowKey predicates drive its
+    * row-group skipping on the rowKey statistics. */
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val spark = SparkSession.active
+    val readFile = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, KvConnector.fileSchema, saltSchema, dataSchema,
+      effectiveFilters.filter(_.references.sameElements(Array("rowKey"))),
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+    new KvReaderFactory(readFile)
+  }
 }
 
-class KvReaderFactory(pushed: Array[Filter], required: StructType)
+/** Reads one packed partition's files in turn. */
+class KvReaderFactory(readFile: PartitionedFile => Iterator[InternalRow])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new KvPartitionReader(partition.asInstanceOf[FilePartition].files.toSeq,
-      pushed, required)
-}
-
-/** Reads one packed partition's rowKey-sorted parquet files in turn, with
-  * row-group skipping on the rowKey min/max statistics. One local-FS
-  * Configuration serves every file of the task (nothing cluster-specific
-  * to ship). */
-class KvPartitionReader(files: Seq[PartitionedFile], pushed: Array[Filter],
-                        required: StructType)
-    extends PartitionReader[InternalRow] {
-
-  private val conf = new Configuration()
-  private val dataFields = required.fieldNames.filter(_ != "salt")
-  // output slot → index in the requested (data-field) schema; -1 is the
-  // salt, which comes from the file's directory, not its columns
-  private val slots = required.fieldNames.map(f => dataFields.indexOf(f))
-  private val remaining = files.iterator
-
-  private var reader: ParquetFileReader = _
-  private var salt = 0
-  private var requestedSchema: MessageType = _
-  private var columnIO: org.apache.parquet.io.MessageColumnIO = _
-  private var rowKeyIdx = -1
-  private var blocks: Seq[org.apache.parquet.hadoop.metadata.BlockMetaData] = Nil
-  private var blockIdx = 0
-  private var recordReader: org.apache.parquet.io.RecordReader[Group] = _
-  private var rowsLeftInGroup = 0L
-  private var current: Group = _
-
-  /** Close the current file and open the next; false when none is left. */
-  private def openNextFile(): Boolean = {
-    close()
-    if (!remaining.hasNext) return false
-    val file = remaining.next()
-    reader = ParquetFileReader.open(HadoopInputFile.fromPath(file.toPath, conf))
-    salt = file.partitionValues.getInt(0)
-    val fileSchema = reader.getFooter.getFileMetaData.getSchema
-    requestedSchema = new MessageType(fileSchema.getName,
-      dataFields.map(f => fileSchema.getFields.asScala.find(_.getName == f)
-        .getOrElse(throw new IllegalArgumentException(
-          s"no field $f in ${file.filePath}"))): _*)
-    reader.setRequestedSchema(requestedSchema)
-    columnIO = new ColumnIOFactory().getColumnIO(requestedSchema)
-    rowKeyIdx = fileSchema.getFields.asScala.indexWhere(_.getName == "rowKey")
-    blocks = reader.getFooter.getBlocks.asScala.toSeq
-    blockIdx = 0
-    true
-  }
-
-  private def blockMayMatch(i: Int): Boolean = {
-    if (rowKeyIdx < 0) return true
-    // wildcard ascription: the raw getter infers an existential that
-    // trips -feature; the statistics are only read as bytes here
-    val stats: org.apache.parquet.column.statistics.Statistics[_] =
-      blocks(i).getColumns.get(rowKeyIdx).getStatistics
-    if (stats == null || !stats.hasNonNullValue) return true
-    // raw stat bytes, never decoded to String — a UTF-16 round-trip
-    // would smear invalid sequences to U+FFFD and change the ordering
-    KvConnector.groupMayMatch(stats.getMinBytes, stats.getMaxBytes,
-      pushed.toSeq)
-  }
-
-  /** Position on the next row group that may match, moving on through
-    * the partition's files; false when every file is exhausted. */
-  @scala.annotation.tailrec
-  private def advanceGroup(): Boolean = {
-    while (blockIdx < blocks.length && !blockMayMatch(blockIdx)) {
-      reader.skipNextRowGroup()
-      blockIdx += 1
-    }
-    if (blockIdx < blocks.length) {
-      val pages = reader.readNextRowGroup()
-      rowsLeftInGroup = blocks(blockIdx).getRowCount
-      blockIdx += 1
-      recordReader = columnIO.getRecordReader(pages,
-        new GroupRecordConverter(requestedSchema))
-      true
-    } else openNextFile() && advanceGroup()
-  }
-
-  override def next(): Boolean = {
-    while (rowsLeftInGroup == 0) if (!advanceGroup()) return false
-    current = recordReader.read()
-    rowsLeftInGroup -= 1
-    current != null || next()
-  }
-
-  override def get(): InternalRow =
-    new GenericInternalRow(slots.map { gi =>
-      if (gi < 0) salt
-      else if (current.getFieldRepetitionCount(gi) == 0) null
-      else UTF8String.fromBytes(current.getBinary(gi, 0).getBytes)
-    })
-
-  override def close(): Unit = if (reader != null) {
-    reader.close()
-    reader = null
-  }
+    new PartitionReaderFromIterator(
+      partition.asInstanceOf[FilePartition].files.iterator.flatMap(readFile))
 }
 
 // ── DSv2 write path ────────────────────────────────────────────────────
@@ -538,6 +422,9 @@ class KvPartitionReader(files: Seq[PartitionedFile], pushed: Array[Filter],
 // `KvStore.write` layout — parquet under path/salt=N, rows sorted by
 // (rowKey, columnName) within each file — so connector-written stores
 // are indistinguishable to the read path (row-group pruning included).
+// The files come from Spark's own parquet writer, the one KvStore.write
+// uses (see KvTaskFiles); the connector decides only where each file
+// goes and when it becomes visible.
 //
 // The layout is requested FROM Spark, not hand-built: the Write declares
 // RequiresDistributionAndOrdering(ordered by salt, rowKey, columnName),
@@ -734,9 +621,11 @@ class KvWriterFactory(stagingPath: String, schema: StructType,
 // Unlike the batch path, a micro-batch's rows arrive in whatever
 // distribution the streaming plan produced (micro-batch planning does
 // not honor RequiresDistributionAndOrdering), so the writer buffers the
-// partition's rows, groups by salt and sorts by (rowKey, columnName)
-// before writing — preserving the sorted-file contract the read path's
-// row-group pruning depends on. Micro-batches are small by construction;
+// partition's rows, groups by salt and sorts by (rowKey, columnName) in
+// UTF-8 byte order — the batch ordering and parquet's binary statistics
+// both use it, and Java String (UTF-16) order disagrees beyond U+FFFF —
+// preserving the sorted-file contract the read path's row-group pruning
+// depends on. Micro-batches are small by construction;
 // the buffer is one partition of one batch, never the store.
 
 class KvStreamingWrite(path: String, schema: StructType, queryId: String,
@@ -868,40 +757,29 @@ class KvStreamingWriterFactory(path: String, queryId: String,
 
 /** Buffers one micro-batch partition, then writes one rowKey-sorted file
   * per salt directory at commit — same file contract as the batch
-  * writer, same parquet schema/stats. */
+  * writer, same parquet writer. */
 class KvStreamingDataWriter(stagingPath: String, schema: StructType,
                             partitionId: Int, epochId: Long,
                             streamId: String)
     extends DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
+  private val files = new KvTaskFiles(stagingPath, schema)
+  private val rows = scala.collection.mutable.ArrayBuffer.empty[(Int, InternalRow)]
 
-  private val idx = Map(
-    "rowKey" -> schema.fieldIndex("rowKey"),
-    "columnName" -> schema.fieldIndex("columnName"),
-    "value" -> schema.fieldIndex("value"))
-  private val saltIdx = schema.fieldIndex("salt")
-  private val rows =
-    scala.collection.mutable.ArrayBuffer.empty[(Int, String, String, String)]
-
-  override def write(row: InternalRow): Unit = {
-    def str(i: Int): String =
-      if (row.isNullAt(i)) null else row.getUTF8String(i).toString
-    rows += ((KvParquet.requireSalt(row, saltIdx), str(idx("rowKey")),
-      str(idx("columnName")), str(idx("value"))))
-  }
+  override def write(row: InternalRow): Unit =
+    rows += ((files.requireSalt(row), row.copy()))
 
   override def commit(): WriterCommitMessage = {
-    val factory = new SimpleGroupFactory(KvParquet.fileSchema)
+    // UTF8String compares unsigned bytes; nulls first, as the batch sort
+    val byteOrder = Ordering.Option[UTF8String]((a, b) => a.compareTo(b))
+    val (rk, cn) = (schema.fieldIndex("rowKey"), schema.fieldIndex("columnName"))
     val written = rows.groupBy(_._1).toSeq.map { case (salt, group) =>
       val rel = s"salt=$salt/part-$partitionId-epoch$epochId-$streamId.parquet"
-      val writer = KvParquet.writerFor(new java.io.File(stagingPath, rel))
-      try group.sortBy(r => (r._2, r._3)).foreach { case (_, k, c, v) =>
-        val g = factory.newGroup()
-        if (k != null) g.append("rowKey", k)
-        if (c != null) g.append("columnName", c)
-        if (v != null) g.append("value", v)
-        writer.write(g)
-      } finally writer.close()
+      val writer = files.open(rel)
+      try group.map(_._2)
+        .sortBy(r => (Option(r.getUTF8String(rk)), Option(r.getUTF8String(cn))))(
+          Ordering.Tuple2(byteOrder, byteOrder))
+        .foreach(r => writer.write(files.cells(r)))
+      finally writer.close()
       rel
     }
     KvCommitMessage(written)
@@ -911,69 +789,47 @@ class KvStreamingDataWriter(stagingPath: String, schema: StructType,
   override def close(): Unit = rows.clear()
 }
 
-/** Writes the incoming (salt, rowKey, columnName)-sorted run as one
-  * rowKey-sorted parquet file per salt directory (rolling on salt
-  * change), via parquet-hadoop's Group API — binary min/max statistics
-  * included, so [[KvPartitionReader]]'s row-group pruning works on
-  * connector-written files too. */
-/** The store files' parquet schema (rowKey/columnName/value as optional
-  * UTF-8 binary — salt lives in the directory name), shared by the batch
-  * and streaming writers so the two paths cannot diverge. */
-private[sources] object KvParquet {
-  import org.apache.parquet.schema.{LogicalTypeAnnotation, Types}
-  import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
-  val fileSchema: MessageType = Types.buildMessage()
-    .addField(Types.optional(PrimitiveTypeName.BINARY)
-      .as(LogicalTypeAnnotation.stringType()).named("rowKey"))
-    .addField(Types.optional(PrimitiveTypeName.BINARY)
-      .as(LogicalTypeAnnotation.stringType()).named("columnName"))
-    .addField(Types.optional(PrimitiveTypeName.BINARY)
-      .as(LogicalTypeAnnotation.stringType()).named("value"))
-    .named("kv")
+/** Spark's own parquet writer for one write task's store files — the
+  * `ParquetUtils.prepareWrite` factory behind `KvStore.write` and every
+  * `df.write.parquet` (session codec, binary min/max statistics),
+  * prepared once per task and shared by the batch and streaming
+  * DataWriters, so the store's file format is Spark's alone. */
+private[sources] class KvTaskFiles(stagingPath: String, schema: StructType) {
+  private val job = Job.getInstance(new Configuration())
+  private val factory = ParquetUtils.prepareWrite(SQLConf.get, job,
+    KvConnector.fileSchema, new ParquetOptions(Map.empty[String, String], SQLConf.get))
+  private val context =
+    new TaskAttemptContextImpl(job.getConfiguration, new TaskAttemptID())
+  private val saltIdx = schema.fieldIndex("salt")
+  private val projected = ProjectingInternalRow(KvConnector.fileSchema,
+    KvConnector.fileSchema.fieldNames.toSeq.map(schema.fieldIndex))
 
-  /** One store-file writer (snappy, binary stats), shared by the batch
-    * and streaming DataWriters so their file format cannot drift. */
-  def writerFor(f: java.io.File): org.apache.parquet.hadoop.ParquetWriter[
-      org.apache.parquet.example.data.Group] = {
-    f.getParentFile.mkdirs()
-    org.apache.parquet.hadoop.example.ExampleParquetWriter
-      .builder(new Path(f.getAbsolutePath))
-      .withConf(new Configuration())
-      .withType(fileSchema)
-      .withCompressionCodec(
-        org.apache.parquet.hadoop.metadata.CompressionCodecName.SNAPPY)
-      .build()
-  }
+  def open(rel: String): OutputWriter = factory.newInstance(
+    new java.io.File(stagingPath, rel).getAbsolutePath, KvConnector.fileSchema,
+    context)
 
   /** A null salt violates the store invariant salt = Salt.bucket(rowKey)
     * — filed anywhere (getInt on a null slot reads 0) the row becomes
     * invisible to salt-pruned point gets while full scans still see it:
     * silent wrong data. Reject loudly at the writer boundary. */
-  def requireSalt(row: org.apache.spark.sql.catalyst.InternalRow,
-                  saltIdx: Int): Int = {
+  def requireSalt(row: InternalRow): Int = {
     if (row.isNullAt(saltIdx))
       throw new IllegalArgumentException(
         "graft.sources.KvSource: null salt — compute salt = " +
           "Salt.bucket(rowKey) (KvStore.pack does) before writing")
     row.getInt(saltIdx)
   }
+
+  /** The row's store columns, projected in place (no copy). */
+  def cells(row: InternalRow): InternalRow = { projected.project(row); projected }
 }
 
 class KvDataWriter(stagingPath: String, schema: StructType,
                    partitionId: Int, taskId: Long, queryId: String)
     extends DataWriter[InternalRow] {
-  import org.apache.parquet.example.data.simple.SimpleGroupFactory
-  import org.apache.parquet.hadoop.ParquetWriter
-
-  private val factory = new SimpleGroupFactory(KvParquet.fileSchema)
-  private val idx = Map(
-    "rowKey" -> schema.fieldIndex("rowKey"),
-    "columnName" -> schema.fieldIndex("columnName"),
-    "value" -> schema.fieldIndex("value"))
-  private val saltIdx = schema.fieldIndex("salt")
-
+  private val files = new KvTaskFiles(stagingPath, schema)
   private var currentSalt: Int = Int.MinValue
-  private var writer: ParquetWriter[Group] = _
+  private var writer: OutputWriter = _
   private val written = scala.collection.mutable.ArrayBuffer.empty[String]
 
   private def roll(salt: Int): Unit = {
@@ -982,21 +838,17 @@ class KvDataWriter(stagingPath: String, schema: StructType,
     // both restart at 0 in a new SparkContext, so without it two append
     // jobs stage identical names (see the commit-protocol note)
     val rel = s"salt=$salt/part-$partitionId-$taskId-$queryId.parquet"
-    writer = KvParquet.writerFor(new java.io.File(stagingPath, rel))
+    writer = files.open(rel)
     written += rel
     currentSalt = salt
   }
 
   override def write(row: InternalRow): Unit = {
-    val salt = KvParquet.requireSalt(row, saltIdx)
+    val salt = files.requireSalt(row)
     // rows arrive sorted by (salt, rowKey, columnName) — the ordering
     // this Write REQUIRED — so each salt is one contiguous run
     if (writer == null || salt != currentSalt) roll(salt)
-    val g = factory.newGroup()
-    idx.foreach { case (name, i) =>
-      if (!row.isNullAt(i)) g.append(name, row.getUTF8String(i).toString)
-    }
-    writer.write(g)
+    writer.write(files.cells(row))
   }
 
   override def commit(): WriterCommitMessage = {

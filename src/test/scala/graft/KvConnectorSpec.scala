@@ -127,24 +127,68 @@ class KvConnectorSpec extends AnyFunSuite {
       asSet(p.where(col("rowKey") === key)))
   }
 
-  test("prefix upper bound and stats compare operate on unsigned bytes") {
-    import graft.sources.KvConnector.{groupMayMatch, prefixUpperBound}
-    import org.apache.spark.sql.sources.{EqualTo, StringStartsWith}
-    def b(s: String): Array[Byte] = s.getBytes("UTF-8")
-    assert(prefixUpperBound(b("ab")).map(_.toSeq) === Some(b("ac").toSeq))
-    assert(prefixUpperBound(Array(0x61.toByte, 0xFF.toByte)).map(_.toSeq)
-      === Some(b("b").toSeq))
-    assert(prefixUpperBound(Array(0xFF.toByte, 0xFF.toByte)) === None)
-    // UTF-16 String order would wrongly skip this group: U+10000 (4-byte
-    // UTF-8, sorts HIGH in byte order) vs U+E000 (sorts lower in UTF-8
-    // but higher in UTF-16)
-    val supp = new String(Character.toChars(0x10000))
-    val min = b("\uE000")
-    val max = b(supp)
-    assert(java.util.Arrays.compareUnsigned(min, max) < 0, "byte order sanity")
-    assert(groupMayMatch(min, max, Seq(EqualTo("rowKey", supp))))
-    assert(groupMayMatch(min, max, Seq(StringStartsWith("rowKey", "\uE000"))))
-    assert(!groupMayMatch(min, max, Seq(EqualTo("rowKey", "a"))))
+  // Keys whose UTF-8 byte order (parquet's binary statistics, the
+  // batch write's sort) disagrees with Java's UTF-16 String order:
+  // U+10000 sorts above U+E000 in bytes but below it in UTF-16.
+  private val supp = new String(Character.toChars(0x10000))
+  private val prefixes = Seq("k", "\uE000", supp)
+
+  /** `n` keys per prefix, one cell each, salted as KvStore.pack salts. */
+  private def byteOrderKv(n: Int): DataFrame = {
+    val ids = spark.range(n).select(format_string("%05d", col("id")).as("i"))
+    prefixes.map(p => ids.select(concat(lit(p), col("i")).as("rowKey")))
+      .reduce(_ union _)
+      .select(col("rowKey"), lit("q").as("columnName"),
+        concat(lit("value-"), col("rowKey"), lit("-" * 32)).as("value"))
+      .withColumn("salt", graft.ops.SaltExpr.saltCol(col("rowKey")))
+  }
+
+  /** A sorted store of many small row groups per salt directory. */
+  private lazy val byteOrderStore: String = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_bo").toString
+    KvStore.writeLayout(byteOrderKv(4000)).write
+      .option("parquet.block.size", "4096")
+      .mode("overwrite").partitionBy("salt").parquet(dir)
+    dir
+  }
+
+  test("byte-order store: point gets and prefix scans equal KvStore.read") {
+    val c = spark.read.format("graft.sources.KvSource").load(byteOrderStore)
+    val p = KvStore.read(spark, byteOrderStore)
+    for (prefix <- prefixes ++ Seq("k0123", "\uE00003", supp + "039",
+        "\uFFFF", "")) {
+      val ps = asSet(p.where(col("rowKey").startsWith(prefix)))
+      assert(asSet(c.where(col("rowKey").startsWith(prefix))) === ps,
+        s"prefix '$prefix' diverged")
+    }
+    for (prefix <- prefixes; i <- Seq(0, 1999, 3999)) {
+      val key = f"$prefix$i%05d"
+      val ps = asSet(p.where(col("rowKey") === key))
+      assert(ps.size === 1)
+      assert(asSet(c.where(col("rowKey") === key)) === ps, s"get '$key' diverged")
+    }
+    // a lookup join: its build keys (120, past Spark's parquet IN
+    // threshold of 10) reach the scan as a runtime IN over all ranges
+    val probe = p.select(col("rowKey")).where(col("rowKey").endsWith("00"))
+    val lookup = c.join(broadcast(probe), Seq("rowKey"))
+    val plan = lookup.queryExecution.executedPlan.toString
+    assert(plan.contains("dynamicpruningexpression"), s"no runtime filter:\n$plan")
+    assert(asSet(lookup) === asSet(p.join(broadcast(probe), Seq("rowKey"))))
+  }
+
+  test("a point get reads fewer rows than its salt directory holds") {
+    // only row-group skipping on the pushed rowKey can make it so
+    val key = supp + "02000"
+    val get = spark.read.format("graft.sources.KvSource").load(byteOrderStore)
+      .where(col("rowKey") === key)
+    assert(get.collect().length === 1)
+    val scanned = get.queryExecution.executedPlan.collectFirst {
+      case b: BatchScanExec => b.metrics("numOutputRows").value
+    }.getOrElse(fail("no KvSource scan in the plan"))
+    val saltRows = KvStore.read(spark, byteOrderStore)
+      .where(col("salt") === Salt.bucket(key)).count()
+    assert(scanned >= 1 && scanned < saltRows,
+      s"scanned $scanned of the salt directory's $saltRows rows")
   }
 
   test("runtime filtering: join keys prune to their salt directories") {
@@ -313,6 +357,36 @@ class KvConnectorSpec extends AnyFunSuite {
     }
   }
 
+  test("streaming sink writes every file in UTF-8 byte order") {
+    import org.apache.spark.sql.streaming.Trigger
+    val dir = java.nio.file.Files.createTempDirectory("graft_dsv2_sbo")
+    val incoming = dir.resolve("incoming").toString
+    val store = dir.resolve("store").toString
+    val kv = byteOrderKv(200)
+    kv.coalesce(1).write.mode("overwrite").parquet(incoming)
+    val q = spark.readStream.schema(kv.schema).parquet(incoming)
+      .writeStream.format("graft.sources.KvSource")
+      .option("path", store)
+      .option("checkpointLocation", dir.resolve("ckpt").toString)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination(120000)
+    assert(asSet(spark.read.format("graft.sources.KvSource").load(store)) ===
+      asSet(kv))
+    // each file's keys, in file order
+    val byFile = spark.read.parquet(store)
+      .select(input_file_name(), col("rowKey")).collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq
+      .groupBy(_._1).values.map(_.map(_._2))
+    val utf8 = (k: String) => k.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    for (keys <- byFile; (a, b) <- keys.zip(keys.drop(1)))
+      assert(java.util.Arrays.compareUnsigned(utf8(a), utf8(b)) <= 0,
+        s"'$a' written before '$b'")
+    // the order question only arises where a file mixes both ranges
+    assert(byFile.exists(ks => ks.exists(_.startsWith("\uE000")) &&
+      ks.exists(_.startsWith(supp))))
+  }
+
   test("streaming epoch replay is idempotent (no duplicate rows)") {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -358,7 +432,7 @@ class KvConnectorSpec extends AnyFunSuite {
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import org.apache.spark.unsafe.types.UTF8String
     import graft.sources.KvConnector
-    import scala.collection.JavaConverters._
+    import scala.jdk.CollectionConverters._
 
     def info(qid: String, opts: Map[String, String] = Map.empty): LogicalWriteInfo =
       new LogicalWriteInfo {

@@ -244,7 +244,7 @@ class SamplingSpec extends AnyFunSuite {
       val rate = Integer.parseInt(th(src), 16) / 65536.0
       val expected = rate * sz
       assert(math.abs(kept.getOrElse(src, 0L) - expected)
-        <= 5 * math.sqrt(sz) + 3,
+        <= 5 * math.sqrt(sz.toDouble) + 3,
         s"$src: kept ${kept.getOrElse(src, 0L)} vs expected $expected")
     }
   }
