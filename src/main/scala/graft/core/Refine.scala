@@ -3,9 +3,11 @@ package graft.core
 /** Driver-side arithmetic shared by the histogram-cutoff refinement
   * loops ([[graft.text.BudgetSelect]], [[graft.text.Binning]]): both
   * solve "find the element of a huge (score, id) order at a given
-  * cumulative threshold" by id-chunk histograms, and both need the same
-  * two carefully-guarded pieces — the overflow-safe chunk width and the
-  * boundary pick over a sorted chunk histogram. One implementation so
+  * cumulative COST threshold" by id-chunk cost histograms (row counts
+  * are the unit-cost case: `takeTop` and the count bins), and both
+  * need the same two carefully-guarded pieces — the overflow-safe chunk
+  * width and the boundary pick over a sorted chunk histogram. One
+  * implementation so
   * the edge cases (full-Long spans, the 2^62 clamp, the strict
   * cum > threshold pick) cannot drift between the two operators. */
 private[graft] object Refine {

@@ -87,13 +87,13 @@ object Jsonl {
     val dfs = root.getFileSystem(hconf)
     if (dfs.exists(root)) dfs.delete(root, true)
     dfs.mkdirs(root)
-    val ser = new SerConf(hconf)
+    val ser = new org.apache.spark.util.SerializableConfiguration(hconf)
     val suffix = if (gzip) ".jsonl.gz" else ".jsonl"
     val manifest = docs
       .select(to_json(record).as("j")).as[String]
       .mapPartitions { it =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(ser.conf)
+        val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(ser.value)
         it.grouped(maxRecordsPerFile).zipWithIndex.map { case (chunk, seq) =>
           val name = f"part-$pid%05d-$seq%04d$suffix"
           val raw = fs.create(new org.apache.hadoop.fs.Path(path, name), true)
@@ -113,20 +113,5 @@ object Jsonl {
     // the quantity the re-ingest sees
     manifest.orderBy(col("file")).coalesce(1)
       .write.mode("overwrite").parquet(s"$path/_manifest")
-  }
-
-  /** Hadoop Configuration is not Serializable; ship it via its own
-    * Writable wire form (the Warc.SerHadoopConf workaround). */
-  private class SerConf(
-      @transient var conf: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); conf.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new org.apache.hadoop.conf.Configuration(false)
-      conf.readFields(in)
-    }
   }
 }

@@ -439,22 +439,6 @@ object Warc {
         case Array(k, v) if k.trim.equalsIgnoreCase(name) => v.trim
       }
 
-  /** Hadoop Configuration is not Serializable; ship it to tasks via its
-    * own Writable wire form (the standard library-side workaround for
-    * `private[spark] SerializableConfiguration`). */
-  private class SerHadoopConf(
-      @transient var conf: org.apache.hadoop.conf.Configuration)
-      extends Serializable {
-    private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-      out.defaultWriteObject(); conf.write(out)
-    }
-    private def readObject(in: java.io.ObjectInputStream): Unit = {
-      in.defaultReadObject()
-      conf = new org.apache.hadoop.conf.Configuration(false)
-      conf.readFields(in)
-    }
-  }
-
   /** WET-style export — the WRITE side of the crawl surface: pack each
     * partition's rows into `conversion` records (text/plain — what
     * Common Crawl's .wet text extracts are) and write real
@@ -489,7 +473,7 @@ object Warc {
     val dfs = root.getFileSystem(hconf)
     if (dfs.exists(root)) dfs.delete(root, true)
     dfs.mkdirs(root)
-    val ser = new SerHadoopConf(hconf)
+    val ser = new org.apache.spark.util.SerializableConfiguration(hconf)
     val suffix = if (gzip) ".warc.gz" else ".warc"
     val manifest = docs
       .select(id.cast("long").as("i"), uri.cast("string").as("u"),
@@ -497,7 +481,7 @@ object Warc {
       .as[(Long, String, String, String)]
       .mapPartitions { it =>
         val pid = org.apache.spark.TaskContext.getPartitionId()
-        val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(ser.conf)
+        val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(ser.value)
         it.grouped(maxRecordsPerFile).zipWithIndex.map { case (chunk, seq) =>
           val recs = chunk.map { case (i, u, d, t) =>
             WarcSpecRec("conversion", s"<urn:uuid:conv-$i>", Option(u),

@@ -221,16 +221,11 @@ object PipelineMetrics {
     }
   }
 
-  /** The one collected (group, value, count-or-weight) histogram behind
-    * every quantile form: cast-null groups/values/weights are dropped
-    * (the null-drop contract), the collect is capped and loud, and a
-    * FRACTIONAL value or weight — one that survives try_cast by
-    * TRUNCATING — fails loudly instead of skewing the histogram (the
-    * lossy flags ride the same pass), as does a negative weight. The
-    * unweighted forms pass weight = 1, where the checks are vacuous. */
   /** One (g, v, n) histogram row per distinct (group, value) — the
-    * single map-side-combined pass behind every exact-quantile flavor.
-    * Validation (the row cap, the fractional-value and negative-weight
+    * single map-side-combined pass behind every exact-quantile flavor,
+    * built by [[ProfileState.histogram]] (cast-null rows dropped, lossy
+    * casts and negative weights flagged in the same pass; the
+    * unweighted forms pass weight = 1). Validation (the row cap, the fractional-value and negative-weight
     * contracts) runs as ONE bounded action whose result is a 1-row
     * summary: the driver never receives the histogram itself. (The
     * pre-r21 form collected every level row to the driver — ~594k rows
@@ -241,15 +236,7 @@ object PipelineMetrics {
   private def quantileHistogram(df: DataFrame, group: Column, value: Column,
                                 maxRows: Int,
                                 weight: Column = lit(1L)): DataFrame = {
-    val gS = group.cast("string")
-    val vL = value.try_cast("long")
-    val wL = weight.try_cast("long")
-    val lossy = greatest(
-      when(value.cast("double") =!= vL.cast("double"), 1).otherwise(0),
-      when(weight.cast("double") =!= wL.cast("double"), 1).otherwise(0))
-    val hist = df.where(gS.isNotNull && vL.isNotNull && wL.isNotNull)
-      .groupBy(gS.as("g"), vL.as("v"))
-      .agg(sum(wL).as("n"), max(lossy).as("lossy"), min(wL).as("wmin"))
+    val hist = ProfileState.histogram(df, group, value, weight, "g", "v")
       .transform(graft.core.PlanTrace.checkpoint(_, eager = false,
         "quantile histogram"))
     val s = hist

@@ -53,9 +53,12 @@ object ProfileState {
     * can fail loudly instead of skewing the state. The unweighted forms
     * pass weight = 1, where the extra checks are vacuous; a WEIGHTED
     * state's `n` is the level's total weight (token mass), which is
-    * exactly what the quantile lookup consumes. */
-  private def histogram(df: DataFrame, group: Column, value: Column,
-                        weight: Column): DataFrame = {
+    * exactly what the quantile lookup consumes. Shared with
+    * [[PipelineMetrics]]' one-shot quantiles, which name the key
+    * columns `g` and `v`. */
+  private[meta] def histogram(df: DataFrame, group: Column, value: Column,
+                              weight: Column, groupAs: String = "group",
+                              valueAs: String = "value"): DataFrame = {
     val gS = group.cast("string")
     val vL = value.try_cast("long")
     val wL = weight.try_cast("long")
@@ -63,7 +66,7 @@ object ProfileState {
       when(value.cast("double") =!= vL.cast("double"), 1).otherwise(0),
       when(weight.cast("double") =!= wL.cast("double"), 1).otherwise(0))
     df.where(gS.isNotNull && vL.isNotNull && wL.isNotNull)
-      .groupBy(gS.as("group"), vL.as("value"))
+      .groupBy(gS.as(groupAs), vL.as(valueAs))
       .agg(sum(wL).as("n"), max(lossy).as("lossy"), min(wL).as("wmin"))
   }
 

@@ -78,18 +78,13 @@ object StreamingIngest {
         if (!batch.isEmpty) {
           val kv = KvStore.pack(batch, keyParts, qualifier, valueParts)
             .withColumn("batch_id", lit(batchId))
-          val sess = batch.sparkSession
-          val key = "spark.sql.sources.partitionOverwriteMode"
-          val prev = sess.conf.getOption(key)
-          sess.conf.set(key, "dynamic")
-          try
-            KvStore.writeLayout(kv, Seq(col("batch_id")))
-              .write.mode(SaveMode.Overwrite)
-              .partitionBy("batch_id", "salt").parquet(storePath)
-          finally prev match {
-            case Some(v) => sess.conf.set(key, v)
-            case None    => sess.conf.unset(key)
-          }
+          // dynamic overwrite as a per-write option, never a session
+          // conf: a replayed batch replaces only its own batch_id
+          // partitions, and no other query on the session is touched
+          KvStore.writeLayout(kv, Seq(col("batch_id")))
+            .write.mode(SaveMode.Overwrite)
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch_id", "salt").parquet(storePath)
         }
       }
   }

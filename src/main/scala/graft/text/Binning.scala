@@ -6,60 +6,73 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.TemporalOps.floorDivChunk
 
-/** Curriculum binning: assign every document an exact rank-proportional
-  * quantile bin over (score DESC, id ASC) — the "sort the corpus by
-  * quality and train easy→hard (or hard→easy) in k stages" step, as a
-  * first-class operator.
+/** Curriculum binning: assign every document an exact quantile bin over
+  * the (score DESC, id ASC) order — the "sort the corpus by quality and
+  * train easy→hard (or hard→easy) in k stages" step, as a first-class
+  * operator. One algorithm serves every form: bins of equal cumulative
+  * COST (token mass), with count bins run as cost bins of unit cost.
   *
-  * Semantics: with n live rows and global 0-based rank r in the
-  * (score DESC, id ASC) total order, `bin = 1 + floor(r * k / n)` —
-  * rank-proportional k-binning, identical to SQL
-  * `1 + (row_number() over (order by score desc, id) - 1) * k / n`
-  * under integer division, and equal to `ntile(k)` whenever n ≥ k
-  * (ntile's larger-groups-first sizing coincides with the floor map
-  * there; for n < k ntile renumbers 1..n while this map spreads bins —
-  * the documented, oracle-exact contract is the floor map).
+  * Semantics: with per-row integral cost w ≥ 0, W = Σw and `cum` a
+  * row's INCLUSIVE running cost in the order,
+  * `bin = 1 + floor((max(cum, 1) - 1) * k / W)` (all bins 1 when
+  * W = 0) — the SQL window
+  * `1 + ((greatest(sum(w) OVER (ORDER BY score DESC, id), 1) - 1) * k) / W`
+  * under integer division. With w = 1, cum is the 1-based rank r + 1
+  * and W = n, so this is `bin = 1 + floor(r * k / n)` — SQL
+  * `1 + (row_number() over (order by score desc, id) - 1) * k / n`,
+  * equal to `ntile(k)` whenever n ≥ k (for n < k ntile renumbers 1..n
+  * while the floor map spreads bins; the floor map is the
+  * oracle-exact contract).
   *
   * Scale shape (100 TB): the naive plan is a GLOBAL SORT plus a
-  * single-task ranking window — the canonical unscalable plan twice
+  * single-task running window — the canonical unscalable plan twice
   * over. Here instead:
   *
-  *  1. ONE aggregation builds the score-level histogram
-  *     (level, count, min id, max id) — bounded by `maxLevels` (the ppm
-  *     convention), collected to the driver;
-  *  2. the driver places all k-1 bin boundaries against the cumulative
-  *     level counts. A boundary landing on a level EDGE resolves
-  *     immediately (the histogram already carries each level's min/max
-  *     id); only boundaries INTERIOR to a level need row resolution:
-  *     the t-th smallest id within that level — a selection problem,
-  *     solved by id-chunk count refinement (the [[BudgetSelect]]
-  *     machinery) over a slim (boundary, id) frame that is
-  *     localCheckpointed ONCE, so refinement rounds never re-scan the
-  *     corpus, and the final ≤ `smallCap` remainder per cursor resolves
-  *     with ONE row_number window PARTITIONED BY the cursor (bounded
-  *     partitions by construction) — only the single winner row per
-  *     interior boundary reaches the driver;
-  *  3. the OUTPUT plan is map-only: `bin` is a folded comparison
-  *     against ≤ k-1 literal boundary positions — no join, no window,
-  *     no shuffle of the corpus at all (above 64 boundaries the fold
-  *     becomes a flat broadcast boundary-array aggregate instead of a
-  *     depth-k nested-when tree — still windowless and shuffle-free).
+  *  1. ONE aggregation builds the (group, level) histogram
+  *     (cost, rows, min id, max id) — bounded by `maxLevels` /
+  *     `maxHistRows` (the ppm convention), collected to the driver;
+  *  2. the driver places every group's k-1 cuts against cumulative
+  *     level cost. A cut on a level's LAST unit of mass resolves to the
+  *     level's max id at once; the rest need the largest id whose
+  *     within-level running cost (id ASC) stays ≤ the remainder — a
+  *     selection problem, solved by id-chunk COST refinement (the
+  *     [[BudgetSelect]] machinery) over a slim (cursor, id, cost) frame
+  *     localCheckpointed ONCE, so rounds never re-scan the corpus; all
+  *     groups' cursors refine together, one aggregation per round. The
+  *     final ≤ `smallCap` rows per cursor resolve with ONE running-sum
+  *     window PARTITIONED BY the cursor (bounded partitions by
+  *     construction), and only one aggregated row per cursor reaches
+  *     the driver. A cut can fall BEFORE a level's first row (that
+  *     row's cost alone exceeds the remainder; never with unit cost),
+  *     so a boundary carries an `open` flag — "every row of this level
+  *     is after the cut" — instead of an id that may not exist;
+  *  3. the OUTPUT plan is map-only for the single group: `bin` is a
+  *     folded comparison against ≤ k-1 literal boundaries — no join, no
+  *     window, no corpus shuffle. Real groups, and the single group
+  *     above 64 boundaries (where k-1 nested when() folds would build a
+  *     depth-k Catalyst tree), join a broadcast per-group boundary
+  *     array and fold it with a flat array aggregate instead — still
+  *     windowless and shuffle-free, so no group's ranking window owns
+  *     the job's wall clock.
   *
-  * Driver state: the level histogram (≤ maxLevels slim rows) + k-1
-  * boundary cursors + ≤ fanout chunk rows per cursor per round + one
-  * winner row per interior boundary at the finish. Nothing scales with
-  * corpus size, and nothing multiplies by smallCap.
+  * Driver state: the level histogram + (k-1) × groups boundary cursors
+  * + ≤ fanout chunk rows per cursor per round + one row per refined
+  * cursor at the finish. Nothing scales with corpus size, and nothing
+  * multiplies by smallCap.
   *
   * Preconditions (the [[BudgetSelect]] discipline): integral `score`
-  * (ppm a continuous one first), integral UNIQUE `id`; rows where id or
-  * score try_casts to null are DROPPED (no coherent rank exists for
-  * them). `k` must be ≥ 1 and n * k must fit a signed 64-bit product
-  * (loud require — every physical corpus passes).
+  * (ppm a continuous one first), integral UNIQUE `id`, integral
+  * NON-NEGATIVE cost (negative mass has no cumulative order — loud);
+  * rows where group, id, score or cost casts to null are DROPPED (no
+  * coherent rank exists for them). `k` must be ≥ 1, and a group's
+  * total cost must fit 64 bits (loud); the cut arithmetic runs in
+  * BigInt.
   */
 object Binning {
 
-  /** Annotate `df` with an exact `bin` column in 1..k (see object doc).
-    * Row order unspecified, like any projection. */
+  /** Annotate `df` with an exact `bin` column in 1..k: equal-count
+    * bins (see object doc). Row order unspecified, like any
+    * projection. */
   def quantileBins(df: DataFrame, id: Column, score: Column, k: Int,
                    maxLevels: Int = 1 << 20): DataFrame =
     quantileBinsImpl(df, id, score, k, maxLevels,
@@ -69,18 +82,13 @@ object Binning {
   private[graft] def quantileBinsImpl(df: DataFrame, id: Column,
                                       score: Column, k: Int, maxLevels: Int,
                                       fanout: Int, smallCap: Int): DataFrame =
-    quantileBinsCore(df, lit(allGroup), id, score, k, maxLevels, fanout,
-      smallCap)
+    quantileBinsByCostImpl(df, lit(allGroup), id, score, lit(1L), k,
+      maxLevels, fanout, smallCap)
 
   /** [[quantileBins]] computed SEPARATELY within every group — the
     * mixture-spec curriculum ("bin web and code each into their own k
-    * stages"). Same floor-map contract per group over that group's own
-    * (score DESC, id ASC) order, same scale shape: one (group, level)
-    * histogram, every group's boundaries placed on the driver, all
-    * groups' interior boundaries refined TOGETHER, and the assignment
-    * joins a broadcast per-group boundary list instead of the
-    * per-group ranking window whose single hottest group would
-    * otherwise own the job's wall clock. */
+    * stages") over each group's own (score DESC, id ASC) order, from
+    * one (group, level) histogram. */
   def quantileBinsPerGroup(df: DataFrame, group: Column, id: Column,
                            score: Column, k: Int,
                            maxHistRows: Int = 1 << 20): DataFrame =
@@ -90,7 +98,8 @@ object Binning {
   private[graft] def quantileBinsPerGroupImpl(
       df: DataFrame, group: Column, id: Column, score: Column, k: Int,
       maxHistRows: Int, fanout: Int, smallCap: Int): DataFrame =
-    quantileBinsCore(df, group, id, score, k, maxHistRows, fanout, smallCap)
+    quantileBinsByCostImpl(df, group, id, score, lit(1L), k, maxHistRows,
+      fanout, smallCap)
 
   private val allGroup = "__all"
 
@@ -99,36 +108,11 @@ object Binning {
     * boundary-array aggregate (flat expression tree) takes over. */
   private val foldedBoundaryCap = 64
 
-  // ── cost-weighted bins (equal token mass per bin) ──────────────────
-
-  /** COST-WEIGHTED curriculum bins: split the (score DESC, id ASC)
-    * order into k bins of EQUAL CUMULATIVE COST (token mass) instead of
-    * equal row count — the curriculum you actually schedule training
-    * with, where equal-doc bins mislead (a few huge documents dominate
-    * a stage's token budget).
-    *
-    * Semantics: with per-row integral cost w ≥ 0 and W = Σw, a row
-    * whose INCLUSIVE running cost in the order is `cum` gets
-    * `bin = 1 + floor((max(cum, 1) - 1) * k / W)` (all bins 1 when
-    * W = 0) — identical to the SQL window
-    * `1 + ((greatest(sum(w) OVER (ORDER BY score DESC, id), 1) - 1) * k) / W`
-    * under integer division, and EXACTLY [[quantileBins]] when w = 1.
-    * Zero-cost rows ride their position's mass point.
-    *
-    * Scale shape: the [[quantileBins]] machinery with cost sums in
-    * place of row counts — ONE (group, level) cost histogram, driver
-    * boundary placement against cumulative cost, within-level
-    * refinement by id-chunk COST histograms over a localCheckpointed
-    * slim (sel, id, cost) frame, a bounded per-cursor window finish,
-    * and a map-only (or broadcast boundary-array) assignment. The one
-    * new case: a boundary's within-level cost target can fall BEFORE
-    * the level's first row (its cost alone exceeds the remainder), so
-    * boundaries carry an `open` flag — "every row of this level is
-    * after the cut" — instead of an id that may not exist.
-    *
-    * Preconditions: [[quantileBins]]' (integral score, integral UNIQUE
-    * id, null/cast-null rows dropped) plus integral NON-NEGATIVE cost
-    * (negative mass has no cumulative order — loud). */
+  /** COST-WEIGHTED curriculum bins: k bins of EQUAL CUMULATIVE COST
+    * (token mass) instead of equal row count — the curriculum you
+    * actually schedule training with, where equal-doc bins mislead (a
+    * few huge documents dominate a stage's token budget). Zero-cost
+    * rows ride their position's mass point. */
   def quantileBinsByCost(df: DataFrame, id: Column, score: Column,
                          cost: Column, k: Int,
                          maxLevels: Int = 1 << 20): DataFrame =
@@ -232,6 +216,10 @@ object Binning {
         require(rounds <= 64, "refinement failed to converge — are the " +
           "ids unique within each group? (duplicate or non-integral ids " +
           "collapse chunks)")
+        // converged cursors (≤ smallCap rows) move their rows into
+        // `finals` and LEAVE pending, so finished rows are never
+        // re-aggregated and no in-band chunk sentinel is needed (a Long
+        // chunk id can be ANY value once widths reach 1)
         val (small, big) = state.partition(_._2._3 <= smallCap)
         if (small.nonEmpty) {
           small.foreach { case (i, (_, _, n, rem)) => finalRem(i) = (n, rem) }
@@ -310,7 +298,9 @@ object Binning {
       }
     }
 
-    // 4. assignment: the quantileBins fold with the open flag
+    // 4. assignment: a row is after a boundary when its level is
+    // lower, or the same and (open or id > boundary id); bin = 1 + the
+    // number of boundaries the row is after
     def afterExpr(lvlC: Column, idC: Column, lvl: Column, bid: Column,
                   open: Column): Column =
       when(lvlC < lvl || (lvlC === lvl && (open || idC > bid)), 1).otherwise(0)
@@ -344,212 +334,6 @@ object Binning {
           (coalesce(aggregate(col("__bounds"), lit(0), (acc, b) =>
             acc + afterExpr(qL, idL, b.getField("lvl"), b.getField("bid"),
               b.getField("open"))),
-            lit(0)) + 1).cast("int"))
-        .drop("__bg", "__bounds")
-    }
-  }
-
-  private def quantileBinsCore(df: DataFrame, group: Column, id: Column,
-                               score: Column, k: Int, maxHistRows: Int,
-                               fanout: Int, smallCap: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
-    require(k >= 1, "k must be >= 1")
-    require(fanout >= 2 && smallCap >= 1, "fanout >= 2, smallCap >= 1")
-    val gS = group.cast("string")
-    val idL = id.try_cast("long")
-    val qL = score.try_cast("long")
-    val live = df.where(gS.isNotNull && idL.isNotNull && qL.isNotNull)
-    if (k == 1) return live.withColumn("bin", lit(1))
-
-    // 1. (group, level) histogram with per-level id extremes — edge
-    // boundaries resolve from these without touching the corpus again
-    val hist = live.groupBy(gS.as("__g"), qL.as("__q"))
-      .agg(count(lit(1)).as("__n"), min(idL).as("__lo"), max(idL).as("__hi"))
-      .limit(maxHistRows + 1)
-      .collect()
-    require(hist.length <= maxHistRows,
-      s"more than $maxHistRows distinct (group, score-level) rows — " +
-        "quantize the score (ppm convention) or raise the cap")
-    if (hist.isEmpty) return live.withColumn("bin", lit(1))
-
-    // 2. per group: place the k-1 boundaries against cumulative level
-    // counts. sel = interior boundaries awaiting within-level rank
-    // resolution: (group, boundary index) -> (level, local rank t)
-    var resolved = Map.empty[(String, Int), (Long, Long)] // -> (level, id*)
-    var sels = List.empty[((String, Int), Long, Long)]
-    val byGroup = hist.groupBy(_.getString(0))
-    byGroup.foreach { case (g, rows) =>
-      val levels = rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).sortBy(_._1)(Ordering[Long].reverse)
-      val n = levels.map(_._2).sum
-      require(n <= Long.MaxValue / k,
-        s"n * k overflows 64 bits (group=$g, n=$n, k=$k)")
-      val starts = levels.scanLeft(0L)((acc, l) => acc + l._2)
-      for (i <- 1 until k) {
-        val rank = ((BigInt(i) * n + k - 1) / k).toLong - 1 // ceil(i*n/k)-1 >= 0
-        var j = 0
-        while (starts(j + 1) <= rank) j += 1
-        val (lvl, cnt, lo, hi) = levels(j)
-        val t = rank - starts(j)
-        if (t == 0L) resolved += (g, i) -> (lvl, lo)
-        else if (t == cnt - 1) resolved += (g, i) -> (lvl, hi)
-        else sels ::= ((g, i), lvl, t)
-      }
-    }
-
-    val spark = df.sparkSession
-    def frame(rows: Seq[Row], fs: (String, org.apache.spark.sql.types.DataType)*) =
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-        StructType(fs.map { case (nm, t) => StructField(nm, t, nullable = false) }))
-
-    // 3. interior selections: t-th smallest id within a (group, level),
-    // refined by id-chunk count histograms over a slim (sel, id) frame
-    // checkpointed ONCE — rounds never re-scan the corpus. Every
-    // group's boundaries refine together (one aggregation per round),
-    // so the round count is the WORST cursor's O(log_fanout(idspan)).
-    if (sels.nonEmpty) {
-      val selIndex = sels.map(_._1).sorted.zipWithIndex.toMap
-      val selDf = frame(
-        sels.sortBy(s => selIndex(s._1)).map { case (key, lvl, _) =>
-          Row(selIndex(key), key._1, lvl)
-        }, "__sel" -> IntegerType, "__sg" -> StringType, "__slvl" -> LongType)
-      var pending = live.select(gS.as("__sg"), qL.as("__slvl"), idL.as("__id"))
-        .join(broadcast(selDf), Seq("__sg", "__slvl"))
-        .select(col("__sel"), col("__id"))
-        .localCheckpoint(false)
-      // state per ACTIVE cursor: (lo, hi, count, t)
-      var state: Map[Int, (Long, Long, Long, Long)] = {
-        val lvlStats = hist.map(r => (r.getString(0), r.getLong(1)) ->
-          (r.getLong(2), r.getLong(3), r.getLong(4))).toMap
-        sels.map { case (key, lvl, t) =>
-          val (cnt, lo, hi) = lvlStats((key._1, lvl))
-          selIndex(key) -> (lo, hi, cnt, t)
-        }.toMap
-      }
-      var finals = pending.limit(0)
-      val finalT = scala.collection.mutable.Map.empty[Int, (Long, Long)] // (cnt, t)
-      var rounds = 0
-      while (state.nonEmpty) {
-        rounds += 1
-        require(rounds <= 64, "refinement failed to converge — are the " +
-          "ids unique within each group? (duplicate or non-integral ids " +
-          "collapse chunks)")
-        // converged cursors (count ≤ smallCap) move their rows into
-        // `finals` and LEAVE pending — the BudgetSelect discipline,
-        // which avoids re-aggregating finished rows every remaining
-        // round and needs no in-band chunk sentinel (a Long chunk id
-        // can be ANY value once widths reach 1)
-        val (small, big) = state.partition(_._2._3 <= smallCap)
-        if (small.nonEmpty) {
-          small.foreach { case (i, (_, _, cnt, t)) => finalT(i) = (cnt, t) }
-          finals = finals.unionByName(
-            pending.join(broadcast(frame(small.keys.toSeq.sorted.map(Row(_)),
-              "__sel" -> IntegerType)), Seq("__sel"), "left_semi"))
-        }
-        if (big.isEmpty) state = Map.empty
-        else {
-          val widths = big.toSeq.sortBy(_._1).map { case (i, (lo, hi, _, _)) =>
-            Row(i, graft.core.Refine.chunkWidth(lo, hi, fanout))
-          }
-          val chunked = pending
-            .join(broadcast(frame(widths, "__sel" -> IntegerType, "__w" -> LongType)),
-              Seq("__sel"))
-            .withColumn("__c", floorDivChunk(col("__id"), col("__w")))
-          val chist = chunked.groupBy(col("__sel"), col("__c"))
-            .agg(count(lit(1)).as("__n"), min(col("__id")).as("__lo"),
-              max(col("__id")).as("__hi"))
-            .collect()
-          val nextState = scala.collection.mutable.Map.empty[Int, (Long, Long, Long, Long)]
-          val stars = chist.groupBy(_.getInt(0)).map { case (i, rows) =>
-            val t0 = big(i)._4
-            val chunks = rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
-              r.getLong(4))).sortBy(_._1)
-            // exists: t0 < count by the invariant carried down the loop
-            val ((cs, cn, clo, chi), before) =
-              graft.core.Refine.boundary[(Long, Long, Long, Long)](
-                chunks.toSeq, _._2, t0).get
-            nextState(i) = (clo, chi, cn, t0 - before)
-            Row(i, cs)
-          }.toSeq
-          pending = chunked
-            .join(broadcast(frame(stars.sortBy(_.getInt(0)),
-              "__sel" -> IntegerType, "__cstar" -> LongType)), Seq("__sel"))
-            .where(col("__c") === col("__cstar"))
-            .select(col("__sel"), col("__id"))
-            .localCheckpoint(false)
-          state = nextState.toMap
-        }
-      }
-      // bounded exact finish, fully DISTRIBUTED (the BudgetSelect
-      // discipline): each converged cursor's rows fit smallCap, so one
-      // row_number window PARTITIONED BY the cursor resolves the t-th
-      // smallest id with ≤ smallCap rows per partition — no
-      // unpartitioned window, and only the single winner row per
-      // interior boundary (≤ (k-1) × groups rows total, the same size
-      // as `resolved` itself) ever reaches the driver, where the old
-      // finish collected and sorted every cursor's id array
-      // ((k-1) × groups × smallCap longs in the worst case)
-      val tDf = frame(
-        finalT.toSeq.sortBy(_._1).map { case (i, (cnt, t)) => Row(i, cnt, t) },
-        "__sel" -> IntegerType, "__cnt" -> LongType, "__t" -> LongType)
-      val wSel = Window.partitionBy(col("__sel")).orderBy(col("__id"))
-      val picked = finals.join(broadcast(tDf), Seq("__sel"))
-        .withColumn("__rn", row_number().over(wSel).cast("long") - 1L)
-        .withColumn("__pn", count(lit(1)).over(Window.partitionBy(col("__sel"))))
-        .where(col("__rn") === col("__t"))
-        .select(col("__sel"), col("__id"), col("__pn"))
-        .collect()
-      val selKey = sels.map { case (key, lvl, _) => selIndex(key) -> (key, lvl) }.toMap
-      require(picked.length == finalT.size,
-        s"boundary refinement lost cursors (resolved ${picked.length} " +
-          s"of ${finalT.size})")
-      picked.foreach { r =>
-        val i = r.getInt(0)
-        val (cnt, t) = finalT(i)
-        require(r.getLong(2) == cnt && t < cnt,
-          s"boundary $i refinement lost rows (have ${r.getLong(2)}, want $cnt)")
-        val (key, lvl) = selKey(i)
-        resolved += key -> (lvl, r.getLong(1))
-      }
-    }
-
-    // 4. assignment. Single (constant) group at modest k: a folded
-    // literal comparison — map-only, no join/window/shuffle in the
-    // output plan. Real groups — and the single group above
-    // `foldedBoundaryCap` boundaries, where k-1 NESTED when() folds
-    // would build a depth-k Catalyst tree that risks codegen fallback
-    // or analysis StackOverflow: one broadcast join on the group key
-    // against each group's ≤ (k-1)-entry boundary array, then the same
-    // fold as a bounded ARRAY aggregate (flat, depth-constant) — still
-    // no window and no corpus shuffle.
-    def afterExpr(lvlC: Column, idC: Column, lvl: Column, bid: Column): Column =
-      when(lvlC < lvl || (lvlC === lvl && idC > bid), 1).otherwise(0)
-    val groupsResolved = resolved.keys.map(_._1).toSet
-    if (groupsResolved.forall(_ == allGroup) &&
-        resolved.size <= foldedBoundaryCap) {
-      val after = resolved.foldLeft(lit(0)) { case (acc, (_, (lvl, bid))) =>
-        acc + afterExpr(qL, idL, lit(lvl), lit(bid))
-      }
-      live.withColumn("bin", (after + 1).cast("int"))
-    } else {
-      val bRows = resolved.toSeq
-        .groupBy(_._1._1).toSeq.sortBy(_._1)
-        .map { case (g, bs) =>
-          Row(g, bs.sortBy(_._1._2).map { case (_, (lvl, bid)) => Row(lvl, bid) })
-        }
-      val entry = StructType(Seq(StructField("lvl", LongType, nullable = false),
-        StructField("bid", LongType, nullable = false)))
-      val bDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(bRows, 1),
-        StructType(Seq(StructField("__bg", StringType, nullable = false),
-          StructField("__bounds", org.apache.spark.sql.types.ArrayType(entry,
-            containsNull = false), nullable = false))))
-      live.withColumn("__bg", gS)
-        .join(broadcast(bDf), Seq("__bg"), "left")
-        .withColumn("bin",
-          (coalesce(aggregate(col("__bounds"), lit(0), (acc, b) =>
-            acc + afterExpr(qL, idL, b.getField("lvl"), b.getField("bid"))),
             lit(0)) + 1).cast("int"))
         .drop("__bg", "__bounds")
     }

@@ -141,6 +141,18 @@ class BinningSpec extends AnyFunSuite {
     assert(e.getMessage.contains("score-level"))
   }
 
+  test("boundaries on a level's first row resolve exactly") {
+    // n = 12, k = 3, levels of 3/4/5 rows: bins 1 and 2 end at 0-based
+    // ranks 3 and 7, the first rows of the second and third levels
+    val df = ((0 until 3).map(i => (100L + i, 9L)) ++
+      (0 until 4).map(i => (200L + i, 5L)) ++
+      (0 until 5).map(i => (300L + i, 1L))).toDF("id", "q").cache()
+    val want = bruteBins(df, 3)
+    assert(want.values.toSeq.sorted === Seq(1, 1, 1, 1, 2, 2, 2, 2, 3, 3, 3, 3))
+    assert(gotBins(df, 3) === want)
+    assert(gotBins(df, 3, fanout = 2, smallCap = 1) === want)
+  }
+
   // ── cost-weighted bins ─────────────────────────────────────────────
 
   /** Independent answer: the running-cost window formula. */

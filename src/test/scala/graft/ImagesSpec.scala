@@ -338,7 +338,6 @@ class ImagesSpec extends AnyFunSuite {
   test("audioFeatures: hand-computed energy / zero-crossings / peak") {
     val spark = SparkTestSession.spark
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // samples [3, -2, 0, -1, 5]: energy 39, crossings 4 (v>=0 sign
     // convention puts 0 on the positive side), peak 5
     val data = java.nio.ByteBuffer.allocate(10)
@@ -361,7 +360,6 @@ class ImagesSpec extends AnyFunSuite {
   test("decoded image stats flow through Multimodal.decodeFeatures as length 4") {
     val spark = SparkTestSession.spark
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val rows = Seq(
       (1L, "image/png", Images.encodePng(4, 3, fill(1L)), Map.empty[String, String]),
       (2L, "image/jpeg", Images.encodeJpegGray(6, 2, 130), Map.empty[String, String]),

@@ -20,7 +20,6 @@ class SpreadWidthSpec extends AnyFunSuite {
     spark.sessionState.conf.numShufflePartitions
 
   test("spreadScan widens a large under-split input to full parallelism") {
-    import spark.implicits._
     // ~2 MB of Catalyst-estimated input in ONE partition (the
     // unsplittable-file shape) — far above parts × 64 KB floor
     val big = spark.range(100000)
@@ -36,7 +35,6 @@ class SpreadWidthSpec extends AnyFunSuite {
   }
 
   test("spreadScan clamps a toy input by the bytes floor") {
-    import spark.implicits._
     val tiny = spark.range(10)
       .select(col("id").as("doc_id"), lit("t").as("__t"))
       .coalesce(1)
@@ -48,7 +46,6 @@ class SpreadWidthSpec extends AnyFunSuite {
   }
 
   test("spreadScan is a no-op on an already-wide input") {
-    import spark.implicits._
     val wide = spark.range(1000).select(col("id").as("doc_id"))
       .repartition(parts, col("doc_id"))
     val spread = Dedup.spreadScan(wide, col("doc_id"))
@@ -70,7 +67,6 @@ class SpreadWidthSpec extends AnyFunSuite {
 
   test("distributed quantile prefix-sum matches brute-force ranks on a " +
     "histogram large enough to leave the single-window path") {
-    import spark.implicits._
     // ~300k distinct levels (the sf0.1 shape that serialized a 1.2 s
     // single-task window) — the cached histogram crosses the 4 MB/part
     // floor, so cumLevels takes the two-level prefix-sum branch

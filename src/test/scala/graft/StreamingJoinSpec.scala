@@ -11,7 +11,6 @@ import graft.streaming.StreamingIngest
   * across micro-batches; rows outside the window never pair. */
 class StreamingJoinSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  import spark.implicits._
 
   test("watermarked interval join pairs within-window rows across batches") {
     val dir = Files.createTempDirectory("graft_sjoin")

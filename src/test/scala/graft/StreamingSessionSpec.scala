@@ -12,7 +12,6 @@ import graft.streaming.StreamingIngest
   * and no emission for sessions the watermark hasn't passed. */
 class StreamingSessionSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
-  import spark.implicits._
 
   /** Write batch files with strictly increasing mtimes: the file source
     * orders batches by modification time, and same-millisecond writes

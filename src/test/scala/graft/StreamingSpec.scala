@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
@@ -78,6 +79,59 @@ class StreamingSpec extends AnyFunSuite {
     Files.deleteIfExists(dir.resolve("ckpt/commits/.0.crc"))
     run()
     assert(KvStore.read(spark, store).count() === 2)
+  }
+
+  test("muprStream sets dynamic overwrite per write, never in the session conf") {
+    // SQLExecution copies the session SQL conf into each job's local
+    // properties, so a job carrying partitionOverwriteMode=dynamic ran
+    // while the session conf said dynamic — which every other query on
+    // that session would then inherit
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val marker = "graft.test.listenerMarker"
+    val modes = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val markerSeen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).foreach { p =>
+          Option(p.getProperty(key)).foreach(modes.add)
+          if (p.getProperty(marker) != null) markerSeen.countDown()
+        }
+    }
+    val dir = Files.createTempDirectory("graft_stream_conf")
+    val inDir = dir.resolve("incoming"); Files.createDirectory(inDir)
+    val store = dir.resolve("store").toString
+    val meta = Seq(("lot1_x.dat", "L1", 202032, 2.0),
+      ("lot2_x.dat", "L2", 202032, 3.0))
+      .toDF("File_Name", "Lot", "Lato_Start_WW", "Lots_seq_key")
+    def line(unit: Int): String = Seq(unit.toString, "SS01", "2", "1",
+      "1.0", "7", "0.5", "A", "P", "M", "t_a").mkString(D)
+    def run(): Unit =
+      StreamingIngest.muprStream(spark, inDir.toString + "/*.dat", meta,
+          keyParts = Seq(col("Lot"), col("Unit_Testing_Seq_Key")),
+          qualifier = col("Test_Name"),
+          valueParts = Seq(col("Measurement_Value")), storePath = store)
+        .trigger(Trigger.AvailableNow())
+        .option("checkpointLocation", dir.resolve("ckpt").toString)
+        .start()
+        .awaitTermination(60000)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // two micro-batches: batch 1's overwrite must be dynamic, or it
+      // would have replaced batch 0's partitions too
+      Files.writeString(inDir.resolve("lot1_x.dat"), line(1001))
+      run()
+      Files.writeString(inDir.resolve("lot2_x.dat"), line(2002))
+      run()
+      assert(KvStore.read(spark, store).count() === 2)
+      // the listener bus is FIFO: once the marker job's start arrives,
+      // every earlier job's start has been seen
+      spark.sparkContext.setLocalProperty(marker, "1")
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setLocalProperty(marker, null)
+      assert(markerSeen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(!modes.contains("dynamic"),
+      s"stream jobs ran under session partitionOverwriteMode: $modes")
   }
 
   test("muprStream quarantines corrupt lines exactly like batch readClean") {
