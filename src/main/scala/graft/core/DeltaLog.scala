@@ -6,10 +6,11 @@ import org.apache.spark.sql.types.StructType
 
 import graft.meta.PipelineMetrics
 
-/** The ONE delta-log layout and fold contract every rolling state
-  * index in the engine shares — [[graft.dedup.UrlSeen]] (URL state),
-  * [[graft.dedup.SigSeen]] (media-signature state),
-  * [[graft.ingest.CdxLog]] (the rolling archive index):
+/** The ONE generation protocol for persisted state — the delta logs
+  * here, the bucketed indexes ([[graft.sources.BucketedIndex]]) and
+  * snapshot state ([[GenState]]) — and the delta-log layout every
+  * rolling state index shares ([[graft.dedup.UrlSeen]],
+  * [[graft.dedup.SigSeen]], [[graft.ingest.CdxLog]]):
   * {{{
   *   path/gen-<%016d>/delta-b<batchId>/  parquet + _SUCCESS
   *   path/delta-b<batchId>/              legacy (generation-0) layout
@@ -22,26 +23,23 @@ import graft.meta.PipelineMetrics
   * out-of-order backfill and fails loudly — silently treating it as a
   * replay would permanently drop that batch's novel rows.
   *
-  * GENERATIONS make compaction an atomic cutover instead of a manual
-  * pointer swap: [[compactCutover]] materializes the min-folded state
-  * as the FIRST delta of generation N+1 (stamped with the source
-  * watermark), and the generation becomes current the instant that
-  * delta's `_SUCCESS` marker lands — a single filesystem create, the
-  * same commit discipline [[GenState]] uses for snapshot state. There
-  * is no pointer FILE to flip and therefore no window between "new
-  * state written" and "pointer flipped": a reader resolves the current
-  * generation as the highest-numbered `gen-*` directory holding at
-  * least one committed delta, so before the marker it sees exactly the
-  * old generation and after it exactly the new — never neither, never
-  * both. A crash mid-compaction leaves an orphan generation with no
-  * committed delta (invisible; the retry overwrites it). Post-cutover
-  * folds land in the new generation automatically ([[foldDir]]
-  * resolves through the same rule). Old generations are NOT deleted by
-  * the cutover — [[pruneGenerations]] is the explicit maintenance step,
-  * and it keeps the immediately previous state so a reader that
-  * resolved the old generation just before a cutover still finds its
-  * files. A pre-generation path (bare `delta-b*` under the root) reads
-  * as generation 0 and migrates on its first cutover.
+  * GENERATIONS: the `gen-<n>[-b<batchId>]` name is parsed only here
+  * ([[genDirsUnder]]); the current generation is the highest-numbered
+  * one its family calls valid, else the root as legacy generation 0
+  * ([[resolveGeneration]]); retention keeps the newest valid ones
+  * ([[pruneBy]]). A family supplies only its validity test — a
+  * committed delta here, the params marker for bucketed indexes, the
+  * generation's own `_SUCCESS` for snapshots. For a delta log,
+  * [[compactCutover]] materializes the min-folded state as the FIRST
+  * delta of generation N+1 (stamped with the source watermark), which
+  * becomes current the instant that delta's `_SUCCESS` marker lands —
+  * no pointer file to flip, so a reader sees exactly the old or the
+  * new generation, never neither or both. A crash mid-compaction
+  * leaves an invisible orphan the retry overwrites; later folds land
+  * in the new generation through the same rule. Old generations stay
+  * until [[pruneGenerations]], which keeps the previous state for a
+  * reader that resolved it just before the cutover. A pre-generation
+  * path reads as generation 0 and migrates on its first cutover.
   *
   * Single writer per path (folds, cutover, prune) is the caller's
   * contract, as everywhere in this lifecycle; concurrent cutovers
@@ -56,6 +54,7 @@ object DeltaLog {
 
   val deltaPrefix = "delta-b"
   val genPrefix = "gen-"
+  private val batchMark = "-b"
 
   def fsRoot(spark: SparkSession, path: String)
       : (org.apache.hadoop.fs.FileSystem, org.apache.hadoop.fs.Path) = {
@@ -84,9 +83,31 @@ object DeltaLog {
       if (deltas.isEmpty) None else Some(deltas.map(_.batchId).max)
   }
 
-  private def genDirName(n: Long): String = f"$genPrefix$n%016d"
+  /** A generation's name; a [[GenState]] commit stamps its batchId. */
+  private[graft] def genDirName(n: Long,
+                                batchId: Option[Long] = None): String =
+    f"$genPrefix$n%016d" + batchId.fold("")(b => s"$batchMark$b")
 
   def genDir(path: String, n: Long): String = s"$path/${genDirName(n)}"
+
+  /** A parsed generation directory (batchId: a GenState stamp). */
+  final case class Gen(n: Long, dir: org.apache.hadoop.fs.Path,
+                       batchId: Option[Long])
+
+  /** The one parser of the `gen-<n>[-b<batchId>]` name. None for junk:
+    * another prefix, an unparseable or overflowing number or stamp. */
+  private def parseGenName(name: String): Option[(Long, Option[Long])] =
+    if (!name.startsWith(genPrefix)) None
+    else {
+      val body = name.drop(genPrefix.length)
+      body.indexOf(batchMark) match {
+        case -1 => body.toLongOption.map(g => (g, None))
+        case i =>
+          for (g <- body.take(i).toLongOption;
+               b <- body.drop(i + batchMark.length).toLongOption)
+            yield (g, Some(b))
+      }
+    }
 
   /** Committed deltas directly under `root` — each delta dir costs one
     * listStatus serving both the `_SUCCESS` check and the parquet
@@ -105,26 +126,33 @@ object DeltaLog {
         }
     }
 
-  /** The `gen-*` directories under `root`, number-parsed, newest
-    * first. Junk names (unparseable or overflowing numbers) and plain
-    * files are ignored — they can never shadow real state. */
+  /** The `gen-*` directories under `root`, parsed, newest first. Junk
+    * names ([[parseGenName]]) and plain files are ignored — they can
+    * never shadow real state, and no prune ever deletes them. */
   def genDirsUnder(fs: org.apache.hadoop.fs.FileSystem,
-                   root: org.apache.hadoop.fs.Path)
-      : Seq[(Long, org.apache.hadoop.fs.Path)] =
+                   root: org.apache.hadoop.fs.Path): Seq[Gen] =
     fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
-      val n = st.getPath.getName
-      if (!n.startsWith(genPrefix)) None
-      else scala.util.Try(n.drop(genPrefix.length).toLong).toOption
-        .map(g => (g, st.getPath))
-    }.sortBy(-_._1)
+      parseGenName(st.getPath.getName)
+        .map { case (g, b) => Gen(g, st.getPath, b) }
+    }.sortBy(-_.n)
+
+  /** Every generation at `path` with its `valid` verdict, newest first;
+    * empty on a missing root. */
+  private[graft] def generations(spark: SparkSession, path: String)
+      (valid: (org.apache.hadoop.fs.FileSystem,
+               org.apache.hadoop.fs.Path) => Boolean): Seq[(Gen, Boolean)] = {
+    val (fs, root) = fsRoot(spark, path)
+    if (!fs.exists(root)) Seq.empty
+    else genDirsUnder(fs, root).map(g => (g, valid(fs, g.dir)))
+  }
 
   /** Generic current-generation resolver — the ONE rule every
-    * generation-versioned store shares (delta logs here; the minhash
-    * bucketed-table store with its params-marker validity): the
+    * generation-versioned store shares (delta logs here; bucketed
+    * indexes with their params marker; snapshots with `_SUCCESS`): the
     * highest-numbered `gen-*` dir satisfying `valid`, else the root
     * itself as generation 0 (the legacy flat layout). Orphans (crashed
-    * cutovers — `valid` false) are skipped; that skip IS the reader
-    * side of cutover atomicity. */
+    * writes — `valid` false) are skipped; that skip IS the reader side
+    * of commit atomicity. */
   def resolveGeneration(spark: SparkSession, path: String)
                        (valid: (org.apache.hadoop.fs.FileSystem,
                                 org.apache.hadoop.fs.Path) => Boolean)
@@ -132,8 +160,8 @@ object DeltaLog {
     val (fs, root) = fsRoot(spark, path)
     if (!fs.exists(root)) return (0L, path)
     genDirsUnder(fs, root)
-      .find { case (_, p) => valid(fs, p) }
-      .map { case (g, p) => (g, p.toString) }
+      .find(g => valid(fs, g.dir))
+      .map(g => (g.n, g.dir.toString))
       .getOrElse((0L, path))
   }
 
@@ -146,7 +174,7 @@ object DeltaLog {
     val (fs, root) = fsRoot(spark, path)
     if (!fs.exists(root)) return Listing(0L, path, Seq.empty)
     genDirsUnder(fs, root).iterator
-      .map { case (g, p) => Listing(g, p.toString, deltasUnder(fs, p)) }
+      .map(g => Listing(g.n, g.dir.toString, deltasUnder(fs, g.dir)))
       .find(_.deltas.nonEmpty)
       .getOrElse(Listing(0L, path, deltasUnder(fs, root)))
   }
@@ -267,34 +295,33 @@ object DeltaLog {
       (fs, p) => deltasUnder(fs, p).nonEmpty,
       st => st.getPath.getName.startsWith(deltaPrefix))
 
-  /** The shared prune rule behind [[pruneGenerations]] and the minhash
-    * store's prune: keep the current generation and the newest valid
-    * predecessor (or the legacy root state when no older generation
-    * exists); delete other generation dirs, orphans, and — once two
-    * generation dirs cover the keep-previous guarantee — the legacy
-    * root entries `legacyOf` selects. */
+  /** The one retention rule ([[pruneGenerations]], the bucketed
+    * indexes' prune, [[GenState.prune]]): keep the newest `keepLast`
+    * valid generations (clamped to ≥ 1: the current one always stays);
+    * delete every other generation and every orphan, and — once the
+    * kept generations reach `keepLast` — the legacy root entries
+    * `legacyOf` selects. A failed delete is skipped, not thrown (a
+    * commit that landed must not report failure; the next prune
+    * retries). Returns the deleted paths. */
   private[graft] def pruneBy(spark: SparkSession, path: String,
       valid: (org.apache.hadoop.fs.FileSystem,
               org.apache.hadoop.fs.Path) => Boolean,
-      legacyOf: org.apache.hadoop.fs.FileStatus => Boolean)
-      : Seq[String] = {
+      legacyOf: org.apache.hadoop.fs.FileStatus => Boolean,
+      keepLast: Int = 2): Seq[String] = {
     val (fs, root) = fsRoot(spark, path)
-    if (!fs.exists(root)) return Seq.empty
-    val gens = genDirsUnder(fs, root)
-      .map { case (g, p) => (g, p, valid(fs, p)) }
-    val validGens = gens.filter(_._3).map(_._1)
-    if (validGens.isEmpty) return Seq.empty // legacy-only: no prune
-    val current = validGens.max
-    val keep: Set[Long] =
-      Set(current) ++ validGens.filter(_ < current).take(1)
-    val dropGens = gens.filterNot(g => keep.contains(g._1)).map(_._2)
+    val gens = generations(spark, path)(valid)
+    val k = math.max(1, keepLast)
+    val keep = gens.collect { case (g, true) => g.n }.distinct.take(k).toSet
+    val dropGens = gens.collect {
+      case (g, ok) if !ok || !keep.contains(g.n) => g.dir
+    }
     val legacy =
-      if (keep.size > 1)
+      if (keep.size >= k)
         fs.listStatus(root).toSeq.filter(legacyOf).map(_.getPath)
       else Seq.empty
-    val victims = dropGens ++ legacy
-    victims.foreach(p => fs.delete(p, true))
-    victims.map(_.toString)
+    (dropGens ++ legacy).filter(p =>
+      try fs.delete(p, true) catch { case _: java.io.IOException => false })
+      .map(_.toString)
   }
 }
 

@@ -3,17 +3,18 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Generation-versioned parquet state — the shared persistence layer
-  * under every rolling-corpus manifest in this library (budget-cutoff
-  * histograms, profile histograms): small driver-validated snapshots
-  * that must survive crashed writes, reject concurrent writers loudly,
-  * and skip replayed streaming batches.
+/** Generation-versioned parquet snapshots — the snapshot family of the
+  * one generation protocol ([[DeltaLog]]) under every rolling-corpus
+  * manifest here (budget-cutoff and profile histograms, the BPE merge
+  * table): small driver-validated states that must survive crashed
+  * writes, reject concurrent writers loudly, and skip replayed
+  * streaming batches.
   *
-  * Layout: `path/` holds complete snapshot generations
-  * `gen-<%016d>[-b<batchId>]`; the CURRENT state is the
-  * highest-numbered generation carrying the committer's `_SUCCESS`
-  * marker. Writers NEVER touch an existing generation: every commit
-  * materializes the NEXT generation (mode errorifexists) and only then
+  * Layout: `path/gen-<%016d>[-b<batchId>]`; naming, listing, the
+  * current-generation rule and retention are [[DeltaLog]]'s, with a
+  * generation VALID when it carries its `_SUCCESS` marker. What is
+  * this family's own: writers NEVER touch an existing generation —
+  * every commit writes the NEXT one (mode errorifexists) and only then
   * prunes, so
   *
   *  - a crash mid-write leaves an unmarked orphan that readers skip —
@@ -23,14 +24,14 @@ import org.apache.spark.sql.types.StructType
   *  - pruning keeps the immediately previous valid generation too (a
   *    reader that resolved the old current just before a writer pruned
   *    must still find its files);
-  *  - two concurrent writers race for the same next generation number
-  *    and the errorifexists write makes the loser FAIL LOUDLY instead
-  *    of silently dropping its fold (single writer at a time is the
-  *    caller's contract);
+  *  - two concurrent writers race for the same next number (max over
+  *    ALL generations, orphans included, + 1) and the errorifexists
+  *    write makes the loser FAIL LOUDLY instead of silently dropping
+  *    its fold (single writer at a time is the caller's contract);
   *  - a streaming fold's `batchId` rides the committing generation's
-  *    directory NAME — atomic with the parquet commit itself, no
-  *    marker-file crash window — so an at-least-once foreachBatch
-  *    replay is detected by [[batchWatermark]] and skipped.
+  *    NAME — atomic with the parquet commit itself, no marker-file
+  *    crash window — so an at-least-once foreachBatch replay is
+  *    detected by [[batchWatermark]] and skipped ([[fold]]).
   *
   * A bare-parquet path written by a pre-generation version reads as the
   * current state and migrates to a generation on the next commit.
@@ -39,64 +40,34 @@ import org.apache.spark.sql.types.StructType
   */
 object GenState {
 
-  private val genPrefix = "gen-"
+  private def committed(fs: org.apache.hadoop.fs.FileSystem,
+                        gen: org.apache.hadoop.fs.Path): Boolean =
+    fs.exists(new org.apache.hadoop.fs.Path(gen, "_SUCCESS"))
 
-  private def fsRoot(spark: SparkSession, path: String) = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
-  /** All generation dirs under the root, valid or not: (number, path,
-    * hasSuccessMarker, folded streaming batchId if any). */
-  private def genDirs(fs: org.apache.hadoop.fs.FileSystem,
-                      root: org.apache.hadoop.fs.Path)
-      : Seq[(Long, org.apache.hadoop.fs.Path, Boolean, Option[Long])] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.filter(_.isDirectory).flatMap { st =>
-      val n = st.getPath.getName
-      if (!n.startsWith(genPrefix)) None
-      else {
-        val body = n.drop(genPrefix.length)
-        val (genPart, batchPart) = body.indexOf("-b") match {
-          case -1 => (body, None)
-          case i  => (body.take(i), Some(body.drop(i + 2)))
-        }
-        scala.util.Try(genPart.toLong).toOption.map { g =>
-          (g, st.getPath,
-            fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")),
-            batchPart.flatMap(b => scala.util.Try(b.toLong).toOption))
-        }
-      }
-    }
+  private def generations(spark: SparkSession, path: String) =
+    DeltaLog.generations(spark, path)(committed)
 
   /** Read the CURRENT state (latest valid generation; a legacy
     * bare-parquet root reads as-is — including throwing the reader's
     * own loud error for a missing or schema-foreign path). */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val (fs, root) = fsRoot(spark, path)
-    genDirs(fs, root).filter(_._3).sortBy(-_._1).headOption match {
-      case Some((_, p, _, _)) => spark.read.parquet(p.toString)
-      case None               => spark.read.parquet(path)
-    }
-  }
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(DeltaLog.resolveGeneration(spark, path)(committed)._2)
 
   /** True when nothing committed lives at `path` — no valid generation
     * and no legacy bare-parquet files (orphaned generation dirs do not
     * count). The streaming cold-start init gate. */
   def isUninitialized(spark: SparkSession, path: String): Boolean = {
-    val (fs, root) = fsRoot(spark, path)
-    genDirs(fs, root).forall(!_._3) &&
+    val (fs, root) = DeltaLog.fsRoot(spark, path)
+    generations(spark, path).forall(!_._2) &&
       (!fs.exists(root) || fs.listStatus(root).forall(_.isDirectory))
   }
 
   /** The highest streaming batchId folded into any surviving valid
     * generation — the foreachBatch replay guard. None when the state
     * holds no batch-stamped generations. */
-  def batchWatermark(spark: SparkSession, path: String): Option[Long] = {
-    val (fs, root) = fsRoot(spark, path)
-    val ids = genDirs(fs, root).filter(_._3).flatMap(_._4)
-    if (ids.isEmpty) None else Some(ids.max)
-  }
+  def batchWatermark(spark: SparkSession, path: String): Option[Long] =
+    generations(spark, path).collect { case (g, true) => g.batchId }
+      .flatten.maxOption
 
   /** Snapshot of a state dir's generation machinery — the ops probe
     * matching [[graft.meta.PipelineMetrics.indexHealth]]: more than two
@@ -117,15 +88,13 @@ object GenState {
     * (like [[read]]) on a path with neither generations nor legacy
     * parquet. */
   def health(spark: SparkSession, path: String): StateHealth = {
-    val (fs, root) = fsRoot(spark, path)
-    val gens = genDirs(fs, root)
-    val valid = gens.filter(_._3)
+    val gens = generations(spark, path)
+    val valid = gens.collect { case (g, true) => g }
     StateHealth(
-      currentGen = valid.map(_._1).sorted.lastOption,
+      currentGen = valid.headOption.map(_.n),
       validGens = valid.size,
       orphans = gens.size - valid.size,
-      batchWatermark = { val ids = valid.flatMap(_._4)
-        if (ids.isEmpty) None else Some(ids.max) },
+      batchWatermark = valid.flatMap(_.batchId).maxOption,
       rows = read(spark, path).count())
   }
 
@@ -137,56 +106,56 @@ object GenState {
     * bounded two snapshots no matter how many commits it has seen). */
   def commit(spark: SparkSession, rows: Seq[Row], schema: StructType,
              path: String, batchId: Option[Long] = None): Unit = {
-    val (fs, root) = fsRoot(spark, path)
-    val existing = genDirs(fs, root)
-    val next = (existing.map(_._1) :+ 0L).max + 1
-    val suffix = batchId.map(b => s"-b$b").getOrElse("")
+    val (fs, root) = DeltaLog.fsRoot(spark, path)
+    val next = (generations(spark, path).map(_._1.n) :+ 0L).max + 1
     val nextPath = new org.apache.hadoop.fs.Path(root,
-      f"$genPrefix$next%016d$suffix")
+      DeltaLog.genDirName(next, batchId))
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)
       .write.mode("errorifexists").parquet(nextPath.toString)
     // a generation is only VALID (readable, prune-surviving) with its
-    // _SUCCESS marker. On a deployment where the committer writes none
+    // _SUCCESS marker, and a committer may write none
     // (mapreduce.fileoutputcommitter.marksuccessfuljobs=false, common
-    // on object stores) protecting only the committing call is NOT
-    // enough: the NEXT commit's sweep would classify this unmarked
-    // generation as a crash-orphan and delete it, and read() could
-    // never resolve it either. The write above has already completed,
-    // so the commit IS done — write the marker ourselves; failing to
-    // create it must fail the commit loudly rather than hand the next
-    // sweep a doomed snapshot.
+    // on object stores) — the next sweep would then delete this
+    // snapshot as a crash-orphan. The write above completed, so the
+    // commit IS done: write the marker ourselves, loudly failing the
+    // commit if we cannot. Marked, it is the newest valid generation,
+    // which the sweep below always keeps.
     val marker = new org.apache.hadoop.fs.Path(nextPath, "_SUCCESS")
     if (!fs.exists(marker)) fs.create(marker, false).close()
-    // the just-written generation stays explicitly protected anyway —
-    // a racing concurrent sweep between write and marker must not
-    // delete the data either
-    pruneImpl(spark, path, keepLast = 2, protectGen = Some(next))
+    prune(spark, path)
   }
 
-  /** Retention sweep, also runnable standalone (ops hygiene on a dir
-    * whose writer died before its commit-time auto-prune, or to tighten
-    * retention to `keepLast = 1`): deletes every unmarked crash-orphan
-    * and all but the newest `keepLast` VALID generations. The current
-    * generation is never deleted (`keepLast` is clamped to ≥ 1), and a
-    * legacy bare-parquet root has no generation dirs so the sweep is a
-    * no-op there. Per-dir delete failures are non-fatal (a reader
+  /** Retention sweep ([[DeltaLog.pruneBy]]), also runnable standalone
+    * (ops hygiene on a dir whose writer died before its commit-time
+    * auto-prune, or to tighten retention to `keepLast = 1`): deletes
+    * every unmarked crash-orphan and all but the newest `keepLast`
+    * VALID generations. The current generation is never deleted
+    * (`keepLast` is clamped to ≥ 1), and a legacy bare-parquet root is
+    * never touched. Per-dir delete failures are non-fatal (a reader
     * holding an open file on some filesystems) — the next sweep
     * retries them. Returns the number of directories deleted. */
   def prune(spark: SparkSession, path: String, keepLast: Int = 2): Int =
-    pruneImpl(spark, path, keepLast, protectGen = None)
+    DeltaLog.pruneBy(spark, path, committed, _ => false, keepLast).size
 
-  private def pruneImpl(spark: SparkSession, path: String, keepLast: Int,
-                        protectGen: Option[Long]): Int = {
-    val (fs, root) = fsRoot(spark, path)
-    val gens = genDirs(fs, root)
-    val keep = gens.filter(_._3).map(_._1).sorted
-      .takeRight(math.max(1, keepLast)).toSet
-    gens.count { case (g, p, valid, _) =>
-      val stale = ((!valid) || !keep.contains(g)) &&
-        !protectGen.contains(g)
-      stale && (try fs.delete(p, true) catch {
-        case _: java.io.IOException => false
-      })
+  /** The one streaming-aware fold over snapshot state. A batch-stamped
+    * fold (`batchId` set — foreachBatch is at-least-once, and a
+    * histogram fold is not idempotent) is skipped as a replay when
+    * `batchId` is at or below [[batchWatermark]], and cold-starts —
+    * `merge` gets None — on uninitialized state; a plain fold (`batchId`
+    * None) reads the current state, loudly failing on a missing path.
+    * `merge` returns the validated rows of the next state, committed
+    * with `batchId` in the generation's name. Returns true when the
+    * fold was applied, false when skipped as a replay. */
+  private[graft] def fold(spark: SparkSession, path: String,
+                          schema: StructType, batchId: Option[Long])
+                         (merge: Option[DataFrame] => Seq[Row]): Boolean =
+    if (batchId.exists(b => batchWatermark(spark, path).exists(b <= _)))
+      false
+    else {
+      val current =
+        if (batchId.isDefined && isUninitialized(spark, path)) None
+        else Some(read(spark, path))
+      commit(spark, merge(current), schema, path, batchId)
+      true
     }
-  }
 }

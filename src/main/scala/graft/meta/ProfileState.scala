@@ -70,12 +70,10 @@ object ProfileState {
       .agg(sum(wL).as("n"), max(lossy).as("lossy"), min(wL).as("wmin"))
   }
 
-  /** Collect + validate (cap, lossy) strictly BEFORE any write, then
-    * commit as the next generation. */
-  private def validateAndCommit(spark: SparkSession,
-                                hist: DataFrame, path: String,
-                                maxHistRows: Int,
-                                batchId: Option[Long]): Unit = {
+  /** Collect + validate (cap, lossy) strictly BEFORE any write; the
+    * rows then commit as the next generation. */
+  private def validated(hist: DataFrame,
+                        maxHistRows: Int): Seq[org.apache.spark.sql.Row] = {
     val rows = hist.limit(maxHistRows + 1).collect()
     require(rows.length <= maxHistRows,
       s"more than $maxHistRows distinct (group, value) rows — quantize " +
@@ -85,10 +83,8 @@ object ProfileState {
         "cast — quantize the metric first (ppm/cents convention)")
     require(rows.forall(_.getLong(4) >= 0L),
       "negative weights break the cumulative order — weights must be >= 0")
-    graft.core.GenState.commit(spark,
-      rows.toSeq.map(r =>
-        org.apache.spark.sql.Row(r.getString(0), r.getLong(1), r.getLong(2))),
-      stateSchema, path, batchId)
+    rows.toSeq.map(r =>
+      org.apache.spark.sql.Row(r.getString(0), r.getLong(1), r.getLong(2)))
   }
 
   /** Persist the corpus's (group, value) histogram as profile state.
@@ -99,8 +95,9 @@ object ProfileState {
                                 path: String,
                                 maxHistRows: Int = 1 << 20,
                                 weight: Column = lit(1L)): Unit =
-    validateAndCommit(df.sparkSession, histogram(df, group, value, weight),
-      path, maxHistRows, batchId = None)
+    graft.core.GenState.commit(df.sparkSession,
+      validated(histogram(df, group, value, weight), maxHistRows),
+      stateSchema, path)
 
   /** Ungrouped [[writeProfileStatePerGroup]] (one constant group). */
   def writeProfileState(df: DataFrame, value: Column, path: String,
@@ -118,7 +115,7 @@ object ProfileState {
                                  maxHistRows: Int = 1 << 20,
                                  weight: Column = lit(1L)): Unit =
     appendFold(batch, group, value, weight, path, maxHistRows,
-      batchId = None, allowInit = false)
+      batchId = None)
 
   /** Ungrouped [[appendProfileStatePerGroup]]. */
   def appendProfileState(batch: DataFrame, value: Column, path: String,
@@ -136,16 +133,9 @@ object ProfileState {
                                       value: Column, path: String,
                                       batchId: Long,
                                       maxHistRows: Int = 1 << 20,
-                                      weight: Column = lit(1L)): Boolean = {
-    val spark = batch.sparkSession
-    if (graft.core.GenState.batchWatermark(spark, path).exists(batchId <= _))
-      false
-    else {
-      appendFold(batch, group, value, weight, path, maxHistRows,
-        batchId = Some(batchId), allowInit = true)
-      true
-    }
-  }
+                                      weight: Column = lit(1L)): Boolean =
+    appendFold(batch, group, value, weight, path, maxHistRows,
+      batchId = Some(batchId))
 
   /** Ungrouped [[appendProfileStatePerGroupBatch]]. */
   def appendProfileStateBatch(batch: DataFrame, value: Column, path: String,
@@ -155,24 +145,23 @@ object ProfileState {
     appendProfileStatePerGroupBatch(batch, lit(allGroup), value, path,
       batchId, maxLevels, weight)
 
+  /** The fold behind every append ([[graft.core.GenState.fold]] —
+    * replay skip and streaming cold-start). */
   private def appendFold(batch: DataFrame, group: Column, value: Column,
                          weight: Column, path: String, maxHistRows: Int,
-                         batchId: Option[Long], allowInit: Boolean): Unit = {
-    val spark = batch.sparkSession
-    val batchHist = histogram(batch, group, value, weight)
-    val merged =
-      if (allowInit && graft.core.GenState.isUninitialized(spark, path))
-        batchHist
-      else
-        readProfileState(spark, path)
+                         batchId: Option[Long]): Boolean =
+    graft.core.GenState.fold(batch.sparkSession, path, stateSchema,
+        batchId) { existing =>
+      val batchHist = histogram(batch, group, value, weight)
+      validated(existing.fold(batchHist)(
+        _.select(col("group"), col("value"), col("n"))
           // persisted state is already validated
           .withColumn("lossy", lit(0)).withColumn("wmin", lit(0L))
           .unionByName(batchHist)
           .groupBy(col("group"), col("value"))
           .agg(sum(col("n")).as("n"), max(col("lossy")).as("lossy"),
-            min(col("wmin")).as("wmin"))
-    validateAndCommit(spark, merged, path, maxHistRows, batchId)
-  }
+            min(col("wmin")).as("wmin"))), maxHistRows)
+    }
 
   /** Read the CURRENT profile state (latest valid generation). The read
     * contract — do not read the root path directly as parquet. */

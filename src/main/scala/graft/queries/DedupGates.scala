@@ -267,8 +267,7 @@ object DedupGates {
         col("doc_id"), pairs)
       val scored = docs.join(canon, Seq("doc_id"))
         .select(col("doc_id"), col("canonical_id"),
-          round(TextOps.qualityStruct(coalesce(col("text"), lit("")))
-            .getField("alpha_ratio") * 1e6, 0).cast("long").as("q_ppm"))
+          SelectionGates.qPpm(coalesce(col("text"), lit(""))))
         .localCheckpoint(true) // keepBest scans twice (agg + semi-join)
       Dedup.keepBestPerCluster(scored, col("canonical_id"),
           col("doc_id"), col("q_ppm"))

@@ -108,8 +108,7 @@ object GateFixtures {
   private[queries] def budgetScored(s: SparkSession, dir: String): DataFrame =
     Tables(s, dir, "documents")
       .select(col("doc_id"), col("source"),
-        round(TextOps.qualityStruct(col("text")).getField("alpha_ratio")
-          * 1e6, 0).cast("long").as("q_ppm"),
+        SelectionGates.qPpm(col("text")),
         TextOps.tokenCount(col("text")).cast("long").as("n_tokens"))
 
   private[queries] val qstateFor = new IndexCache("graft_gate_pstate",
@@ -136,8 +135,7 @@ object GateFixtures {
     (s, dir, path) => {
       val scored = Tables(s, dir, "documents")
         .select(col("doc_id"),
-          round(TextOps.qualityStruct(col("text")).getField("alpha_ratio")
-            * 1e6, 0).cast("long").as("q_ppm"),
+          SelectionGates.qPpm(col("text")),
           col("n_chars"))
       graft.meta.ProfileState.writeProfileState(
         scored.where(col("doc_id") % 3 =!= 0), col("q_ppm"), path,

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ingest.{KvStore, MucrReader, MuprReader, TriggerMeta}
@@ -60,6 +61,24 @@ object IngestGates {
       |WHERE rowKey LIKE '10%'
       |ORDER BY rowKey, columnName, packedValue""".stripMargin
 
+  /** The lifecycle both DSv2 gates share: the lineitem pack, the
+    * gate's own `write` of it (returning the store path), then the
+    * read-back through graft.sources.KvSource → prefix scan → unpack. */
+  private def dsv2Lifecycle(s: SparkSession, dir: String)
+                           (write: DataFrame => String): DataFrame = {
+    val li = graft.Tables(s, dir, "lineitem")
+    val kv = KvStore.pack(li,
+      keyParts = Seq(col("l_orderkey")),
+      qualifier = col("l_returnflag"),
+      valueParts = Seq(col("l_linenumber"),
+        col("l_quantity").cast("decimal(12,2)")),
+      delim = Sep)
+    val back = s.read.format("graft.sources.KvSource").load(write(kv))
+    KvStore.unpack(KvOps.prefixScan(back, "rowKey", "10"), delim = Sep)
+      .select(col("rowKey"), col("columnName"), col("packedValue"))
+      .orderBy(col("rowKey"), col("columnName"), col("packedValue"))
+  }
+
   val gates: Seq[Gate] = Seq(
 
     // §7.2 slice (Utils.scala:154-236 → 377-402): explicit-schema CSV
@@ -118,21 +137,9 @@ object IngestGates {
     // graft.sources.KvSource (SupportsPushDownFilters) instead of the
     // generic parquet source — proving the store is swappable for a live
     // KV backend without changing query results.
-    Gate("kv_dsv2_scan", Oracle, (s, dir) => {
-      val li = graft.Tables(s, dir, "lineitem")
-      val kv = KvStore.pack(li,
-        keyParts = Seq(col("l_orderkey")),
-        qualifier = col("l_returnflag"),
-        valueParts = Seq(col("l_linenumber"),
-          col("l_quantity").cast("decimal(12,2)")),
-        delim = Sep)
-      val store = cachedStore(s"dsv2|$dir", "graft_gate_dsv2")(
-        KvStore.write(kv, _))
-      val back = s.read.format("graft.sources.KvSource").load(store)
-      KvStore.unpack(KvOps.prefixScan(back, "rowKey", "10"), delim = Sep)
-        .select(col("rowKey"), col("columnName"), col("packedValue"))
-        .orderBy(col("rowKey"), col("columnName"), col("packedValue"))
-    },
+    Gate("kv_dsv2_scan", Oracle, (s, dir) =>
+      dsv2Lifecycle(s, dir)(kv =>
+        cachedStore(s"dsv2|$dir", "graft_gate_dsv2")(KvStore.write(kv, _))),
       kvLifecycleSql),
 
     // K1 through the DSv2 WRITE boundary: same lifecycle as kv_dsv2_scan
@@ -141,23 +148,15 @@ object IngestGates {
     // SupportsWrite path, whose RequiresDistributionAndOrdering must
     // reproduce the KvStore.write layout (salt dirs, rowKey-sorted
     // files) for the read-side pruning to keep working.
-    Gate("kv_dsv2_write", Oracle, (s, dir) => {
-      val li = graft.Tables(s, dir, "lineitem")
-      val kv = KvStore.pack(li,
-        keyParts = Seq(col("l_orderkey")),
-        qualifier = col("l_returnflag"),
-        valueParts = Seq(col("l_linenumber"),
-          col("l_quantity").cast("decimal(12,2)")),
-        delim = Sep)
-      // the WRITE is this gate's operator — rebuilt per invocation on
-      // purpose; only the dir registration keeps it from leaking
-      val store = freshStore("graft_gate_dsv2w")
-      kv.write.format("graft.sources.KvSource").mode("overwrite").save(store)
-      val back = s.read.format("graft.sources.KvSource").load(store)
-      KvStore.unpack(KvOps.prefixScan(back, "rowKey", "10"), delim = Sep)
-        .select(col("rowKey"), col("columnName"), col("packedValue"))
-        .orderBy(col("rowKey"), col("columnName"), col("packedValue"))
-    },
+    Gate("kv_dsv2_write", Oracle, (s, dir) =>
+      dsv2Lifecycle(s, dir) { kv =>
+        // the WRITE is this gate's operator — rebuilt per invocation on
+        // purpose; only the dir registration keeps it from leaking
+        val store = freshStore("graft_gate_dsv2w")
+        kv.write.format("graft.sources.KvSource").mode("overwrite")
+          .save(store)
+        store
+      },
       // the DSv2 WRITE path is held to the same from-source answer — a
       // row lost or duplicated anywhere in write-distribute-sort-commit
       // breaks this gate

@@ -120,6 +120,32 @@ object MediaGates {
       |  FROM documents
       |  WHERE doc_id % 2 = 1 AND doc_id >= 401 AND doc_id < 440)""".stripMargin
 
+  /** The WAV fixtures' samples re-assembled from the SOURCE text: 16-bit
+    * LE signed samples from consecutive hex-pair bytes of its blob (lo
+    * byte first; a trailing odd byte is ignored, and the RIFF pad byte
+    * is outside the data chunk). CTEs `wav` (doc_id, hx, nb) and `wsv`
+    * (doc_id, sample index i, value v), shared by the decode and the
+    * audio-feature oracles. */
+  private val wavSamplesSql: String =
+    """wav AS (
+      |  SELECT doc_id, lower(hex(cast(text AS blob))) AS hx,
+      |    coalesce(octet_length(cast(text AS blob)), 0) AS nb
+      |  FROM documents WHERE doc_id % 2 = 0),
+      |ws AS (SELECT doc_id, hx, unnest(range(nb // 2)) AS i FROM wav),
+      |wv AS (
+      |  SELECT doc_id, i,
+      |    (16 * (instr('0123456789abcdef',
+      |             substr(hx, cast(4*i+1 AS int), 1)) - 1)
+      |       + instr('0123456789abcdef',
+      |             substr(hx, cast(4*i+2 AS int), 1)) - 1)
+      |    + 256 * (16 * (instr('0123456789abcdef',
+      |             substr(hx, cast(4*i+3 AS int), 1)) - 1)
+      |       + instr('0123456789abcdef',
+      |             substr(hx, cast(4*i+4 AS int), 1)) - 1) AS u
+      |  FROM ws),
+      |wsv AS (SELECT doc_id, i,
+      |    CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS v FROM wv)""".stripMargin
+
   /** One family's rolling-fold oracle: the single-signature docs, plus,
     * with `twoFrame`, the two-frame docs. */
   private def rollingSql(twoFrame: Boolean): String =
@@ -812,31 +838,12 @@ object MediaGates {
         .orderBy(col("doc_id"))
     },
       // the decoded units are re-assembled from the SOURCE columns: WAV
-      // 16-bit LE signed samples from consecutive hex-pair bytes of the
-      // text blob (lo byte first; a trailing odd byte is ignored, and the
-      // RIFF pad byte is outside the data chunk); BMP pixel bytes from
-      // the builder's linear fill over (row, pos) with the 4-byte-aligned
-      // stride — padding positions excluded, exactly what the decoder
-      // must skip. All stats integer-exact, so the hash compare is free
-      // of fp concerns.
-      """WITH wav AS (
-        |  SELECT doc_id, lower(hex(cast(text AS blob))) AS hx,
-        |    coalesce(octet_length(cast(text AS blob)), 0) AS nb
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |ws AS (SELECT doc_id, hx, unnest(range(nb // 2)) AS i FROM wav),
-        |wv AS (
-        |  SELECT doc_id,
-        |    (16 * (instr('0123456789abcdef',
-        |             substr(hx, cast(4*i+1 AS int), 1)) - 1)
-        |       + instr('0123456789abcdef',
-        |             substr(hx, cast(4*i+2 AS int), 1)) - 1)
-        |    + 256 * (16 * (instr('0123456789abcdef',
-        |             substr(hx, cast(4*i+3 AS int), 1)) - 1)
-        |       + instr('0123456789abcdef',
-        |             substr(hx, cast(4*i+4 AS int), 1)) - 1) AS u
-        |  FROM ws),
-        |wsv AS (SELECT doc_id,
-        |    CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS v FROM wv),
+      // samples from the text's hex bytes (`wavSamplesSql`); BMP pixel
+      // bytes from the builder's linear fill over (row, pos) with the
+      // 4-byte-aligned stride — padding positions excluded, exactly what
+      // the decoder must skip. All stats integer-exact, so the hash
+      // compare is free of fp concerns.
+      s"""WITH $wavSamplesSql,
         |wagg AS (SELECT doc_id, count(*) AS n, sum(v) AS s,
         |    min(v) AS mn, max(v) AS mx FROM wsv GROUP BY doc_id),
         |wout AS (
@@ -1030,24 +1037,7 @@ object MediaGates {
       // PCM features recomputed from the text's hex bytes: the same
       // signed-sample re-assembly as multimodal_features, then Σ v²,
       // lag-window sign-change count, and max |v|
-      """WITH wav AS (
-        |  SELECT doc_id, lower(hex(cast(text AS blob))) AS hx,
-        |    coalesce(octet_length(cast(text AS blob)), 0) AS nb
-        |  FROM documents WHERE doc_id % 2 = 0),
-        |ws AS (SELECT doc_id, hx, unnest(range(nb // 2)) AS i FROM wav),
-        |wv AS (
-        |  SELECT doc_id, i,
-        |    (16 * (instr('0123456789abcdef',
-        |             substr(hx, cast(4*i+1 AS int), 1)) - 1)
-        |       + instr('0123456789abcdef',
-        |             substr(hx, cast(4*i+2 AS int), 1)) - 1)
-        |    + 256 * (16 * (instr('0123456789abcdef',
-        |             substr(hx, cast(4*i+3 AS int), 1)) - 1)
-        |       + instr('0123456789abcdef',
-        |             substr(hx, cast(4*i+4 AS int), 1)) - 1) AS u
-        |  FROM ws),
-        |wsv AS (SELECT doc_id, i,
-        |    CASE WHEN u >= 32768 THEN u - 65536 ELSE u END AS v FROM wv),
+      s"""WITH $wavSamplesSql,
         |wz AS (SELECT doc_id, i, v,
         |    lag(v) OVER (PARTITION BY doc_id ORDER BY i) AS pv FROM wsv),
         |agg AS (

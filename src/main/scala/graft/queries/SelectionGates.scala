@@ -30,10 +30,11 @@ object SelectionGates {
   private def nn(by: Option[String]): String =
     by.fold("")(c => s"$c IS NOT NULL AND ")
 
-  /** Alpha-ratio quality in ppm — `round(alpha_ratio * 1e6)` — the
-    * score every selection gate ranks by, in Spark and in DuckDB. */
-  private val qPpm: Column =
-    round(TextOps.qualityStruct(col("text")).getField("alpha_ratio")
+  /** Alpha-ratio quality of `text` in ppm — `round(alpha_ratio * 1e6)`
+    * as `q_ppm` — the score every selection gate ranks by, in Spark and
+    * (`qPpmSql`) in DuckDB. */
+  private[queries] def qPpm(text: Column): Column =
+    round(TextOps.qualityStruct(text).getField("alpha_ratio")
       * 1e6, 0).cast("long").as("q_ppm")
   private val qPpmSql =
     """cast(round(len(regexp_extract_all(text, '[A-Za-z]'))
@@ -125,7 +126,7 @@ object SelectionGates {
   private def topMGate(name: String, by: Option[String]): Gate =
     Gate(name, Bench, (s, dir) => {
       val scored = Tables(s, dir, "documents")
-        .select(Seq(col("doc_id")) ++ by.map(col) :+ qPpm: _*)
+        .select(Seq(col("doc_id")) ++ by.map(col) :+ qPpm(col("text")): _*)
       by.fold(BudgetSelect.takeTop(scored, col("doc_id"), col("q_ppm"),
           m = 1234L))(c => BudgetSelect.takeTopPerGroup(scored, col(c),
           col("doc_id"), col("q_ppm"), ms = sourceTopM.toMap))
@@ -158,7 +159,7 @@ object SelectionGates {
   private def binsGate(name: String, by: Option[String], k: Int,
       byCost: Boolean): Gate = Gate(name, Bench, (s, dir) => {
     val scored = Tables(s, dir, "documents")
-      .select(Seq(col("doc_id")) ++ by.map(col) ++ Seq(qPpm) ++
+      .select(Seq(col("doc_id")) ++ by.map(col) ++ Seq(qPpm(col("text"))) ++
         (if (byCost) Seq(col("n_chars")) else Nil): _*)
     val (id, q, c) = (col("doc_id"), col("q_ppm"), col("n_chars"))
     ((by, byCost) match {
@@ -315,7 +316,7 @@ object SelectionGates {
       psPpm: Seq[Long]): Gate = Gate(name, Bench, (s, dir) => {
     import PipelineMetrics._
     val scored = Tables(s, dir, "documents")
-      .select(by.map(col).toSeq ++ Seq(qPpm, col("n_chars")): _*)
+      .select(by.map(col).toSeq ++ Seq(qPpm(col("text")), col("n_chars")): _*)
     weightedRows(by.fold(exactQuantilesWeightedPpm(scored, col("q_ppm"),
         col("n_chars"), psPpm = psPpm))(c =>
       exactQuantilesWeightedPerGroupPpm(scored, col(c), col("q_ppm"),

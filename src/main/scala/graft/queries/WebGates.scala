@@ -727,8 +727,7 @@ object WebGates {
         .toDF("doc_id", "url", "text")
       val scored = docs.select(col("doc_id"),
         graft.ops.HtmlExprs.urlHost(col("url")).as("host"),
-        round(TextOps.qualityStruct(coalesce(col("text"), lit("")))
-          .getField("alpha_ratio") * 1e6, 0).cast("long").as("q_ppm"))
+        SelectionGates.qPpm(coalesce(col("text"), lit(""))))
       graft.text.BudgetSelect.takeTopPerGroupUniform(scored, col("host"),
           col("doc_id"), col("q_ppm"), m = 3L)
         .orderBy(col("doc_id"))

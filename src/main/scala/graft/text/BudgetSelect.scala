@@ -390,19 +390,17 @@ object BudgetSelect {
       StructField("min_cost", LongType, nullable = false)))
   }
 
-  /** Cap-validate collected histogram rows, then commit them as the
-    * NEXT state generation — validation strictly BEFORE the path is
-    * touched, and the commit lands in a fresh generation dir
+  /** Collect and cap-validate histogram rows — strictly BEFORE the path
+    * is touched; the rows then commit in a fresh generation dir
     * ([[graft.core.GenState.commit]]), so neither a bad batch nor a
     * crashed write can destroy the previous valid state. */
-  private def writeStateRows(spark: org.apache.spark.sql.SparkSession,
-                             rows: Array[org.apache.spark.sql.Row],
-                             path: String, maxHistRows: Int,
-                             batchId: Option[Long] = None): Unit = {
+  private def capped(hist: DataFrame,
+                     maxHistRows: Int): Seq[org.apache.spark.sql.Row] = {
+    val rows = hist.limit(maxHistRows + 1).collect()
     require(rows.length <= maxHistRows,
       s"more than $maxHistRows (group, quality-level) rows — quantize " +
         "the score (ppm convention) or raise the cap")
-    graft.core.GenState.commit(spark, rows.toSeq, stateSchema, path, batchId)
+    rows.toSeq
   }
 
   /** Per-group persisted state: the (group, level) histogram as parquet
@@ -413,23 +411,22 @@ object BudgetSelect {
   def writeBudgetStatePerGroup(df: DataFrame, group: Column, id: Column,
                                quality: Column, cost: Column, path: String,
                                maxHistRows: Int = 1 << 20): Unit =
-    writeStateRows(df.sparkSession,
-      stateHistogram(df, group, id, quality, cost)
-        .limit(maxHistRows + 1).collect(),
-      path, maxHistRows)
+    graft.core.GenState.commit(df.sparkSession,
+      capped(stateHistogram(df, group, id, quality, cost), maxHistRows),
+      stateSchema, path)
 
   /** Fold a batch's (group, level) histogram into existing per-group
     * state — one batch-only aggregation, the existing corpus is never
     * re-scanned. The merge is collected (cap-checked) before any write,
-    * and the result commits as a NEW state generation (see the layout
-    * note above writeStateRows): a crash mid-write cannot lose the
-    * prior state, and a concurrent second appender fails loudly on the
-    * generation collision instead of silently dropping a fold. */
+    * and the result commits as a NEW state generation (see [[capped]]):
+    * a crash mid-write cannot lose the prior state, and a concurrent
+    * second appender fails loudly on the generation collision instead
+    * of silently dropping a fold. */
   def appendBudgetStatePerGroup(batch: DataFrame, group: Column, id: Column,
                                 quality: Column, cost: Column, path: String,
                                 maxHistRows: Int = 1 << 20): Unit =
     appendFold(batch, group, id, quality, cost, path, maxHistRows,
-      batchId = None, allowInit = false)
+      batchId = None)
 
   /** [[appendBudgetState]] made effectively-once for streaming
     * foreachBatch: foreachBatch is at-least-once, and a histogram fold
@@ -451,38 +448,24 @@ object BudgetSelect {
                                      id: Column, quality: Column,
                                      cost: Column, path: String,
                                      batchId: Long,
-                                     maxHistRows: Int = 1 << 20): Boolean = {
-    val spark = batch.sparkSession
-    if (stateBatchWatermark(spark, path).exists(batchId <= _)) false
-    else {
-      appendFold(batch, group, id, quality, cost, path, maxHistRows,
-        batchId = Some(batchId), allowInit = true)
-      true
-    }
-  }
+                                     maxHistRows: Int = 1 << 20): Boolean =
+    appendFold(batch, group, id, quality, cost, path, maxHistRows,
+      batchId = Some(batchId))
 
-  /** Shared fold: merge the batch histogram into the current state and
-    * commit as the next generation. `allowInit` lets the streaming
-    * cold-start create state from the first batch; the plain append
-    * keeps a missing/unreadable path loud. */
+  /** Shared fold ([[graft.core.GenState.fold]] — replay skip and
+    * streaming cold-start): merge the batch histogram into the current
+    * state and commit as the next generation. */
   private def appendFold(batch: DataFrame, group: Column, id: Column,
                          quality: Column, cost: Column, path: String,
-                         maxHistRows: Int, batchId: Option[Long],
-                         allowInit: Boolean): Unit = {
-    val spark = batch.sparkSession
-    val existing =
-      if (allowInit && graft.core.GenState.isUninitialized(spark, path))
-        None // nothing committed yet and no legacy files: init from batch
-      else Some(readBudgetState(spark, path))
-    val batchHist = stateHistogram(batch, group, id, quality, cost)
-    val merged = existing.fold(batchHist)(_.unionByName(batchHist))
-      .groupBy(col("group"), col("q_level"))
-      .agg(sum(col("total_cost")).as("total_cost"),
-        min(col("min_cost")).as("min_cost"))
-      .limit(maxHistRows + 1)
-      .collect()
-    writeStateRows(spark, merged, path, maxHistRows, batchId)
-  }
+                         maxHistRows: Int, batchId: Option[Long]): Boolean =
+    graft.core.GenState.fold(batch.sparkSession, path, stateSchema,
+        batchId) { existing =>
+      val batchHist = stateHistogram(batch, group, id, quality, cost)
+      capped(existing.fold(batchHist)(_.unionByName(batchHist))
+        .groupBy(col("group"), col("q_level"))
+        .agg(sum(col("total_cost")).as("total_cost"),
+          min(col("min_cost")).as("min_cost")), maxHistRows)
+    }
 
   /** [[budgetSelectPerGroup]] with its (group, level) histogram read
     * from persisted state instead of a corpus scan — the mixture-spec

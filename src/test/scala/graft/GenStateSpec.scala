@@ -119,4 +119,51 @@ class GenStateSpec extends AnyFunSuite {
     assert(GenState.prune(spark, path) === 0)
     assert(currentValue(path) === 9L)
   }
+
+  test("one name parser: a batch-stamped generation resolves beside " +
+      "hostile names, which never shadow or lose the real state") {
+    val root = tmp(); val path = root.resolve("state").toString
+    GenState.commit(spark, Seq(Row(1L)), schema, path, batchId = Some(7L))
+    GenState.commit(spark, Seq(Row(2L)), schema, path, batchId = Some(9L))
+    val dir = root.resolve("state")
+    assert(genDirNames(dir) ===
+      Seq("gen-0000000000000001-b7", "gen-0000000000000002-b9"))
+    // junk names, even marked, are not generations: an unparseable
+    // number, an overflowing one, an unparseable batch stamp
+    val junk = Seq("gen-xyz", "gen-99999999999999999999",
+      "gen-0000000000000004-bxyz")
+    junk.foreach { n =>
+      assert(dir.resolve(n).toFile.mkdirs())
+      java.nio.file.Files.createFile(dir.resolve(n).resolve("_SUCCESS"))
+    }
+    // a FILE with a generation name, and an unmarked crash-orphan
+    java.nio.file.Files.createFile(dir.resolve("gen-0000000000000005"))
+    val orphan = dir.resolve("gen-0000000000000003").toFile
+    assert(orphan.mkdirs())
+    java.nio.file.Files.write(orphan.toPath.resolve("part-orphan.parquet"),
+      Array[Byte](1, 2, 3))
+
+    assert(currentValue(path) === 2L)
+    assert(GenState.batchWatermark(spark, path) === Some(9L))
+    assert(!GenState.isUninitialized(spark, path))
+    val h = GenState.health(spark, path)
+    assert((h.currentGen, h.validGens, h.orphans, h.batchWatermark,
+      h.rows) === ((Some(2L), 2, 1, Some(9L), 1L)))
+
+    // a replayed batch is skipped; the next one commits past the orphan
+    // (max over all generations + 1) and the auto-prune sweeps it
+    assert(!GenState.fold(spark, path, schema, Some(9L))(_ =>
+      fail("a replay must not merge")))
+    assert(GenState.fold(spark, path, schema, Some(10L))(cur =>
+      Seq(Row(cur.get.collect().map(_.getLong(0)).max + 1))))
+    assert(currentValue(path) === 3L)
+    assert(genDirNames(dir).filterNot(junk.contains) === Seq(
+      "gen-0000000000000002-b9", "gen-0000000000000004-b10"))
+    assert(!orphan.exists, "crash-orphan must be swept")
+    assert(GenState.prune(spark, path, keepLast = 1) === 1)
+    assert(GenState.batchWatermark(spark, path) === Some(10L))
+    // no sweep ever touches what is not a generation
+    junk.foreach(n => assert(dir.resolve(n).toFile.exists, n))
+    assert(dir.resolve("gen-0000000000000005").toFile.isFile)
+  }
 }
