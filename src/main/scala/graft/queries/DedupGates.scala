@@ -19,11 +19,8 @@ object DedupGates {
     * shingle) — the exact side of the MinHash invariant oracles. */
   private val sh2Ctes: String =
     s"$toksCte,\n" +
-    """sh2 AS (
-      |  SELECT doc_id, unnest(list_distinct(CASE
-      |    WHEN len(l) < 2 THEN [array_to_string(l, '_')]
-      |    ELSE list_transform(range(1, len(l)),
-      |      i -> l[i] || '_' || l[i+1]) END)) AS s
+    s"""sh2 AS (
+      |  SELECT doc_id, unnest(${ngramsSql("l", 2)}) AS s
       |  FROM toks),
       |sizes AS (SELECT doc_id, count(*) AS n_sh FROM sh2 GROUP BY doc_id)""".stripMargin
 
@@ -99,11 +96,7 @@ object DedupGates {
     },
       s"""WITH $toksCte,
          |gl AS (
-         |  SELECT doc_id, list_distinct(CASE
-         |    WHEN len(l) < 5 THEN [array_to_string(l, '_')]
-         |    ELSE list_transform(range(1, len(l) - 3),
-         |      i -> l[i] || '_' || l[i+1] || '_' || l[i+2] || '_' ||
-         |           l[i+3] || '_' || l[i+4]) END) AS gs
+         |  SELECT doc_id, ${ngramsSql("l", 5)} AS gs
          |  FROM toks),
          |g5 AS (SELECT doc_id, unnest(gs) AS g FROM gl),
          |bench AS (SELECT DISTINCT g FROM g5 WHERE doc_id % 17 = 0),
@@ -469,11 +462,7 @@ object DedupGates {
       // counts documents (per-doc distinct spans)
       s"""WITH $toksCte,
          |gl AS (
-         |  SELECT doc_id, list_distinct(CASE
-         |    WHEN len(l) < 5 THEN [array_to_string(l, '_')]
-         |    ELSE list_transform(range(1, len(l) - 3),
-         |      i -> l[i] || '_' || l[i+1] || '_' || l[i+2] || '_' ||
-         |           l[i+3] || '_' || l[i+4]) END) AS gs
+         |  SELECT doc_id, ${ngramsSql("l", 5)} AS gs
          |  FROM toks),
          |g5 AS (SELECT doc_id, unnest(gs) AS g FROM gl),
          |df AS (SELECT g, count(*) AS n FROM g5 GROUP BY g)
@@ -600,10 +589,7 @@ object DedupGates {
       // shingle/rare/common semantics)
       s"""WITH $toksCte,
          |sh AS (
-         |  SELECT doc_id, unnest(list_distinct(CASE
-         |    WHEN len(l) < 3 THEN [array_to_string(l, '_')]
-         |    ELSE list_transform(range(1, len(l) - 1),
-         |      i -> l[i] || '_' || l[i+1] || '_' || l[i+2]) END)) AS s
+         |  SELECT doc_id, unnest(${ngramsSql("l", 3)}) AS s
          |  FROM toks),
          |rare AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 100),
          |pruned AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare USING (s)),
@@ -781,10 +767,8 @@ object DedupGates {
         .select(col("doc_id"), col("canonical_id"), col("n_copies"))
         .orderBy(col("doc_id"))
     },
-      """WITH n AS (
-        |  SELECT doc_id,
-        |    trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'),
-        |                        '\s+', ' ', 'g')) AS nt
+      s"""WITH n AS (
+        |  SELECT doc_id, ${normTextSql("text")} AS nt
         |  FROM documents)
         |SELECT doc_id,
         |  min(doc_id) OVER (PARTITION BY nt) AS canonical_id,

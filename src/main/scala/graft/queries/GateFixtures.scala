@@ -909,14 +909,37 @@ object GateFixtures {
       |    END AS extract
       |  FROM w)""".stripMargin
 
+  /** Normalized text of the string expression `t`: lowercased, every
+    * char outside [a-z0-9\s] a space, whitespace runs collapsed to one
+    * space, trimmed — the text the exact and n-gram dedup oracles key
+    * on. */
+  private[queries] def normTextSql(t: String): String =
+    raw"""trim(regexp_replace(regexp_replace(lower($t), '[^a-z0-9\s]', ' ', 'g'),
+         |      '\s+', ' ', 'g'))""".stripMargin
+
+  /** The token list of [[normTextSql]]: split on whitespace, empty
+    * tokens dropped. */
+  private[queries] def normTokensSql(t: String): String =
+    raw"""list_filter(string_split_regex(${normTextSql(t)}, '\s+'),
+         |      w -> len(w) > 0)""".stripMargin
+
+  /** The distinct word `n`-grams of the token list `l`, each joined by
+    * '_'; a list shorter than `n` is one gram, the whole list (mirrors
+    * Dedup.shingles). */
+  private[queries] def ngramsSql(l: String, n: Int): String = {
+    val gram = (0 until n).map(j => if (j == 0) s"$l[i]" else s"$l[i+$j]")
+      .mkString(" || '_' || ")
+    val end = if (n == 2) s"len($l)" else s"len($l) - ${n - 2}"
+    s"""list_distinct(CASE
+       |      WHEN len($l) < $n THEN [array_to_string($l, '_')]
+       |      ELSE list_transform(range(1, $end),
+       |        i -> $gram) END)""".stripMargin
+  }
+
   private[queries] val toksCte: String =
-    """toks AS (
-      |  SELECT doc_id,
-      |    list_filter(string_split_regex(
-      |      trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'),
-      |                          '\s+', ' ', 'g')), '\s+'),
-      |      w -> len(w) > 0) AS l
-      |  FROM documents)""".stripMargin
+    s"""toks AS (
+       |  SELECT doc_id, ${normTokensSql("text")} AS l
+       |  FROM documents)""".stripMargin
 
   /** Shared CTE chain computing the rare-shingle ngram-Jaccard pairs
     * (mirrors Dedup.ngramJaccardPairs; n=3, maxDf=100) — used by the
@@ -924,11 +947,8 @@ object GateFixtures {
     * oracle. */
   private[queries] val ngramPairCtes: String =
     s"$toksCte,\n" +
-    """sh AS (
-      |  SELECT doc_id, unnest(list_distinct(CASE
-      |    WHEN len(l) < 3 THEN [array_to_string(l, '_')]
-      |    ELSE list_transform(range(1, len(l) - 1),
-      |      i -> l[i] || '_' || l[i+1] || '_' || l[i+2]) END)) AS s
+    s"""sh AS (
+      |  SELECT doc_id, unnest(${ngramsSql("l", 3)}) AS s
       |  FROM toks),
       |rare AS (SELECT s FROM sh GROUP BY s HAVING count(*) <= 100),
       |pruned AS (SELECT sh.doc_id, sh.s FROM sh JOIN rare USING (s)),

@@ -175,15 +175,9 @@ object TextGates {
          |r AS (
          |  SELECT doc_id, len(l) AS n_tokens,
          |    CASE WHEN len(l) < 2 THEN 1 ELSE len(l) - 1 END AS t2,
-         |    len(list_distinct(CASE
-         |      WHEN len(l) < 2 THEN [array_to_string(l, '_')]
-         |      ELSE list_transform(range(1, len(l)),
-         |        i -> l[i] || '_' || l[i+1]) END)) AS d2,
+         |    len(${ngramsSql("l", 2)}) AS d2,
          |    CASE WHEN len(l) < 3 THEN 1 ELSE len(l) - 2 END AS t3,
-         |    len(list_distinct(CASE
-         |      WHEN len(l) < 3 THEN [array_to_string(l, '_')]
-         |      ELSE list_transform(range(1, len(l) - 1),
-         |        i -> l[i] || '_' || l[i+1] || '_' || l[i+2]) END)) AS d3
+         |    len(${ngramsSql("l", 3)}) AS d3
          |  FROM toks)
          |SELECT doc_id, n_tokens,
          |  cast(round((1 - d2 / cast(t2 AS double)) * 1000000) AS bigint) AS dup2_ppm,
@@ -271,7 +265,7 @@ object TextGates {
       // the NFC-cleaned, filtered frames; formulas identical to the
       // text_nfc_clean / dedup_exact / decontaminate / chunk_tokens /
       // pack_examples oracles)
-      """WITH d AS (
+      raw"""WITH d AS (
         |  SELECT doc_id, lang, nfc_normalize(regexp_replace(text,
         |    '[\x{00}-\x{08}\x{0B}\x{0C}\x{0E}-\x{1F}\x{7F}-\x{9F}\x{200B}-\x{200D}\x{FEFF}]',
         |    '', 'g')) AS text
@@ -283,18 +277,10 @@ object TextGates {
         |      min(doc_id) OVER (PARTITION BY md5(text)) AS canon
         |    FROM tr) WHERE doc_id = canon),
         |toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(
-        |      trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'),
-        |                          '\s+', ' ', 'g')), '\s+'),
-        |      w -> len(w) > 0) AS l
+        |  SELECT doc_id, ${normTokensSql("text")} AS l
         |  FROM d),
         |gl AS (
-        |  SELECT doc_id, list_distinct(CASE
-        |    WHEN len(l) < 5 THEN [array_to_string(l, '_')]
-        |    ELSE list_transform(range(1, len(l) - 3),
-        |      i -> l[i] || '_' || l[i+1] || '_' || l[i+2] || '_' ||
-        |           l[i+3] || '_' || l[i+4]) END) AS gs
+        |  SELECT doc_id, ${ngramsSql("l", 5)} AS gs
         |  FROM toks),
         |g5 AS (SELECT doc_id, unnest(gs) AS g FROM gl),
         |bench AS (SELECT DISTINCT g FROM g5 WHERE doc_id % 17 = 0),

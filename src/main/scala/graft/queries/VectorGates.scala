@@ -432,16 +432,12 @@ object VectorGates {
       // corpus plants its duplicate population (docs 0-7 re-added under
       // doc_id + 1000000, mirroring the Spark side) — the natural fixture
       // has no same-stream pair and the unplanted gate proved nothing.
-      """WITH corpus AS (
+      s"""WITH corpus AS (
         |  SELECT doc_id, text FROM documents
         |  UNION ALL
         |  SELECT doc_id + 1000000, text FROM documents WHERE doc_id < 8),
         |toks AS (
-        |  SELECT doc_id,
-        |    list_filter(string_split_regex(
-        |      trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\s]', ' ', 'g'),
-        |                          '\s+', ' ', 'g')), '\s+'),
-        |      w -> len(w) > 0) AS l
+        |  SELECT doc_id, ${normTokensSql("text")} AS l
         |  FROM corpus),
         |k AS (
         |  SELECT doc_id, array_to_string(l, '|') AS key

@@ -172,32 +172,16 @@ object WarcGates {
          |    '', 'g')) AS bt
          |  FROM documents WHERE doc_id % 17 = 0),
          |btk AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(
-         |      trim(regexp_replace(regexp_replace(lower(bt), '[^a-z0-9\s]', ' ', 'g'),
-         |                          '\s+', ' ', 'g')), '\s+'),
-         |      w -> len(w) > 0) AS l
+         |  SELECT doc_id, <<BTOKS>> AS l
          |  FROM bd),
          |bg AS (
-         |  SELECT DISTINCT unnest(list_distinct(CASE
-         |    WHEN len(l) < 5 THEN [array_to_string(l, '_')]
-         |    ELSE list_transform(range(1, len(l) - 3),
-         |      i -> l[i] || '_' || l[i+1] || '_' || l[i+2] || '_' ||
-         |           l[i+3] || '_' || l[i+4]) END)) AS g
+         |  SELECT DISTINCT unnest(<<GRAMS>>) AS g
          |  FROM btk),
          |ttk AS (
-         |  SELECT doc_id,
-         |    list_filter(string_split_regex(
-         |      trim(regexp_replace(regexp_replace(lower(tc), '[^a-z0-9\s]', ' ', 'g'),
-         |                          '\s+', ' ', 'g')), '\s+'),
-         |      w -> len(w) > 0) AS l
+         |  SELECT doc_id, <<TTOKS>> AS l
          |  FROM cl),
          |tg AS (
-         |  SELECT doc_id, unnest(list_distinct(CASE
-         |    WHEN len(l) < 5 THEN [array_to_string(l, '_')]
-         |    ELSE list_transform(range(1, len(l) - 3),
-         |      i -> l[i] || '_' || l[i+1] || '_' || l[i+2] || '_' ||
-         |           l[i+3] || '_' || l[i+4]) END)) AS g
+         |  SELECT doc_id, unnest(<<GRAMS>>) AS g
          |  FROM ttk),
          |contaminated AS (
          |  SELECT DISTINCT tg.doc_id FROM tg JOIN bg USING (g)),
@@ -239,6 +223,9 @@ object WarcGates {
       .replace("<<LISTS>>", WebGates.gopherListsSql("main"))
       .replace("<<COUNTERS>>", WebGates.gopherCountersSql("main"))
       .replace("<<PASS>>", WebGates.gopherPassSql())
+      .replace("<<BTOKS>>", normTokensSql("bt"))
+      .replace("<<TTOKS>>", normTokensSql("tc"))
+      .replace("<<GRAMS>>", ngramsSql("l", 5))
       .replace("<<DOCWHERE>>", docWhere)
       .replace("<<EXTRACOLS>>", extraCols)
 

@@ -1,10 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, BooleanType, IntegerType, LongType, StringType, StructField, StructType}
 
-import graft.ops.TemporalOps.floorDivChunk
+import graft.core.Refine
 
 /** Curriculum binning: assign every document an exact quantile bin over
   * the (score DESC, id ASC) order — the "sort the corpus by quality and
@@ -35,17 +35,19 @@ import graft.ops.TemporalOps.floorDivChunk
   *     level cost. A cut on a level's LAST unit of mass resolves to the
   *     level's max id at once; the rest need the largest id whose
   *     within-level running cost (id ASC) stays ≤ the remainder — a
-  *     selection problem, solved by id-chunk COST refinement (the
-  *     [[BudgetSelect]] machinery) over a slim (cursor, id, cost) frame
-  *     localCheckpointed ONCE, so rounds never re-scan the corpus; all
-  *     groups' cursors refine together, one aggregation per round. The
-  *     final ≤ `smallCap` rows per cursor resolve with ONE running-sum
-  *     window PARTITIONED BY the cursor (bounded partitions by
-  *     construction), and only one aggregated row per cursor reaches
-  *     the driver. A cut can fall BEFORE a level's first row (that
-  *     row's cost alone exceeds the remainder; never with unit cost),
-  *     so a boundary carries an `open` flag — "every row of this level
-  *     is after the cut" — instead of an id that may not exist;
+  *     selection problem, solved by [[graft.core.Refine.refineCuts]],
+  *     the id-chunk COST refinement shared with [[BudgetSelect]], over
+  *     a slim (cursor, id, cost) frame localCheckpointed ONCE, so rounds
+  *     never re-scan the corpus; all groups' cursors refine together,
+  *     one aggregation per round, starting from the id extremes and
+  *     counts the histogram already holds (no stats job). The final
+  *     ≤ `smallCap` rows per cursor resolve with ONE running-sum window
+  *     PARTITIONED BY the cursor, and only one aggregated row per
+  *     cursor reaches the driver. A cut can fall BEFORE a level's first
+  *     row (that row's cost alone exceeds the remainder; never with
+  *     unit cost), so a boundary carries an `open` flag — "every row of
+  *     this level is after the cut" — instead of an id that may not
+  *     exist;
   *  3. the OUTPUT plan is map-only for the single group: `bin` is a
   *     folded comparison against ≤ k-1 literal boundaries — no join, no
   *     window, no corpus shuffle. Real groups, and the single group
@@ -130,8 +132,6 @@ object Binning {
   private[graft] def quantileBinsByCostImpl(
       df: DataFrame, group: Column, id: Column, score: Column, cost: Column,
       k: Int, maxHistRows: Int, fanout: Int, smallCap: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType, StructField, StructType}
     require(k >= 1, "k must be >= 1")
     require(fanout >= 2 && smallCap >= 1, "fanout >= 2, smallCap >= 1")
     val gS = group.cast("string")
@@ -155,14 +155,12 @@ object Binning {
       "negative costs break cumulative-mass binning — costs must be >= 0")
     if (hist.isEmpty) return live.withColumn("bin", lit(1))
 
-    // 2. boundary placement against cumulative COST. resolved value:
-    // (level, boundaryId, open) — open = "the cut precedes every row
-    // of this level"
-    var resolved = Map.empty[(String, Int), (Long, Long, Boolean)]
-    // interior selections: (key, level, costTarget t, rowCount, lo, hi)
-    var sels = List.empty[((String, Int), Long, Long, Long, Long, Long)]
-    val byGroup = hist.groupBy(_.getString(0))
-    byGroup.foreach { case (g, rows) =>
+    // 2. boundary placement against cumulative COST: a cut on a level's
+    // last unit of mass is that level's max id; the rest are cursors
+    // for the shared refinement
+    var resolved = Map.empty[(String, Int), Refine.Boundary]
+    var sels = List.empty[((String, Int), Refine.Cursor)]
+    hist.groupBy(_.getString(0)).foreach { case (g, rows) =>
       val levels = rows.map(r => (r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).sortBy(_._1)(Ordering[Long].reverse)
       val w = levels.map(_._2).map(BigInt(_)).sum
@@ -176,163 +174,59 @@ object Binning {
           while (starts(j + 1) < ti) j += 1
           val (lvl, wl, cnt, lo, hi) = levels(j)
           val t = (ti - starts(j)).toLong // 1 ≤ t ≤ wl
-          if (t == wl) resolved += (g, i) -> (lvl, hi, false)
-          else sels ::= ((g, i), lvl, t, cnt, lo, hi)
+          if (t == wl) resolved += (g, i) -> Refine.Boundary(lvl, hi, open = false)
+          else sels ::= (g, i) -> Refine.Cursor(lvl, lo, hi, cnt, t)
         }
       }
     }
 
+    // 3. interior cuts: the largest id whose within-level running cost
+    // (id ASC) stays ≤ t, from Refine.refineCuts over the cursors'
+    // level rows — a slim (cursor, id, cost) frame checkpointed ONCE
     val spark = df.sparkSession
-    def frame(rows: Seq[Row], fs: (String, org.apache.spark.sql.types.DataType)*) =
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-        StructType(fs.map { case (nm, t) => StructField(nm, t, nullable = false) }))
-
-    // 3. interior refinement: largest id whose within-level cumulative
-    // cost (id ASC) stays ≤ t — BudgetSelect's remaining-budget chunk
-    // walk over a slim checkpointed (sel, id, cost) frame; fully-kept
-    // chunks record their max id in `lastKept` so a boundary landing at
-    // a chunk edge still has its id without re-reading dropped chunks
     if (sels.nonEmpty) {
-      val selIndex = sels.map(_._1).sorted.zipWithIndex.toMap
-      val selDf = frame(
-        sels.sortBy(s => selIndex(s._1)).map { case (key, lvl, _, _, _, _) =>
-          Row(selIndex(key), key._1, lvl)
-        }, "__sel" -> IntegerType, "__sg" -> StringType, "__slvl" -> LongType)
-      var pending = live
+      val keyed = sels.sortBy(_._1).zipWithIndex
+      val slim = live
         .select(gS.as("__sg"), qL.as("__slvl"), idL.as("__id"), cL.as("__c"))
-        .join(broadcast(selDf), Seq("__sg", "__slvl"))
-        .select(col("__sel"), col("__id"), col("__c"))
+        .join(broadcast(Refine.frame(spark,
+          keyed.map { case ((key, c), i) => Row(i, key._1, c.level) },
+          "__cur" -> IntegerType, "__sg" -> StringType, "__slvl" -> LongType)),
+          Seq("__sg", "__slvl"))
+        .select(col("__cur"), col("__id"), col("__c"))
         .localCheckpoint(false)
-      var state: Map[Int, (Long, Long, Long, Long)] = // (lo, hi, n, rem)
-        sels.map { case (key, _, t, cnt, lo, hi) =>
-          selIndex(key) -> (lo, hi, cnt, t)
-        }.toMap
-      val lastKept = scala.collection.mutable.Map.empty[Int, Long]
-      var finals = pending.limit(0)
-      val finalRem = scala.collection.mutable.Map.empty[Int, (Long, Long)] // (n, rem)
-      var rounds = 0
-      while (state.nonEmpty) {
-        rounds += 1
-        require(rounds <= 64, "refinement failed to converge — are the " +
-          "ids unique within each group? (duplicate or non-integral ids " +
-          "collapse chunks)")
-        // converged cursors (≤ smallCap rows) move their rows into
-        // `finals` and LEAVE pending, so finished rows are never
-        // re-aggregated and no in-band chunk sentinel is needed (a Long
-        // chunk id can be ANY value once widths reach 1)
-        val (small, big) = state.partition(_._2._3 <= smallCap)
-        if (small.nonEmpty) {
-          small.foreach { case (i, (_, _, n, rem)) => finalRem(i) = (n, rem) }
-          finals = finals.unionByName(
-            pending.join(broadcast(frame(small.keys.toSeq.sorted.map(Row(_)),
-              "__sel" -> IntegerType)), Seq("__sel"), "left_semi"))
-        }
-        if (big.isEmpty) state = Map.empty
-        else {
-          val widths = big.toSeq.sortBy(_._1).map { case (i, (lo, hi, _, _)) =>
-            Row(i, graft.core.Refine.chunkWidth(lo, hi, fanout))
-          }
-          val chunked = pending
-            .join(broadcast(frame(widths, "__sel" -> IntegerType, "__w" -> LongType)),
-              Seq("__sel"))
-            .withColumn("__ck", floorDivChunk(col("__id"), col("__w")))
-          val chist = chunked.groupBy(col("__sel"), col("__ck"))
-            .agg(sum(col("__c")).as("__s"), count(lit(1)).as("__n"),
-              min(col("__id")).as("__lo"), max(col("__id")).as("__hi"))
-            .collect()
-          val nextState = scala.collection.mutable.Map.empty[Int, (Long, Long, Long, Long)]
-          val stars = chist.groupBy(_.getInt(0)).map { case (i, rows) =>
-            val rem = big(i)._4
-            val chunks = rows.map(r => (r.getLong(1), r.getLong(2),
-              r.getLong(3), r.getLong(4), r.getLong(5))).sortBy(_._1)
-            // invariant rem < Σ chunk costs, so the boundary exists
-            val ((cs, _, cn, clo, chi), before) =
-              graft.core.Refine.boundary[(Long, Long, Long, Long, Long)](
-                chunks.toSeq, _._2, rem).get
-            val keptHis = chunks.filter(_._1 < cs).map(_._5)
-            if (keptHis.nonEmpty)
-              lastKept(i) = math.max(lastKept.getOrElse(i, Long.MinValue),
-                keptHis.max)
-            nextState(i) = (clo, chi, cn, rem - before)
-            Row(i, cs)
-          }.toSeq
-          pending = chunked
-            .join(broadcast(frame(stars.sortBy(_.getInt(0)),
-              "__sel" -> IntegerType, "__cstar" -> LongType)), Seq("__sel"))
-            .where(col("__ck") === col("__cstar"))
-            .select(col("__sel"), col("__id"), col("__c"))
-            .localCheckpoint(false)
-          state = nextState.toMap
-        }
-      }
-      // bounded distributed finish: per cursor (≤ smallCap rows), the
-      // max id whose running cost stays ≤ rem — one window partitioned
-      // by the cursor; ONE aggregated row per cursor reaches the driver
-      val remDf = frame(
-        finalRem.toSeq.sortBy(_._1).map { case (i, (n, rem)) => Row(i, n, rem) },
-        "__sel" -> IntegerType, "__n" -> LongType, "__rem" -> LongType)
-      val wSel = Window.partitionBy(col("__sel")).orderBy(col("__id"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      val picked = finals.join(broadcast(remDf), Seq("__sel"))
-        .withColumn("__cum", sum(col("__c")).over(wSel))
-        .groupBy(col("__sel"))
-        .agg(count(lit(1)).as("__pn"),
-          max(when(col("__cum") <= col("__rem"), col("__id"))).as("__bid"))
-        .collect()
-        .map(r => r.getInt(0) ->
-          (r.getLong(1), if (r.isNullAt(2)) None else Some(r.getLong(2))))
-        .toMap
-      val selKey = sels.map { case (key, lvl, _, _, _, _) =>
-        selIndex(key) -> (key, lvl) }.toMap
-      require(picked.size == finalRem.size,
-        s"boundary refinement lost cursors (${picked.size} of ${finalRem.size})")
-      finalRem.foreach { case (i, (n, _)) =>
-        val (pn, bidOpt) = picked(i)
-        require(pn == n,
-          s"boundary $i refinement lost rows (have $pn, want $n)")
-        val (key, lvl) = selKey(i)
-        resolved += key -> (bidOpt.orElse(lastKept.get(i)) match {
-          case Some(bid) => (lvl, bid, false)
-          case None      => (lvl, 0L, true) // cut precedes the whole level
-        })
-      }
+      val found = Refine.refineCuts(slim,
+        keyed.map { case ((_, c), i) => i -> c }.toMap, fanout, smallCap)
+      keyed.foreach { case ((key, _), i) => resolved += key -> found(i) }
     }
 
-    // 4. assignment: a row is after a boundary when its level is
-    // lower, or the same and (open or id > boundary id); bin = 1 + the
-    // number of boundaries the row is after
-    def afterExpr(lvlC: Column, idC: Column, lvl: Column, bid: Column,
-                  open: Column): Column =
-      when(lvlC < lvl || (lvlC === lvl && (open || idC > bid)), 1).otherwise(0)
+    // 4. assignment: bin = 1 + the number of boundaries the row is after
+    def afterExpr(lvl: Column, bid: Column, open: Column): Column =
+      when(Refine.after(qL, idL, lvl, bid, open), 1).otherwise(0)
     val groupsResolved = resolved.keys.map(_._1).toSet
     if (groupsResolved.forall(_ == allGroup) &&
         resolved.size <= foldedBoundaryCap) {
-      val after = resolved.foldLeft(lit(0)) {
-        case (acc, (_, (lvl, bid, open))) =>
-          acc + afterExpr(qL, idL, lit(lvl), lit(bid), lit(open))
+      val after = resolved.values.foldLeft(lit(0)) { (acc, b) =>
+        acc + afterExpr(lit(b.level), lit(b.id), lit(b.open))
       }
       live.withColumn("bin", (after + 1).cast("int"))
     } else {
       val bRows = resolved.toSeq
         .groupBy(_._1._1).toSeq.sortBy(_._1)
         .map { case (g, bs) =>
-          Row(g, bs.sortBy(_._1._2).map { case (_, (lvl, bid, open)) =>
-            Row(lvl, bid, open) })
+          Row(g, bs.sortBy(_._1._2).map { case (_, b) =>
+            Row(b.level, b.id, b.open) })
         }
       val entry = StructType(Seq(
         StructField("lvl", LongType, nullable = false),
         StructField("bid", LongType, nullable = false),
         StructField("open", BooleanType, nullable = false)))
-      val bDf = spark.createDataFrame(
-        spark.sparkContext.parallelize(bRows, 1),
-        StructType(Seq(StructField("__bg", StringType, nullable = false),
-          StructField("__bounds", org.apache.spark.sql.types.ArrayType(entry,
-            containsNull = false), nullable = false))))
+      val bDf = Refine.frame(spark, bRows, "__bg" -> StringType,
+        "__bounds" -> ArrayType(entry, containsNull = false))
       live.withColumn("__bg", gS)
         .join(broadcast(bDf), Seq("__bg"), "left")
         .withColumn("bin",
           (coalesce(aggregate(col("__bounds"), lit(0), (acc, b) =>
-            acc + afterExpr(qL, idL, b.getField("lvl"), b.getField("bid"),
+            acc + afterExpr(b.getField("lvl"), b.getField("bid"),
               b.getField("open"))),
             lit(0)) + 1).cast("int"))
         .drop("__bg", "__bounds")

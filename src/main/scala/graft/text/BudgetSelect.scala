@@ -1,10 +1,10 @@
 package graft.text
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BooleanType, IntegerType, LongType, StringType}
 
-import graft.ops.TemporalOps.floorDivChunk
+import graft.core.Refine
 
 /** Token-budget corpus selection: keep the highest-quality documents
   * whose cumulative cost (tokens) fits a budget — the curation step that
@@ -27,21 +27,21 @@ import graft.ops.TemporalOps.floorDivChunk
   *     ≤ 1e6+1 levels) → the driver finds the boundary level q*: every
   *     level above it is kept whole, every level below dropped whole —
   *     a narrow filter, no sort;
-  *  2. only the SINGLE boundary level needs row resolution. Its rows are
-  *     id-chunked (floor-div on the id span, ≤ `fanout` occupied chunks),
-  *     the per-chunk cost histogram picks the boundary CHUNK the same
-  *     way, and the loop recurses into it — the span shrinks ×`fanout`
-  *     per round, so ≤ ~6 rounds cover the full Long id range;
-  *  3. when the unresolved remainder is ≤ `smallCap` rows it is resolved
-  *     exactly with one running-sum window over that BOUNDED frame — the
-  *     only window in the plan, partitioned by the (constant) group key
-  *     over ≤ smallCap rows by construction, so no unpartitioned-window
-  *     plan ever appears.
+  *  2. only the SINGLE boundary level needs row resolution: its slim
+  *     (id, cost) rows are checkpointed once and the cut inside it
+  *     resolves through [[graft.core.Refine.refineCuts]], the id-chunk
+  *     cost refinement shared with [[Binning]] — the span shrinks
+  *     ×`fanout` per round (≤ ~6 rounds cover the full Long id range),
+  *     and the last ≤ `smallCap` rows resolve with one running-sum
+  *     window partitioned by the cut, collected as ONE row;
+  *  3. the kept set is ONE map-side filter over the corpus: a row is
+  *     kept unless it is after its group's boundary (level, id, open) —
+  *     a broadcast join, no sort and no window in the output plan.
   *
   * Driver state is the level histogram (≤ maxQualityLevels slim rows —
   * manifest-class, tens of MB at the 1M-level worst case; quantize
-  * coarser if that is too much) plus ≤ fanout chunk rows per round.
-  * Nothing scales with corpus size.
+  * coarser if that is too much) plus ≤ fanout chunk rows per round and
+  * one boundary per group. Nothing scales with corpus size.
   *
   * Preconditions (the [[Sampling.takePerGroup]] discipline):
   *  - `quality` is an INTEGRAL score (the ppm house convention —
@@ -56,10 +56,10 @@ import graft.ops.TemporalOps.floorDivChunk
   *    every engine orders/sums it differently — no coherent greedy
   *    semantics exists for them.
   *  - Computed quality/cost columns are evaluated a CONSTANT number of
-  *    times (the histogram pass, the kept-slice filters, and the one
-  *    boundary-frame build — ~4 corpus passes): refinement rounds run
-  *    against a localCheckpointed slim boundary frame, never the raw
-  *    corpus plan, so an expensive score is never re-paid per round.
+  *    times (the histogram pass, the one boundary-frame build, and the
+  *    kept filter — 3 corpus passes): refinement rounds run against a
+  *    localCheckpointed slim boundary frame, never the raw corpus plan,
+  *    so an expensive score is never re-paid per round.
   */
 object BudgetSelect {
 
@@ -199,13 +199,13 @@ object BudgetSelect {
     *
     * Implemented as the per-group core with one constant group: the
     * per-group machinery localCheckpoints the slim boundary frame
-    * (id, cost, row) ONCE, so every refinement round scans that
+    * (cursor, id, cost) ONCE, so every refinement round scans that
     * checkpointed frame — never the raw corpus plan. The corpus-plan
     * expressions (quality/cost kernels) are therefore evaluated a
-    * CONSTANT number of times (histogram + kept-slice filters + the one
-    * boundary-frame build), independent of the O(log_fanout(id-span))
-    * round count; and the one exact window runs partitioned by the
-    * constant group over the ≤ smallCap remainder. */
+    * CONSTANT number of times (histogram + the one boundary-frame
+    * build + the kept filter), independent of the
+    * O(log_fanout(id-span)) round count; and the one exact window runs
+    * partitioned by the cut over the ≤ smallCap remainder. */
   private def budgetSelectImpl(df: DataFrame, id: Column,
                                quality: Column, cost: Column,
                                budgetOfTotal: Long => Long,
@@ -237,20 +237,19 @@ object BudgetSelect {
     * every group's boundary level on the driver; the boundary rows of
     * every still-unresolved group then refine TOGETHER — each round is
     * one aggregation over the single slim pending frame, with
-    * per-group chunk widths riding a broadcast choices frame, so the
-    * round count is the WORST group's O(log_fanout(idspan)), not the
-    * sum. Groups whose remainder fits `smallCap` rows drop out into
-    * one final bounded per-group window. Driver state: the level
-    * histogram (`maxHistRows` cap across all groups) + `fanout` rows
-    * per group per round + the budget map itself — all independent of
-    * corpus size. `budgets` must be driver-small (a mixture spec is
-    * dozens of entries, not millions).
+    * per-group chunk widths riding a broadcast frame, so the round
+    * count is the WORST group's O(log_fanout(idspan)), not the sum.
+    * Groups whose remainder fits `smallCap` rows drop out into one
+    * final bounded per-group window ([[graft.core.Refine.refineCuts]]).
+    * Driver state: the level histogram (`maxHistRows` cap across all
+    * groups) + `fanout` rows per group per round + the budget map and
+    * one boundary per group — all independent of corpus size. `budgets`
+    * must be driver-small (a mixture spec is dozens of entries, not
+    * millions).
     *
-    * Boundary rows carry their full row struct through the (≤ ~6)
-    * refinement checkpoints, so kept slices return directly without a
-    * corpus-scale join-back; the checkpoints stay referenced by the
-    * result and are reclaimed when the caller drops it (the
-    * [[graft.dedup.Dedup.canonicalFromPairs]] lifetime note).
+    * The refinement carries only (cursor, id, cost): the result is one
+    * filter of the input against the broadcast per-group boundaries,
+    * so it references no refinement checkpoint.
     */
   def budgetSelectPerGroup(df: DataFrame, group: Column, id: Column,
                            quality: Column, cost: Column,
@@ -332,8 +331,8 @@ object BudgetSelect {
   /** [[budgetSelect]] whose histogram comes from persisted state
     * ([[writeBudgetState]] / [[appendBudgetState]]) instead of a corpus
     * scan: the cutoff level resolves from the state alone, so the
-    * corpus-plan passes shrink to the kept-slice filters and the
-    * boundary-frame build. The state MUST describe exactly `df`'s rows
+    * corpus-plan passes shrink to the boundary-frame build and the kept
+    * filter. The state MUST describe exactly `df`'s rows
     * (the rolling contract: state appended in lockstep with corpus
     * appends) — a stale histogram yields a stale cutoff, exactly as a
     * stale index yields stale lookups. */
@@ -383,7 +382,7 @@ object BudgetSelect {
     graft.core.GenState.batchWatermark(spark, path)
 
   private val stateSchema = {
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    import org.apache.spark.sql.types.{StructField, StructType}
     StructType(Seq(StructField("group", StringType, nullable = false),
       StructField("q_level", LongType, nullable = false),
       StructField("total_cost", LongType, nullable = false),
@@ -395,7 +394,7 @@ object BudgetSelect {
     * ([[graft.core.GenState.commit]]), so neither a bad batch nor a
     * crashed write can destroy the previous valid state. */
   private def capped(hist: DataFrame,
-                     maxHistRows: Int): Seq[org.apache.spark.sql.Row] = {
+                     maxHistRows: Int): Seq[Row] = {
     val rows = hist.limit(maxHistRows + 1).collect()
     require(rows.length <= maxHistRows,
       s"more than $maxHistRows (group, quality-level) rows — quantize " +
@@ -554,8 +553,6 @@ object BudgetSelect {
       budgetsOfTotals: Map[String, Long] => Map[String, Long],
       maxHistRows: Int, fanout: Int, smallCap: Int,
       histOverride: Option[Array[(String, Long, Long, Long)]] = None): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     require(fanout >= 2, "fanout must be >= 2")
     require(smallCap >= 1, "smallCap must be >= 1")
     require(!df.columns.exists(_.startsWith("__bs")),
@@ -569,11 +566,7 @@ object BudgetSelect {
     val idL = id.try_cast("long")
     val qL = quality.try_cast("long")
     val cL = cost.try_cast("long")
-    val outCols = df.columns.toSeq
-    def frame(rows: Seq[Row], fields: (String, org.apache.spark.sql.types.DataType)*) =
-      spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-        StructType(fields.map { case (n, t) => StructField(n, t, nullable = false) }))
-    val budgetGroups = frame(groups.toSeq.sorted.map(Row(_)),
+    val budgetGroups = Refine.frame(spark, groups.toSeq.sorted.map(Row(_)),
       "__bsg" -> StringType)
     // the null-drop contract FILTERS ON THE CAST columns: a raw null
     // casts to null, and so does a value that cannot cast to long (a
@@ -601,130 +594,54 @@ object BudgetSelect {
       "negative cost values break greedy-prefix monotonicity")
 
     // driver cutoffs per group; budgets derive from the histogram's own
-    // per-group totals (the fraction form's no-extra-pass contract)
+    // per-group totals (the fraction form's no-extra-pass contract).
+    // A keep-all group has no cut; the rest are (group, q*, remaining)
     val byGroup = hist.groupBy(_._1)
     val budgets = budgetsOfTotals(
       byGroup.map { case (g, rows) => g -> rows.map(_._3).sum })
     require(budgets.values.forall(_ >= 0L), "budgets must be >= 0")
-    var keepAll = List.empty[String]
-    var cut = List.empty[(String, Long, Long)] // (group, q*, remaining)
-    byGroup.foreach { case (g, rows) =>
+    val cut = byGroup.toSeq.sortBy(_._1).flatMap { case (g, rows) =>
       val levels = rows.map(r => (r._2, r._3))
         .sortBy(_._1)(Ordering[Long].reverse)
-      val budget = budgets(g)
-      graft.core.Refine.boundary[(Long, Long)](levels.toSeq, _._2, budget) match {
-        case None                 => keepAll ::= g
-        case Some(((qs, _), before)) => cut ::= (g, qs, budget - before)
-      }
+      Refine.boundary[(Long, Long)](levels.toSeq, _._2, budgets(g))
+        .map { case ((qs, _), before) => (g, qs, budgets(g) - before) }
     }
+    if (cut.isEmpty) return live.drop("__bsg")
 
-    val keepAllKept =
-      if (keepAll.isEmpty) live.limit(0)
-      else live.join(broadcast(frame(keepAll.sorted.map(Row(_)),
-        "__bsg" -> StringType)), Seq("__bsg"), "left_semi")
-    if (cut.isEmpty) return keepAllKept.drop("__bsg")
-
-    val cutDf = frame(cut.sortBy(_._1).map { case (g, qs, _) => Row(g, qs) },
-      "__bsg" -> StringType, "__bsqstar" -> LongType)
-    val cutKept = live.withColumn("__bsq", qL)
-      .join(broadcast(cutDf), Seq("__bsg"))
-      .where(col("__bsq") > col("__bsqstar"))
-      .drop("__bsq", "__bsqstar")
-
-    // slim payload-carrying boundary frame: every cutoff group's q*
-    // level, refined together round by round
-    val pendCols = Seq(col("__bsg"), col("__bsid"), col("__bsc"), col("__bsrow"))
-    var pending = live.withColumn("__bsq", qL)
-      .join(broadcast(cutDf), Seq("__bsg"))
-      .where(col("__bsq") === col("__bsqstar"))
-      .select(col("__bsg"), idL.as("__bsid"), cL.as("__bsc"),
-        struct(outCols.map(col): _*).as("__bsrow"))
+    // every cut group's q* rows as ONE slim (cursor, id, cost) frame,
+    // checkpointed once: the refinement rounds scan it, never the corpus
+    val cutDf = Refine.frame(spark,
+      cut.zipWithIndex.map { case ((g, qs, _), i) => Row(g, qs, i) },
+      "__bsg" -> StringType, "__bsqstar" -> LongType, "__bscur" -> IntegerType)
+    val slim = live.join(broadcast(cutDf), Seq("__bsg"))
+      .where(qL === col("__bsqstar"))
+      .select(col("__bscur").as("__cur"), idL.as("__id"), cL.as("__c"))
       .localCheckpoint(false)
-    val remaining = scala.collection.mutable.Map(
-      cut.map { case (g, _, r) => g -> r }: _*)
-    val finalRem = scala.collection.mutable.Map.empty[String, Long]
-    var keptSlices = List.empty[DataFrame]
-    var finals = pending.limit(0)
-    // driver (lo, hi, n) per still-active group — ONE action per round
-    // after this initial pass: the chunk histogram carries (min, max,
-    // count), so each group's chosen boundary chunk IS its next stats
-    var state: Map[String, (Long, Long, Long)] = pending
-      .groupBy(col("__bsg"))
-      .agg(min(col("__bsid")).as("lo"), max(col("__bsid")).as("hi"),
-        count(lit(1)).as("n"))
+    // the level's id extremes and row count: a persisted histogram has
+    // neither, so one stats action over the slim frame reads them
+    val start = slim.groupBy(col("__cur"))
+      .agg(min(col("__id")), max(col("__id")), count(lit(1)))
       .collect()
-      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getLong(3)))
-      .toMap
-    var rounds = 0
-    while (state.nonEmpty) {
-      // unreachable with UNIQUE ids (spans shrink every round) — but a
-      // violated precondition (duplicate or non-integral ids collapsing
-      // under the long cast) parks > smallCap rows on ONE id, where
-      // width-1 chunks stop shrinking; fail loudly naming the cause
-      // instead of looping forever
-      rounds += 1
-      require(rounds <= 64, "refinement failed to converge — are the " +
-        "ids unique? (duplicate or non-integral ids collapse chunks)")
-      val (small, big) = state.partition(_._2._3 <= smallCap)
-      if (small.nonEmpty) {
-        val gs = small.keys.toSeq.sorted
-        gs.foreach(g => finalRem(g) = remaining(g))
-        finals = finals.unionByName(
-          pending.join(broadcast(frame(gs.map(Row(_)),
-            "__bsg" -> StringType)), Seq("__bsg"), "left_semi"))
-      }
-      if (big.isEmpty) state = Map.empty
-      else {
-        val choices = big.toSeq.sortBy(_._1).map { case (g, (lo, hi, _)) =>
-          Row(g, graft.core.Refine.chunkWidth(lo, hi, fanout))
-        }
-        val chunked = pending
-          .join(broadcast(frame(choices,
-            "__bsg" -> StringType, "__bsw" -> LongType)), Seq("__bsg"))
-          .withColumn("__bschunk", floorDivChunk(col("__bsid"), col("__bsw")))
-        val chist = chunked.groupBy(col("__bsg"), col("__bschunk"))
-          .agg(sum(col("__bsc")).as("__bst"), min(col("__bsid")).as("__bslo"),
-            max(col("__bsid")).as("__bshi"), count(lit(1)).as("__bsn"))
-          .collect()
-        val nextState = scala.collection.mutable.Map.empty[String, (Long, Long, Long)]
-        val stars = chist.groupBy(_.getString(0)).map { case (g, rows) =>
-          val chunks = rows.map(r => (r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getLong(4), r.getLong(5))).sortBy(_._1)
-          // exists: pending cost > remaining invariant
-          val ((cs, _, clo, chi, cn), cbefore) =
-            graft.core.Refine.boundary[(Long, Long, Long, Long, Long)](
-              chunks.toSeq, _._2, remaining(g)).get
-          remaining(g) = remaining(g) - cbefore
-          nextState(g) = (clo, chi, cn)
-          Row(g, cs)
-        }.toSeq
-        val starsDf = broadcast(frame(stars.sortBy(_.getString(0)),
-          "__bsg" -> StringType, "__bscstar" -> LongType))
-        val joined = chunked.join(starsDf, Seq("__bsg"))
-        keptSlices ::= joined.where(col("__bschunk") < col("__bscstar"))
-          .select(pendCols: _*)
-        pending = joined.where(col("__bschunk") === col("__bscstar"))
-          .select(pendCols: _*)
-          .localCheckpoint(false)
-        state = nextState.toMap
-      }
-    }
+      .map { r =>
+        val (_, qs, rem) = cut(r.getInt(0))
+        r.getInt(0) -> Refine.Cursor(qs, r.getLong(1), r.getLong(2),
+          r.getLong(3), rem)
+      }.toMap
+    val found = Refine.refineCuts(slim, start, fanout, smallCap)
 
-    // one bounded window per exited group: ≤ smallCap rows per (group)
-    // partition by construction
-    val remDf = broadcast(frame(
-      finalRem.toSeq.sortBy(_._1).map { case (g, r) => Row(g, r) },
-      "__bsg" -> StringType, "__bsrem" -> LongType))
-    val w = Window.partitionBy(col("__bsg")).orderBy(col("__bsid"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val finalKept = finals.join(remDf, Seq("__bsg"))
-      .withColumn("__bscum", sum(col("__bsc")).over(w))
-      .where(col("__bscum") <= col("__bsrem"))
-      .select(pendCols: _*)
-
-    (keptSlices :+ finalKept)
-      .map(_.select(col("__bsrow.*")))
-      .foldLeft(keepAllKept.drop("__bsg").unionByName(cutKept.drop("__bsg")))(
-        _.unionByName(_))
+    // the kept set: ONE map-side filter over `live` — a row is kept
+    // unless it is after its group's boundary (a cut level with no rows
+    // in `df` keeps none of that level: open)
+    val bounds = Refine.frame(spark,
+      cut.zipWithIndex.map { case ((g, qs, _), i) =>
+        val b = found.getOrElse(i, Refine.Boundary(qs, 0L, open = true))
+        Row(g, b.level, b.id, b.open)
+      },
+      "__bsg" -> StringType, "__bsl" -> LongType, "__bsb" -> LongType,
+      "__bso" -> BooleanType)
+    live.join(broadcast(bounds), Seq("__bsg"), "left")
+      .where(col("__bsl").isNull || !Refine.after(qL, idL, col("__bsl"),
+        col("__bsb"), col("__bso")))
+      .drop("__bsg", "__bsl", "__bsb", "__bso")
   }
 }

@@ -208,6 +208,17 @@ class BinningSpec extends AnyFunSuite {
         bruteCostBins(df, k), s"k=$k")
   }
 
+  test("deep refinement edge cases (fanout 2, smallCap 1): a cut on a " +
+      "chunk edge, zero-cost rows after the cut, a zero remainder") {
+    // total cost 21 and k = 21 put a cut after EVERY unit of mass, so
+    // the cuts include q=5's chunk edge before a heavier row, q=3's edge
+    // before two zero-cost rows, and remainders that reach 0 mid-loop
+    val df = BudgetSelectSpec.refineEdges(spark)
+    for (k <- Seq(2, 3, 21))
+      assert(gotCostBins(df, k, fanout = 2, smallCap = 1) ===
+        bruteCostBins(df, k), s"k=$k")
+  }
+
   test("a first row heavier than the cut: the open boundary excludes " +
       "the whole level") {
     // level 2 = one row of cost 100; level 1 = one row of cost 10.

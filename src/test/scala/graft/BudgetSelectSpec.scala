@@ -164,6 +164,23 @@ class BudgetSelectSpec extends AnyFunSuite {
     }
   }
 
+  test("deep refinement edge cases: a cut on a chunk edge, zero-cost " +
+      "rows after the cut, budget 0") {
+    // fanout 2 + smallCap 1 (width-4 chunks on each aligned 8-id level):
+    // budget 0 keeps q=9's zero-cost prefix; budget 9 cuts q=5 exactly
+    // after its first chunk, with the next row (cost 2) heavier than
+    // the 0 left; budget 17 cuts q=3 on a chunk edge followed by two
+    // zero-cost rows that still fit
+    val df = BudgetSelectSpec.refineEdges(spark)
+    for ((budget, want) <- Seq(0L -> (100L to 102L),
+        9L -> ((100L to 107L) ++ (0L to 3L)),
+        17L -> ((100L to 107L) ++ (0L to 13L)))) {
+      val got = gotKept(df, budget, fanout = 2, smallCap = 1)
+      assert(got === want.toSet, s"budget=$budget")
+      assert(got === bruteKept(df, budget), s"budget=$budget")
+    }
+  }
+
   // ── per-group budgets ──────────────────────────────────────────────
 
   /** Per-group brute force: the partitioned window form. */
@@ -669,5 +686,21 @@ class BudgetSelectSpec extends AnyFunSuite {
     assert(plan.contains("bounded_top_m"))
     assert(plan.contains("LeftSemi"))
     assert(!plan.contains("Window"), "no per-group ranking window")
+  }
+}
+
+object BudgetSelectSpec {
+
+  /** Three aligned 8-id quality levels whose costs put cuts on the
+    * refinement's edge cases (see the edge-case legs here and in
+    * BinningSpec): q=9 ids 100..107, q=5 ids 0..7, q=3 ids 8..15. */
+  def refineEdges(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    import spark.implicits._
+    val levels = Seq((9L, 100L, Seq(0L, 0L, 0L, 1L, 1L, 1L, 1L, 1L)),
+      (5L, 0L, Seq(1L, 1L, 1L, 1L, 2L, 1L, 1L, 0L)),
+      (3L, 8L, Seq(1L, 1L, 1L, 1L, 0L, 0L, 3L, 2L)))
+    levels.flatMap { case (q, lo, cs) =>
+      cs.zipWithIndex.map { case (c, i) => (lo + i, q, c) }
+    }.toDF("id", "q", "c")
   }
 }
